@@ -48,9 +48,25 @@ from service_level_reporting_spark.session import get_spark
 from service_level_reporting_spark.tables import (
     TABLE_NAMES, cache_tables, clear_table_cache)
 
-# Local-mode sizing: this box has 128 GiB; the default 8g driver thrashes
-# once the sf1/sf10 blocks stage 60M-row caches. Env still overrides.
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+
+def _default_driver_mem() -> str | None:
+    """Half of the host's MemTotal, at most 24g: the session's 8g default
+    thrashes once the sf1/sf10 blocks stage 60M-row caches on a large
+    host, and a fixed 24g overcommits a small one. None (keep the
+    session default) where /proc/meminfo is unreadable."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh
+                       if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{max(1, min(24 * 1024, kib // 2048))}m"
+
+
+# Local-mode sizing; the env still overrides.
+_DRIVER_MEM = _default_driver_mem()
+if _DRIVER_MEM:
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _DRIVER_MEM)
 
 # The round-2 headliner set (BASELINE.md): the two TPC-H-style joins/aggs,
 # the A1 resample, the consolidated daily health report (A4-A8 in one

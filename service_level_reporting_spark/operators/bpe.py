@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from service_level_reporting_spark.registry import register
-from service_level_reporting_spark.tables import load_tables
+from service_level_reporting_spark.tables import load_tables, local_frame
 
 # Pretokenization: lowercase words / digit runs / single punctuation — the
 # same family as text.TOKEN_REGEX so token counts line up across the text
@@ -352,8 +352,8 @@ def bpe_tokenizer_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     merges = bpe_train(spark, docs, n_merges=40, batch_k=8)
-    merge_rows = spark.createDataFrame(
-        [(int(r), a, b, m, int(f)) for r, a, b, m, f in merges],
+    merge_rows = local_frame(
+        spark, [(int(r), a, b, m, int(f)) for r, a, b, m, f in merges],
         "rank bigint, lhs string, rhs string, merged string, n bigint",
     ).select(F.lit("merge").alias("part"), "rank", "lhs", "rhs",
              "merged", F.col("n").cast("double"))

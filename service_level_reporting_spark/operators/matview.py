@@ -139,6 +139,11 @@ def mv_apply_changes(state: DataFrame, changes: DataFrame, spec: dict,
             exprs.append(getattr(F, op)(F.when(is_del, F.col(col)))
                          .alias(f"__del_{op}_{out}"))
     delta = changes.groupBy(*keys).agg(*exprs)
+    if has_minmax:
+        # the suspect gate below and the returned state both read the
+        # delta: materialize it (one row per touched group) so the change
+        # feed is evaluated once, not twice
+        delta = delta.localCheckpoint(eager=False)
 
     st = state.alias("s").join(delta.alias("d"), keys, "full_outer")
     z = F.lit(0).cast("long")

@@ -42,6 +42,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from service_level_reporting_spark.tables import local_frame
+
 CHECKPOINT_EVERY = 10
 # r10 (VERDICT #2): checkpoints are SHARDED. r9 wrote the FULL resolved
 # add-list — per-file typed stats included — into one {v}.checkpoint.json
@@ -2601,7 +2603,8 @@ class TxLogTable:
                                  version=version, row_ids=row_ids)
         if not row_ids:
             return df.drop("__file", "__ri")
-        m = spark.createDataFrame(
+        m = local_frame(
+            spark,
             [(a["path"], a.get("base_row_id"), a.get("default_rcv"))
              for a in files],
             "__file string, __base long, __rcv long")
@@ -4066,7 +4069,8 @@ class TxLogTable:
                 # UPDATE's post-image CARRIES it; the commit version
                 # column stays NULL — the post-image file's default_rcv
                 # (this update's commit) is the bumped version
-                m = spark.createDataFrame(
+                m = local_frame(
+                    spark,
                     [(a["path"], a.get("base_row_id"),
                       a.get("default_rcv")) for a in touched],
                     "__file string, __base long, __rcv long")
@@ -4695,8 +4699,9 @@ class TxLogTable:
             if not ent:
                 return None
             rows = [(rel, v, d) for rel, v, ch in ent for d in ch]
-            emap = spark.createDataFrame(
-                rows, "file string, _commit_version long, __dv_dir string")
+            emap = local_frame(
+                spark, rows,
+                "file string, _commit_version long, __dv_dir string")
             rels = sorted({d for _, _, d in rows})
             # __dv_dir must come from the path RELATIVE to the table
             # prefix: matching the first 'dv/' segment of the ABSOLUTE
@@ -4736,8 +4741,8 @@ class TxLogTable:
             if not pv:
                 return None
             dv = dv_rows(ctype)
-            fmap = spark.createDataFrame(pv, "_cdf_file string, "
-                                             "_commit_version long")
+            fmap = local_frame(spark, pv, "_cdf_file string, "
+                                          "_commit_version long")
             reader = (spark.read.schema(cdf_schema)
                       if cdf_schema is not None
                       else spark.read.option("mergeSchema", "true"))
@@ -4784,8 +4789,9 @@ class TxLogTable:
             if with_row_ids:
                 im = [(q, b, rc) for q, (b, rc) in idmap.items()]
                 if im:
-                    imap = spark.createDataFrame(
-                        im, "_cdf_file string, __base long, __rcv long")
+                    imap = local_frame(
+                        spark, im,
+                        "_cdf_file string, __base long, __rcv long")
                     out = out.join(F.broadcast(imap), "_cdf_file",
                                    "left")
                 else:
