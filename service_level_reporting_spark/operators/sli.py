@@ -87,8 +87,9 @@ def slo_daily_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on the r3 floor curve (6.15x at sf10).
     #
     # The stage-1 keys are (to_date(ts), user_id) DELIBERATELY: on data
-    # clustered by date(ts) — the at-rest layout, and how cache_tables
-    # caches events — HashPartitioning(to_date(ts)) satisfies
+    # hash-clustered on to_date(ts) — the at-rest layout, and how
+    # cache_tables caches events, one partition per core —
+    # HashPartitioning(to_date(ts)) satisfies
     # ClusteredDistribution([d, user_id]) via Spark's subset rule, so BOTH
     # aggregation stages plan with ZERO exchanges (whole query = one
     # map-only stage). Fresh-plan measurements at sf10 (10M events, same

@@ -85,19 +85,39 @@ def cache_tables(spark: SparkSession, sf_dir: str,
     """
     for name, df in load_tables(spark, sf_dir, names).items():
         key = (sf_dir.rstrip("/"), name)
-        if key not in _CACHE:
+        if _live_entry(spark, key) is None:
             if name == "events":
-                # Cache events CLUSTERED BY date(ts) — the layout the write
-                # path would produce at 100 TB (module docstring). Time-range
-                # aggregates then see time-local partitions: their map-side
-                # partial aggs collapse to the true per-slice group count
-                # instead of every task emitting every group (measured 3x on
-                # resample_minute_avg at sf10: 0.61s -> 0.19s). One-time
-                # shuffle at cache build, paid outside any timed query.
-                df = df.repartition(32, F.to_date("ts"))
+                # Cache events in one partition per core, hash-clustered on
+                # to_date(ts) — the layout the write path would produce at
+                # 100 TB (module docstring). Time-range aggregates then see
+                # time-local partitions: their map-side partial aggs
+                # collapse to the true per-slice group count instead of
+                # every task emitting every group (measured 3x on
+                # resample_minute_avg at sf10: 0.61s -> 0.19s), and
+                # slo_daily_health plans with no exchange (operators/sli.py).
+                # The count follows the session, not a literal: every
+                # dashboard query scans every cached partition, at about
+                # 5 ms of CPU per task (SCALE.md §1). One-time shuffle at
+                # cache build, paid outside any timed query.
+                df = df.repartition(spark.sparkContext.defaultParallelism,
+                                    F.to_date("ts"))
             cached = df.cache()
             cached.count()
             _CACHE[key] = cached
+
+
+def _live_entry(spark: SparkSession,
+                key: tuple[str, str]) -> DataFrame | None:
+    """The cached frame for ``key``, or None when there is none or it was
+    built on a stopped SparkContext (the dead entry is dropped). A process
+    has one live SparkContext, so an entry built on any context other than
+    ``spark``'s is dead; ``newSession()`` sessions share the context."""
+    cached = _CACHE.get(key)
+    if cached is None or (cached.sparkSession.sparkContext
+                          is spark.sparkContext):
+        return cached
+    del _CACHE[key]
+    return None
 
 
 def clear_table_cache() -> None:
@@ -171,23 +191,13 @@ def load_tables(spark: SparkSession, sf_dir: str,
     """
     out: dict[str, DataFrame] = {}
     for name in names:
-        key = (sf_dir.rstrip("/"), name)
-        if key in _CACHE:
-            cached = _CACHE[key]
-            if cached.sparkSession is spark:
-                out[name] = cached
-                continue
-            # a cached frame from a STOPPED session is unusable — drop it;
-            # but a different LIVE session (an isolated newSession leg
-            # sharing this SparkContext) must NOT evict the shared cache —
-            # it just bypasses it and reads parquet fresh (r14)
-            try:
-                stopped = (cached.sparkSession.sparkContext
-                           ._jsc.sc().isStopped())
-            except Exception:
-                stopped = True
-            if stopped:
-                _CACHE.pop(key, None)
+        cached = _live_entry(spark, (sf_dir.rstrip("/"), name))
+        # a different live session (an isolated newSession leg sharing this
+        # SparkContext) must NOT evict the shared cache — it just bypasses
+        # it and reads parquet fresh
+        if cached is not None and cached.sparkSession is spark:
+            out[name] = cached
+            continue
         path = f"{sf_dir}/{name}.parquet"
         if name == "events":
             out[name] = _load_events(spark, path)
@@ -256,11 +266,10 @@ def events_between(spark: SparkSession, sf_dir: str,
     """
     import datetime as dt
 
-    key = (sf_dir.rstrip("/"), "events")
-    if key in _CACHE:
+    out = _live_entry(spark, (sf_dir.rstrip("/"), "events"))
+    if out is not None:
         # Cached frame is already normalized and in memory: the filter is an
         # in-memory columnar-batch predicate, no parquet pushdown needed.
-        out = _CACHE[key]
         if lo is not None:
             out = out.where(F.col("ts") >= F.lit(lo))
         if hi is not None:
