@@ -11,11 +11,14 @@ Scale notes (100 TB):
 * n-gram Jaccard self-joins on 3-word shingles: shingles are near-unique, so
   the join fan-out is ~linear in corpus size (candidate pairs only where
   shingles collide), unlike an O(n²) text cross-join.
-* MinHash/LSH banding turns near-dup detection into an equi-join on band
-  hashes — the standard sublinear candidate generation at corpus scale.
-* SimHash reduces each doc to one 64-bit signature; near-dups differ in few
-  bits, found by equi-join on rotated prefix blocks (here: signature + hamming
-  distance on candidates).
+* MinHash/LSH banding turns near-dup detection into an equi-join on the
+  band key (table, minhash) — the standard sublinear candidate generation
+  at corpus scale; exact Jaccard then filters the candidates.
+* SimHash reduces each doc to one 63-bit signature; here exact-signature
+  equality is the join key (a one-band table in the same self-join).
+* Both signatures are projections over one row per distinct text; the
+  grouping that builds those rows is the near-dup operator's only shuffle
+  before the band join.
 """
 
 from __future__ import annotations
@@ -276,116 +279,171 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # D2b + D2c — signature-based near-dup candidates, one labeled pair list
 # (round-2 consolidation; both rows-only because the hash families are
-# engine-specific):
-#   'minhash' — spark.ml MinHashLSH banding over a HashingTF 3-gram vector;
-#     sublinear candidate generation, score = estimated Jaccard.
-#   'simhash' — fully native map-reduce SimHash (xxhash64 per token,
-#     bitwise vote); candidate pairs via EQUI-JOIN on the signature
-#     (score 1.0) — the banding trick in its 1-band form. Near-dup docs get
-#     signatures within a few bits, exact dups equal ones.
+# engine-specific). Grouping on md5(text) builds ONE signature row per
+# distinct text; its band rows (table, value) are shuffled once, and a
+# single self-join on them yields every pair:
+#   'minhash' — tables 0..7: spark.ml's HashingTF 3-gram index set and
+#     MinHashLSH's seeded hash coefficients, evaluated as SQL; candidates
+#     are kept on exact Jaccard (score = Jaccard): the rows
+#     MinHashLSH.approxSimilarityJoin returns for the same model.
+#   'simhash' — table 8: xxhash64 per token, bitwise vote; equal
+#     signatures pair with score 1.0 — the banding trick in its 1-band
+#     form. Near-dup docs get signatures within a few bits, exact dups
+#     equal ones.
+# At a few hundred documents per batch the per-job fixed cost dominates
+# (SCALE.md §9), so the plan is kept to 7 Spark jobs and caches nothing:
+# no LSH fit, no re-evaluation per consumer, no cache fill to release.
 # ---------------------------------------------------------------------------
 
+# spark.ml MinHashLSH(numHashTables=8, seed=42) over HashingTF(1 << 18):
+# table t hashes index i to ((1 + i) * a_t + b_t) mod P and keeps the min.
+MINHASH_TABLES = 8
+MINHASH_SEED = 42
+MINHASH_PRIME = 2038074743          # MinHashLSH.HASH_PRIME
+HASHING_TF_FEATURES = 1 << 18
+
+
+def _java_random_ints(seed: int, bound: int, n: int) -> list[int]:
+    """The first `n` draws of `java.util.Random(seed).nextInt(bound)`, for
+    a `bound` that is not a power of two (Java's LCG and its rejection of
+    the last partial range of 31-bit values)."""
+    assert bound & (bound - 1), "power-of-two bounds take another branch"
+    mask = (1 << 48) - 1
+    state = (seed ^ 0x5DEECE66D) & mask
+    out: list[int] = []
+    while len(out) < n:
+        state = (state * 0x5DEECE66D + 0xB) & mask
+        u = state >> 17                     # next(31)
+        r = u % bound
+        if u - r + bound - 1 < 1 << 31:     # Java: int overflow => redraw
+            out.append(r)
+    return out
+
+
+def _minhash_coefficients() -> tuple[tuple[int, int], ...]:
+    """MinHashLSH.fit's (a, b) per table: `(1 + nextInt(P - 1),
+    nextInt(P - 1))` drawn in that order from `Random(seed)`."""
+    r = _java_random_ints(MINHASH_SEED, MINHASH_PRIME - 1, 2 * MINHASH_TABLES)
+    return tuple((1 + a, b) for a, b in zip(r[::2], r[1::2]))
+
+
+MINHASH_COEFFS = _minhash_coefficients()
+
+
+# One array of the MINHASH_TABLES values of the index set `idx` (an
+# `array<int>`), in 64-bit arithmetic like spark.ml. An empty set gives
+# nulls, which join nothing.
+MINHASH_SQL = "array({})".format(", ".join(
+    f"array_min(transform(idx, i -> ((CAST(i AS BIGINT) + 1) * {a} + {b})"
+    f" % {MINHASH_PRIME}))" for a, b in MINHASH_COEFFS))
+
+# Per-bit ±1 votes over the distinct tokens' xxhash64, then signature =
+# Σ 2^bit over the positive votes (bits 0..62). One pass over the token
+# hashes; a null text gives a null signature.
+_SIMHASH_SQL = """aggregate(
+    transform(array_distinct(split(text, ' ')), t -> xxhash64(t)),
+    array_repeat(0, 63),
+    (votes, h) -> transform(votes,
+        (v, bit) -> v + IF((shiftright(h, bit) & 1) = 1, 1, -1)),
+    votes -> aggregate(
+        transform(votes, (v, bit) -> IF(v > 0, shiftleft(1L, bit), 0L)),
+        0L, (s, x) -> s + x))"""
+
+
 def simhash_signatures(d: DataFrame) -> DataFrame:
-    """Map-reduce SimHash: explode (doc, token-hash, bit 0..62), vote ±1 per
-    bit by whether the hash has it set, signature = Σ 2^bit over positive
-    votes. Pure DataFrame ops — this exact shape distributes at 100 TB (the
-    shuffle key is (doc_id, bit), combiner-friendly)."""
-    toks = d.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok"))
-    bits = toks.select(
-        "doc_id", F.xxhash64("tok").alias("h"),
-        F.explode(F.sequence(F.lit(0), F.lit(62))).alias("bit"))
-    votes = bits.groupBy("doc_id", "bit").agg(
-        F.sum(F.when(F.expr("(shiftright(h, bit) & 1) = 1"), 1).otherwise(-1))
-        .alias("vote"))
-    return votes.groupBy("doc_id").agg(
-        F.sum(F.when(F.col("vote") > 0,
-                     F.expr("shiftleft(CAST(1 AS BIGINT), bit)"))
-              .otherwise(F.lit(0))).alias("simhash"))
+    """`d` (with a `text` column) plus its 63-bit SimHash `simhash`. A
+    projection: no shuffle, so it runs on whatever rows the caller holds —
+    one per distinct text in dedup_near_dup_signatures."""
+    return d.withColumn("simhash", F.expr(_SIMHASH_SQL))
+
+
+def _near_dup_signatures(d: DataFrame) -> DataFrame:
+    """One row per distinct non-null text: representative `doc_id` (the
+    min), sorted `members`, HashingTF 3-gram index set `idx`, MinHash
+    values `mh` and `simhash`. The grouping is the only shuffle; the
+    signature columns are projections on top of it."""
+    from pyspark.ml.feature import HashingTF, NGram, Tokenizer
+
+    groups = (
+        d.where(F.col("text").isNotNull())
+        .groupBy(F.md5("text"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("members"),
+             F.first("text").alias("text"))
+        .selectExpr("members[0] AS doc_id", "members", "text")
+    )
+    # spark.ml's Tokenizer (lowercase, split on one \s, trailing empties
+    # dropped) and HashingTF (Murmur3 over UTF-8, not SQL hash()) define the
+    # index set; the JSON round trip reads the sparse vector's indices.
+    tokens = Tokenizer(inputCol="text", outputCol="tokens").transform(groups)
+    grams = NGram(n=3, inputCol="tokens", outputCol="grams").transform(tokens)
+    tf = HashingTF(inputCol="grams", outputCol="features",
+                   numFeatures=HASHING_TF_FEATURES, binary=True).transform(grams)
+    return (
+        simhash_signatures(tf.selectExpr(
+            "doc_id", "members", "text",
+            "from_json(to_json(struct(features)),"
+            " 'features struct<indices: array<int>>').features.indices AS idx"))
+        .selectExpr("doc_id", "members", "idx", f"{MINHASH_SQL} AS mh",
+                    "simhash")
+    )
+
+
+# The signature join's band tables: MinHash's 0..7, then SimHash's one band.
+SIMHASH_TABLE = MINHASH_TABLES
 
 
 @register("dedup_near_dup_signatures")  # rows-only: hash families engine-specific
 def dedup_near_dup_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both signature families run on one representative per distinct text
-    (identical texts -> identical MinHash vectors / SimHash signatures, so
-    per-copy signatures are recomputation, and LSH banding over clones
-    inflates every band bucket by the clone count). Doc-level pairs come
-    back via the clone map: MinHash rep pairs expand through the text-hash
-    join exactly like dedup_ngram_jaccard (clone pairs score 1.0 — the
-    estimator is exact on identical sets); SimHash assigns each member its
-    rep's signature, and the signature equi-join then emits intra-group
-    pairs on its own."""
-    from pyspark import StorageLevel
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, Tokenizer
+    (identical texts -> identical index sets / SimHash signatures, so
+    per-copy signatures are recomputation, and banding over clones inflates
+    every band bucket by the clone count), and ONE self-join on the band
+    key (table, value) finds every pair: tables 0..7 are MinHash's, table 8
+    is SimHash's signature.
 
-    d = _docs(spark, sf_dir)
-    # r13 (guide §2.3): `groups` feeds four consumers (ma/mb/x/y) and
-    # `reps` two (the TF chain + SimHash) — without materialization each
-    # consumer re-scans documents and re-runs md5/the rep aggregate
-    # (plans/r13/dedup_near_dup_signatures_before.txt: 13 parquet scans).
-    # `tf` is the expensive one: Tokenizer→NGram(3)→HashingTF over the
-    # whole rep corpus, consumed by the LSH fit, BOTH approxSimilarityJoin
-    # sides, and the `eligible` semi-join — four full tokenize+hash passes
-    # before this persist.
-    groups = _text_groups(d).persist(StorageLevel.MEMORY_AND_DISK)
-    reps = _rep_docs(d).persist(StorageLevel.MEMORY_AND_DISK)
-    tokens = Tokenizer(inputCol="text", outputCol="tokens").transform(reps)
-    grams = NGram(n=3, inputCol="tokens", outputCol="grams").transform(tokens)
-    tf = (HashingTF(inputCol="grams", outputCol="features",
-                    numFeatures=1 << 18, binary=True)
-          .transform(grams).where(F.size("grams") > 0)
-          .select("doc_id", "h", "features")
-          .persist(StorageLevel.MEMORY_AND_DISK))
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8,
-                     seed=42).fit(tf)
-    pairs = lsh.approxSimilarityJoin(tf, tf, 1.0 - JACCARD_THRESHOLD,
-                                     distCol="jaccard_dist")
-    rep_pairs = (
-        pairs.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.h").alias("h_a"),
-            F.col("datasetB.h").alias("h_b"),
-            F.round(1.0 - F.col("jaccard_dist"), 6).alias("score"),
-        )
+    * MinHash: a pair colliding in several tables is kept only on its FIRST
+      colliding table (no distinct needed), then on exact Jaccard distance
+      `1 - |A∩B| / |A∪B| < 1 - JACCARD_THRESHOLD` — MinHashLSH's
+      keyDistance and threshold in the same double arithmetic; score =
+      round(1 - distance, 6).
+    * SimHash: equal signatures pair with score 1.0.
+    * A rep matched with ITSELF stands for its clone group: its members
+      expand to every clone pair (score 1.0; for 'minhash' only when the
+      text has a 3-gram, as only those rows have MinHash bands). A pair of
+      reps expands to every (member, member) doc pair."""
+    sig = _near_dup_signatures(_docs(spark, sf_dir))
+    # The band shuffle materializes the signatures once: both join sides
+    # and the final sort's sampling pass read its output instead of
+    # re-running the projections (a broadcast side would run them again).
+    bands = (sig.selectExpr(
+        "*", "posexplode(concat(mh, array(simhash))) AS (t, v)")
+        .where("v IS NOT NULL").repartition("t", "v"))
+    cand = bands.alias("a").join(bands.alias("b"), F.expr(
+        "a.t = b.t AND a.v = b.v AND (a.doc_id < b.doc_id"
+        " OR (a.doc_id = b.doc_id AND size(a.members) > 1))"))
+    return (
+        cand.selectExpr(
+            f"a.t = {SIMHASH_TABLE} AS sim", "a.t",
+            "a.doc_id = b.doc_id AS same",
+            "a.members AS ma", "b.members AS mb",
+            "array_position(zip_with(a.mh, b.mh, (x, y) -> x = y), true) - 1"
+            " AS first_band",
+            "size(array_intersect(a.idx, b.idx)) AS inter",
+            "size(a.idx) + size(b.idx) AS sizes")
+        .where("sim OR first_band = t")
+        .selectExpr(
+            "IF(sim, 'simhash', 'minhash') AS method",
+            # clone pairs (doc_a < doc_b) or every cross pair (least, greatest)
+            "IF(same, filter(flatten(transform(ma, x -> transform(ma,"
+            " y -> struct(x AS doc_a, y AS doc_b)))), p -> p.doc_a < p.doc_b),"
+            " flatten(transform(ma, x -> transform(mb, y -> struct("
+            "least(x, y) AS doc_a, greatest(x, y) AS doc_b))))) AS pairs",
+            "IF(sim, 0.0D, 1.0D - inter / (sizes - inter)) AS dist")
+        .where(F.col("dist") < 1.0 - JACCARD_THRESHOLD)
+        .select("method", F.inline("pairs"),
+                F.round(1.0 - F.col("dist"), 6).alias("score"))
+        .orderBy("method", "doc_a", "doc_b")
     )
-    ma = groups.select(F.col("h").alias("h_a"), F.col("doc_id").alias("m_a"))
-    mb = groups.select(F.col("h").alias("h_b"), F.col("doc_id").alias("m_b"))
-    cross = (
-        rep_pairs.join(ma, "h_a").join(mb, "h_b")
-        .select(F.lit("minhash").alias("method"),
-                F.least("m_a", "m_b").alias("doc_a"),
-                F.greatest("m_a", "m_b").alias("doc_b"), "score")
-    )
-    x = groups.alias("x")
-    y = groups.alias("y")
-    # Clones of a signature-eligible text (>= 3 tokens => non-empty grams):
-    # estimated Jaccard is exactly 1.0, no banding needed.
-    eligible = tf.select("h")
-    intra = (
-        x.join(y, "h")
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .join(eligible, "h", "left_semi")
-        .select(F.lit("minhash").alias("method"),
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-                F.lit(1.0).alias("score"))
-    )
-    rep_sigs = simhash_signatures(reps.select("doc_id", "text"))
-    member_sigs = (
-        groups.join(reps.select(F.col("doc_id").alias("rep_id"), "h"), "h")
-        .join(rep_sigs.withColumnRenamed("doc_id", "rep_id"), "rep_id")
-        .select("doc_id", "simhash")
-    )
-    a = member_sigs.select(F.col("doc_id").alias("doc_a"), "simhash")
-    b = member_sigs.select(F.col("doc_id").alias("doc_b"), "simhash")
-    simhash = (
-        a.join(b, "simhash")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(F.lit("simhash").alias("method"), "doc_a", "doc_b",
-                F.lit(1.0).alias("score"))
-    )
-    return (cross.unionByName(intra).unionByName(simhash)
-            .orderBy("method", "doc_a", "doc_b"))
 
 
 # ---------------------------------------------------------------------------
@@ -579,9 +637,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # long as the edits preserve the center alignment (substitutions, or
 # length-preserving edit mixes). The remaining documented miss narrows to
 # length-CHANGING edits on both sides of the center — those shift the
-# middle slice — which MinHash banding (dedup_near_dup_signatures)
-# covers probabilistically. All passes share the join machinery and carry
-# the hot-block cap + accounting independently.
+# middle slice — which MinHash banding (dedup_near_dup_signatures,
+# Jaccard >= 0.8 over 3-grams) covers probabilistically. All passes share
+# the join machinery and carry the hot-block cap + accounting
+# independently.
 # ---------------------------------------------------------------------------
 
 FUZZY_PREFIX = 16
