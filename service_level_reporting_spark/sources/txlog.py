@@ -20,13 +20,16 @@ ordered log of atomic commits. Real here, not mocked:
   catalog would hold); a MERGE rewrites only live files whose key range
   overlaps the updates and carries every other file over by reference.
 * **Checkpoint compaction** — every ``CHECKPOINT_EVERY`` commits the
-  resolved file set is written to `{v}.checkpoint.json`, so snapshot
-  resolution reads the latest checkpoint + newer commits, O(interval) not
-  O(history).
+  resolved file set is written as parquet shards
+  `{v}.{i:05d}.checkpoint.part` under a small `{v}.checkpoint.json` meta
+  that carries every other piece of table state, so snapshot resolution
+  and every metadata walker read the latest checkpoint + newer commits,
+  O(interval) not O(history). That is the only checkpoint format this
+  module writes or reads; anything else raises.
 
 At 100 TB the substitutions are mechanical: the log lives on object
-storage behind a conditional-put commit service, checkpoints are parquet,
-and data files are written by executors — the protocol above is unchanged.
+storage behind a conditional-put commit service and data files are
+written by executors — the protocol above is unchanged.
 This is deliberately a FORMAT, not a copy of any implementation's code.
 """
 
@@ -45,23 +48,22 @@ from pyspark.sql import functions as F
 from service_level_reporting_spark.tables import local_frame
 
 CHECKPOINT_EVERY = 10
-# r10 (VERDICT #2): checkpoints are SHARDED. r9 wrote the FULL resolved
-# add-list — per-file typed stats included — into one {v}.checkpoint.json
-# and every _resolve/_seed JSON-parsed it whole on the driver. At 100 TB /
-# 10^5–10^6 live files that is a 10^2–10^3 MB JSON written per checkpoint
-# interval and parsed per table open — the r7 footer storm one layer up.
-# Now the add-action payload lives in bounded {v}.{i}.checkpoint.part
-# files (at most this many actions each; JSON arrays), the small
-# {v}.checkpoint.json META carries everything else (txns, constraints,
-# schema, protocol, mapping, config) plus the part count, and a
-# _last_checkpoint pointer skips the directory listing (Delta's
-# multi-part checkpoint + _last_checkpoint, JSON parts instead of
-# parquet because the payload is already line-sized dicts). Metadata
-# walkers (_txn_map/constraints/schema/_replay_last) therefore never
-# touch the O(live files) payload at all, and snapshot resolution is
-# cached per version (a version's file set is immutable), so repeated
-# reads parse the parts once.
+# Checkpoints are SHARDED (Delta's multi-part checkpoint +
+# _last_checkpoint): the O(live files) add-action payload lives in
+# bounded parquet {v}.{i:05d}.checkpoint.part files (at most this many
+# actions each; typed columns, read column-selectively), the small
+# {v}.checkpoint.json META carries everything else — txns, constraints,
+# generated, schema, protocol, columnMapping, config, rowTracking — plus
+# the part count, and a _last_checkpoint pointer skips the directory
+# listing. Metadata walkers therefore never touch the payload at all,
+# and snapshot resolution is cached per version (a version's file set is
+# immutable), so repeated reads parse the parts once.
 CHECKPOINT_PART_ACTIONS = 25_000
+# every checkpoint meta carries these (_write_checkpoint); walkers seed
+# from them without a per-key fallback
+CHECKPOINT_STATE_KEYS = ("txns", "constraints", "generated", "schema",
+                         "schema_evolved", "protocol", "columnMapping",
+                         "config", "rowTracking")
 # bounded per-handle cache of resolved snapshots (version -> add list)
 SNAP_CACHE_MAX = 8
 CKPT_CACHE_MAX = 4          # r12: parsed checkpoint payloads per handle
@@ -218,8 +220,8 @@ class SchemaEvolutionError(ValueError):
     may OMIT recorded columns (they read as NULL — Delta with
     autoMerge); changing a recorded column's TYPE (widening or
     narrowing) raises this error listing the offending fields, through
-    both the table API (at write) and the data source (reading a legacy
-    log whose footers conflict). Renames and drops are not expressible:
+    both the table API (at write) and log replay (a hand-edited log
+    that records a conflict). Renames and drops are not expressible:
     a rename degrades to omit-old + add-new, which reads as NULLs for
     old rows — rewrite the table (overwrite) to truly change a column."""
 
@@ -960,23 +962,39 @@ class TxLogTable:
                 _backoff(attempt)
                 attempt += 1
 
+    def _load_checkpoint(self, cv: int) -> dict:
+        """Parsed checkpoint META of version ``cv``. The only format is
+        the one _write_checkpoint writes — parquet shards under a meta
+        carrying every state key — so any other meta is a corrupt or
+        foreign log and raises rather than being misread."""
+        p = os.path.join(self.log_dir, f"{cv:020d}.checkpoint.json")
+        with open(p) as fh:
+            ckpt = json.load(fh)
+        missing = [k for k in CHECKPOINT_STATE_KEYS if k not in ckpt]
+        if ckpt.get("parts_format") != "parquet" or missing:
+            raise ValueError(
+                f"txlog: checkpoint {p} has parts_format "
+                f"{ckpt.get('parts_format')!r} and lacks state keys "
+                f"{missing}; only the parquet-sharded checkpoints this "
+                "code writes are readable (corrupt or foreign log).")
+        return ckpt
+
     def _latest_checkpoint(self, version: int) -> dict | None:
         """Parsed latest checkpoint META at or below `version`, or None —
-        shared by file resolution, the txn map, and checkpoint writing.
-        r10: tries the `_last_checkpoint` pointer first (Delta's), so the
-        common read-latest path skips the directory listing entirely."""
+        the seed of every checkpointed log replay (_replay). r10: tries
+        the `_last_checkpoint` pointer first (Delta's), so the common
+        read-latest path skips the directory listing entirely."""
         ptr = os.path.join(self.log_dir, "_last_checkpoint")
+        pv = None
         if os.path.exists(ptr):
             try:
                 with open(ptr) as fh:
                     pv = int(json.load(fh)["version"])
-                p = os.path.join(self.log_dir,
-                                 f"{pv:020d}.checkpoint.json")
-                if pv <= version and os.path.exists(p):
-                    with open(p) as fh:
-                        return json.load(fh)
             except (ValueError, KeyError, json.JSONDecodeError):
-                pass          # stale/corrupt pointer -> listing fallback
+                pass          # corrupt pointer -> listing fallback
+        if pv is not None and pv <= version and os.path.exists(
+                os.path.join(self.log_dir, f"{pv:020d}.checkpoint.json")):
+            return self._load_checkpoint(pv)
         for ckpt in self._checkpoints_desc(version):
             return ckpt
         return None
@@ -989,9 +1007,7 @@ class TxLogTable:
         for cv in sorted((int(f[:20]) for f in os.listdir(self.log_dir)
                           if f.endswith(".checkpoint.json")
                           and int(f[:20]) <= version), reverse=True):
-            with open(os.path.join(
-                    self.log_dir, f"{cv:020d}.checkpoint.json")) as fh:
-                yield json.load(fh)
+            yield self._load_checkpoint(cv)
 
     def _part_path(self, version: int, i: int) -> str:
         # .part (NOT .json): latest_version/earliest_version glob commit
@@ -1052,13 +1068,33 @@ class TxLogTable:
         pq.write_table(pa.table(cols), tmp)
         os.replace(tmp, pp)
 
-    def _ckpt_files_parquet(self, ckpt: dict,
-                            columns: tuple | None) -> list[dict]:
-        """Read parquet checkpoint shards, optionally COLUMN-SELECTIVE:
-        ``columns`` names logical add fields ('path' is always included);
-        unrequested column chunks (typically the stats/bloom JSON — the
-        bulk of the bytes) are never read or parsed."""
+    def _ckpt_files(self, ckpt: dict,
+                    columns: tuple | None = None,
+                    use_cache: bool = True) -> list[dict]:
+        """The add-action payload of a checkpoint, read from its parquet
+        shards (r11), optionally COLUMN-SELECTIVE: ``columns`` names
+        logical add fields ('path' is always included); unrequested
+        column chunks (typically the stats/bloom JSON — the bulk of the
+        bytes) are never read or parsed.
+
+        r12 (VERDICT #1): the parsed payload is CACHED per (checkpoint
+        version, columns) — part files are immutable once written, so
+        repeated resolves of successive versions over one checkpoint
+        (the merge→delete→fold cadence of any writer loop) parse it
+        once; a cached FULL payload also serves selective requests.
+        ``use_cache=False`` (the use_checkpoint=False validators) reads
+        the disk unconditionally and populates nothing — a validator
+        must trust no cache."""
         import pyarrow.parquet as pq
+
+        ck = (ckpt["version"],
+              None if columns is None else tuple(sorted(set(columns))))
+        if use_cache:
+            full = (ckpt["version"], None)
+            if full in self._ckpt_cache:
+                return self._ckpt_cache[full]
+            if ck in self._ckpt_cache:
+                return self._ckpt_cache[ck]
         phys = None
         if columns is not None:
             need = set(columns) | {"path"}
@@ -1098,75 +1134,13 @@ class TxLogTable:
                 if extras is not None and extras[j] is not None:
                     d.update(extras[j])
                 out.append(d)
-        return out
-
-    def _ckpt_files(self, ckpt: dict,
-                    columns: tuple | None = None,
-                    use_cache: bool = True) -> list[dict]:
-        """The add-action payload of a checkpoint: inline ``files`` for
-        legacy single-JSON checkpoints (still readable, r10), JSON
-        .checkpoint.part shards (r10, still readable), or parquet shards
-        (r11 — ``parts_format`` marks them; same .checkpoint.part path
-        scheme so retention/vacuum handling is format-blind). ``columns``
-        requests a column-selective read (parquet shards only — legacy
-        formats are whole-payload by construction and ignore it).
-
-        r12 (VERDICT #1): the parsed payload is CACHED per (checkpoint
-        version, columns) — part files are immutable once written, so
-        repeated resolves of successive versions over one checkpoint
-        (the merge→delete→fold cadence of any writer loop) parse it
-        once; a cached FULL payload also serves selective requests.
-        ``use_cache=False`` (the use_checkpoint=False validators) reads
-        the disk unconditionally and populates nothing — a validator
-        must trust no cache."""
-        if ckpt.get("files") is not None:
-            return ckpt["files"]
-        ck = (ckpt["version"],
-              None if columns is None else tuple(sorted(set(columns))))
-        if use_cache:
-            full = (ckpt["version"], None)
-            if full in self._ckpt_cache:
-                return self._ckpt_cache[full]
-            if ck in self._ckpt_cache:
-                return self._ckpt_cache[ck]
-        if ckpt.get("parts_format") == "parquet":
-            out = self._ckpt_files_parquet(ckpt, columns)
-        else:
-            out = []
-            for i in range(int(ckpt["files_parts"])):
-                with open(self._part_path(ckpt["version"], i)) as fh:
-                    out.extend(json.load(fh))
         if use_cache:
             if len(self._ckpt_cache) >= CKPT_CACHE_MAX:
                 self._ckpt_cache.pop(next(iter(self._ckpt_cache)))
             self._ckpt_cache[ck] = out
         return out
 
-    @staticmethod
-    def _ckpt_carries(ckpt: dict, key: str) -> bool:
-        """Does this checkpoint carry ``key``? The files payload counts
-        as carried whether inline (legacy) or sharded (r10)."""
-        if key == "files":
-            return "files" in ckpt or "files_parts" in ckpt
-        return key in ckpt
-
-    def _seed(self, version: int, key: str) -> tuple:
-        """(checkpoint carrying ``key``, replay start): the NEWEST
-        checkpoint at or below ``version`` that carries the key — a
-        checkpoint written before the key existed falls back to OLDER
-        ones instead of forcing a full walk from 0 (r9: after log
-        retention that walk would silently skip expired commits and
-        reconstruct WRONG state — lost constraints, a wrong schema; the
-        retention boundary checkpoint always carries every key, so the
-        search bottoms out there on any vacuumed log). (None, 0) when no
-        checkpoint carries the key — the legacy full walk, which now
-        raises on expired commits instead of dropping their actions."""
-        for ckpt in self._checkpoints_desc(version):
-            if self._ckpt_carries(ckpt, key):
-                return ckpt, ckpt["version"] + 1
-        return None, 0
-
-    def _replay_base(self, version: int, key: str | None = None) -> tuple:
+    def _replay_base(self, version: int) -> tuple:
         """Full-replay seed for ``use_checkpoint=False`` walkers (r10,
         VERDICT #1a). Returns ``(checkpoint_or_None, start_version)``.
 
@@ -1184,12 +1158,7 @@ class TxLogTable:
         every surviving commit on top. That still independently
         validates every NEWER checkpoint — only the boundary itself is
         trusted, and it is the one artifact retention cannot avoid
-        trusting.
-
-        ``key`` (constraints/txns/schema walkers): the seed must carry
-        the key; boundary checkpoints carry every key by construction
-        (_write_checkpoint), so this only skips legacy pre-key
-        checkpoints. Raises VersionExpiredError when no covering seed
+        trusting. Raises VersionExpiredError when no covering seed
         exists (a hand-pruned log)."""
         e = self.earliest_version()
         if e <= 0:
@@ -1198,49 +1167,53 @@ class TxLogTable:
         for ckpt in self._checkpoints_desc(version):
             if ckpt["version"] + 1 < e:
                 break           # older ones cover even less — stop
-            if key is None or self._ckpt_carries(ckpt, key):
-                best = ckpt     # keep scanning: want the OLDEST covering
+            best = ckpt         # keep scanning: want the OLDEST covering
         if best is None:
             raise VersionExpiredError(
                 f"txlog: full replay of version {version} is impossible "
                 f"— commits before {e} were expired by "
                 "vacuum(log_retain_versions=...) and no retained "
-                "checkpoint covers the expired range "
-                f"{'for key ' + key if key else ''}.")
+                "checkpoint covers the expired range.")
         return best, best["version"] + 1
 
-    def _walk_missing(self, v: int) -> None:
-        """A replay walk hit a missing commit file: expired commits make
-        the reconstruction WRONG, not merely incomplete — raise the
-        pinned error; a genuinely absent mid-log file stays tolerated
-        (legacy leniency for hand-pruned test logs)."""
-        if v < self.earliest_version():
-            self._raise_missing(v)
+    def _replay(self, version: int, use_checkpoint: bool = True):
+        """The one log-replay seam every state walker folds over:
+        ``(checkpoint_or_None, iterator of (v, commit record))``.
+
+        Seed: the latest checkpoint at or below ``version`` (pointer
+        first, then the listing), or — for the use_checkpoint=False
+        validators — the full-replay base (_replay_base). Every
+        checkpoint carries every state key (_write_checkpoint), so a
+        walker folds the seed's value and the commit tail and nothing
+        else. A missing commit in the tail raises (expired vs corrupt,
+        _raise_missing): a reconstruction that skipped it would be
+        wrong, not merely incomplete."""
+        if use_checkpoint:
+            ckpt = self._latest_checkpoint(version)
+            start = 0 if ckpt is None else ckpt["version"] + 1
+        else:
+            ckpt, start = self._replay_base(version)
+
+        def tail():
+            for v in range(start, version + 1):
+                rec = self._commit_record(v, use_memo=use_checkpoint)
+                if rec is None:
+                    self._raise_missing(v, requested=version)
+                yield v, rec
+        return ckpt, tail()
 
     def _txn_map(self, version: int | None = None,
                  use_checkpoint: bool = True) -> dict:
         """writer -> highest committed batch id at `version` (default
-        latest). Resolution mirrors _resolve: latest checkpoint's txns map
-        + newer commits, O(checkpoint interval) not O(history) — the same
-        shape Delta's checkpoints use for txn actions. Checkpoints written
-        before this map existed fall back to a full-log walk."""
+        latest): the seed checkpoint's txns map + newer commits,
+        O(checkpoint interval) not O(history) — the same shape Delta's
+        checkpoints use for txn actions."""
         if version is None:
             version = self.latest_version()
-        start = 0
-        txns: dict[str, int] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "txns")
-            if ckpt is not None and ckpt["txns"] is not None:
-                txns = {w: int(b) for w, b in ckpt["txns"].items()}
-        else:
-            ckpt, start = self._replay_base(version, "txns")
-            if ckpt is not None and ckpt["txns"] is not None:
-                txns = {w: int(b) for w, b in ckpt["txns"].items()}
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        ckpt, tail = self._replay(version, use_checkpoint)
+        txns = ({} if ckpt is None
+                else {w: int(b) for w, b in ckpt["txns"].items()})
+        for _, rec in tail:
             txn = rec.get("txn")
             if txn:
                 w = txn["writer"]
@@ -1288,9 +1261,11 @@ class TxLogTable:
         """Checkpoints seed from the PREVIOUS checkpoint (correct by
         induction — each one was itself prior checkpoint + interval), so
         writing one costs O(checkpoint interval), not a full-log replay
-        in the committer's critical path. A pre-txn-map checkpoint in
-        the chain degrades the txn side to a full walk once; the next
-        checkpoint restores the bound."""
+        in the committer's critical path. Every checkpoint — vacuum's
+        retention-boundary one included — carries all eight state keys
+        (txns, constraints, generated, schema, protocol, columnMapping,
+        config, rowTracking), so every walker seeds from the latest
+        one alone."""
         files = self._resolve(version)
         txns = self._txn_map(version)
         cons = self.constraints(version)
@@ -1305,7 +1280,7 @@ class TxLogTable:
             or [[]]
         for i, part in enumerate(parts):
             # r11 (VERDICT #2): shards are PARQUET — columnar, typed,
-            # column-selective on read (legacy JSON shards still read)
+            # column-selective on read
             self._write_ckpt_part(self._part_path(version, i), part)
         ckpt = os.path.join(self.log_dir, f"{version:020d}.checkpoint.json")
         tmp = ckpt + f".tmp.{uuid.uuid4().hex[:8]}"
@@ -1344,26 +1319,13 @@ class TxLogTable:
                     use_checkpoint: bool = True) -> dict:
         """Active CHECK constraints {name: sql_expr} at `version` —
         constraint add/drop actions ride commits (Delta records them in
-        table metadata), replayed like the txn map: latest checkpoint's
-        constraints + newer commits; pre-constraint checkpoints fall back
-        to a full walk once."""
+        table metadata), replayed like the txn map: the seed
+        checkpoint's constraints + newer commits."""
         if version is None:
             version = self.latest_version()
-        start = 0
-        cons: dict[str, str] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "constraints")
-            if ckpt is not None and ckpt["constraints"] is not None:
-                cons = dict(ckpt["constraints"])
-        else:
-            ckpt, start = self._replay_base(version, "constraints")
-            if ckpt is not None and ckpt["constraints"] is not None:
-                cons = dict(ckpt["constraints"])
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        ckpt, tail = self._replay(version, use_checkpoint)
+        cons = {} if ckpt is None else dict(ckpt["constraints"])
+        for _, rec in tail:
             for a in rec["actions"]:
                 if "constraint" in a:
                     cons[a["constraint"]["name"]] = \
@@ -1385,21 +1347,13 @@ class TxLogTable:
         writers land both columns regardless of commit order."""
         if version is None:
             version = self.latest_version()
-        start = 0
+        ckpt, tail = self._replay(version, use_checkpoint)
         val = default
-        if use_checkpoint:
-            ckpt, start = self._seed(version, key)
-            if ckpt is not None and ckpt[key] is not None:
-                val = ckpt[key]
-        else:
-            ckpt, start = self._replay_base(version, key)
-            if ckpt is not None and ckpt[key] is not None:
-                val = ckpt[key]
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        # None is a real carried value (no protocol upgrade, mapping
+        # never enabled) — the default stands for it
+        if ckpt is not None and ckpt[key] is not None:
+            val = ckpt[key]
+        for _, rec in tail:
             for a in rec["actions"]:
                 if key in a:
                     val = a[key]
@@ -1529,45 +1483,27 @@ class TxLogTable:
         columns regardless of commit order), with last-wins per field.
         ``evolved`` flips when any action's field set differs from the
         union so far — the data source uses it for the pinned
-        read-without-mergeSchema error. Returns (None, False) for a
-        legacy log with no metaData action (readers fall back to footer
-        unification). A recorded TYPE conflict raises
+        read-without-mergeSchema error. Returns (None, False) while no
+        metaData action exists (an empty table — every add-writing path
+        records the schema). A recorded TYPE conflict raises
         SchemaEvolutionError (writes enforce it, so this only fires on
         hand-edited logs)."""
         from pyspark.sql.types import StructType
 
         if version is None:
             version = self.latest_version()
-        start = 0
         fields: dict = {}                 # insertion-ordered field union
         evolved = False
         seen = False
-        if use_checkpoint:
-            # a pre-schema checkpoint falls back to an OLDER checkpoint
-            # carrying the key (r9, _seed — after log retention the old
-            # full-walk-from-0 would silently skip expired commits and
-            # reconstruct a WRONG schema), else a full walk that raises
-            # on expired commits
-            ckpt, start = self._seed(version, "schema")
-            if ckpt is not None and ckpt["schema"] is not None:
-                st = StructType.fromJson(json.loads(ckpt["schema"]))
-                fields = {f.name: f for f in st.fields}
-                evolved = bool(ckpt.get("schema_evolved"))
-                seen = True
-        else:
-            ckpt, start = self._replay_base(version, "schema")
-            if ckpt is not None and ckpt["schema"] is not None:
-                st = StructType.fromJson(json.loads(ckpt["schema"]))
-                fields = {f.name: f for f in st.fields}
-                evolved = bool(ckpt.get("schema_evolved"))
-                seen = True
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
-            actions = rec["actions"]
-            for a in actions:
+        ckpt, tail = self._replay(version, use_checkpoint)
+        # schema is None on a checkpoint of a still-empty table
+        if ckpt is not None and ckpt["schema"] is not None:
+            st = StructType.fromJson(json.loads(ckpt["schema"]))
+            fields = {f.name: f for f in st.fields}
+            evolved = bool(ckpt["schema_evolved"])
+            seen = True
+        for v, rec in tail:
+            for a in rec["actions"]:
                 md = a.get("metaData")
                 if not md:
                     continue
@@ -1865,18 +1801,9 @@ class TxLogTable:
         so racing adds of DIFFERENT columns both land)."""
         if version is None:
             version = self.latest_version()
-        gens: dict[str, dict] = {}
-        if use_checkpoint:
-            ckpt, start = self._seed(version, "generated")
-        else:
-            ckpt, start = self._replay_base(version, "generated")
-        if ckpt is not None and ckpt.get("generated") is not None:
-            gens = dict(ckpt["generated"])
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._walk_missing(v)
-                continue
+        ckpt, tail = self._replay(version, use_checkpoint)
+        gens = {} if ckpt is None else dict(ckpt["generated"])
+        for _, rec in tail:
             for a in rec["actions"]:
                 if "generatedCol" in a:
                     g = a["generatedCol"]
@@ -2175,26 +2102,13 @@ class TxLogTable:
                 return self._snap_cache[version]
             if key in self._snap_cache:
                 return self._snap_cache[key]
-        start = 0
+        ckpt, tail = self._replay(version, use_checkpoint)
         live: dict[str, dict] = {}
-        if use_checkpoint:
-            ckpt = self._latest_checkpoint(version)
-            if ckpt is not None:
-                live = {a["path"]: a
-                        for a in self._ckpt_files(ckpt, columns)}
-                start = ckpt["version"] + 1
-        else:
-            # r10 (VERDICT #1a): post-retention full replay seeds from
-            # the oldest covering boundary checkpoint — see _replay_base
-            ckpt, start = self._replay_base(version, "files")
-            if ckpt is not None:
-                live = {a["path"]: a
-                        for a in self._ckpt_files(ckpt, columns,
-                                                  use_cache=False)}
-        for v in range(start, version + 1):
-            rec = self._commit_record(v, use_memo=use_checkpoint)
-            if rec is None:
-                self._raise_missing(v, requested=version)
+        if ckpt is not None:
+            live = {a["path"]: a
+                    for a in self._ckpt_files(ckpt, columns,
+                                              use_cache=use_checkpoint)}
+        for _, rec in tail:
             for a in rec["actions"]:
                 if "add" in a:
                     live[a["add"]["path"]] = a["add"]
@@ -2878,30 +2792,20 @@ class TxLogTable:
 
     def _commit_ts(self, v: int) -> float | None:
         """Commit timestamp of version ``v`` via an O(1) header read —
-        r10 commits serialize "ts" as the FIRST record key, so 96 bytes
-        suffice; legacy records (ts elsewhere, or absent) fall back to
-        one full parse. None when the file is missing or carries no
-        timestamp."""
-        p = self._commit_path(v)
+        commit() serializes "ts" as the FIRST record key, so 96 bytes
+        suffice. None when the file is missing."""
         try:
-            with open(p) as fh:
+            with open(self._commit_path(v)) as fh:
                 head = fh.read(96)
         except OSError:
             return None
-        m = re.match(r'\{"ts": ([0-9][0-9.eE+-]*)', head)
-        if m:
-            return float(m.group(1))
-        try:
-            with open(p) as fh:
-                return json.load(fh).get("ts")
-        except (OSError, json.JSONDecodeError):
-            return None
+        return float(re.match(r'\{"ts": ([0-9][0-9.eE+-]*)', head)
+                     .group(1))
 
     def version_at_timestamp(self, ts: float) -> int:
         """Latest version whose commit timestamp is <= ts — Delta's
-        TIMESTAMP AS OF resolution. Commits written before timestamps
-        existed (pre-r7 logs) are treated as arbitrarily old (always
-        eligible). Raises if the table's first commit is newer than ts.
+        TIMESTAMP AS OF resolution. Raises if the table's first commit
+        is newer than ts.
 
         r10 (VERDICT #7): O(log n) — commit timestamps are
         write-enforced monotonic (each commit records max(wall clock,
@@ -2909,9 +2813,7 @@ class TxLogTable:
         predecessor being fully published), so this binary-searches the
         retained version range, and every probe is a 96-byte header
         read (_commit_ts), never an O(actions) record parse. The r9
-        behavior opened EVERY retained commit JSON per call. Legacy
-        pre-r10 logs (best-effort wall clocks) can misresolve only
-        inside a commit-race window of milliseconds."""
+        behavior opened EVERY retained commit JSON per call."""
         lo, hi = self.earliest_version(), self.latest_version()
         best = -1
         while lo <= hi:

@@ -28,9 +28,8 @@ bespoke Python API:
   reason). Evolution semantics are unchanged: an additively-evolved
   table raises a clear error unless ``mergeSchema=true``, in which case
   per-file batches are padded with nulls executor-side — the same
-  semantics as ``TxLogTable.read(merge_schema=True)``. Footer
-  unification survives only as the fallback for legacy logs with no
-  metaData action.
+  semantics as ``TxLogTable.read(merge_schema=True)``. A snapshot with
+  live files and no recorded schema is a corrupt log and raises.
 * **Streaming CDC source** — offsets ARE log versions: each micro-batch
   reads the commits in ``(start, end]``; partitions are the commits'
   files, read executor-side. Default mode is append-only (a rewrite
@@ -98,62 +97,27 @@ def _order_safe(arrow_type) -> bool:
             or pt.is_timestamp(arrow_type) or pt.is_date(arrow_type))
 
 
-def _unify_file_schemas(paths: list[str], merge: bool):
-    """Arrow schema across data files: identical-schema fast path, else
-    unify (additive evolution) when ``merge``, else a clear error. All
-    fields normalized nullable (any later file may hold nulls — the same
-    normalization spark.read.parquet applies)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schemas: list[pa.Schema] = []
-    seen: set[tuple] = set()
-    for p in paths:
-        raw = pq.ParquetFile(p).schema_arrow
-        # normalize before comparing: nullable everywhere, writer metadata
-        # dropped (a rewrite commit's files differ only in footer metadata)
-        s = pa.schema([pa.field(f.name, f.type, nullable=True)
-                       for f in raw])
-        key = tuple(sorted((f.name, str(f.type)) for f in s))
-        if key not in seen:
-            seen.add(key)
-            schemas.append(s)
-    if len(schemas) > 1 and not merge:
-        raise ValueError(
-            "txlog source: data files carry different schemas (the table "
-            "underwent schema evolution); set .option('mergeSchema', "
-            "'true') to read the union, or use TxLogTable.read("
-            "merge_schema=True).")
-    if len(schemas) == 1:
-        return schemas[0]
-    try:
-        return pa.unify_schemas(schemas)
-    except Exception as exc:
-        # same actionable message as the table API's write-side guard
-        raise ValueError(
-            f"txlog schema: incompatible column type(s) across data "
-            f"files ({exc}). Non-additive schema evolution (rename/drop/"
-            "type change) is unsupported — rewrite the table with one "
-            "schema (overwrite).") from exc
-
-
 def _log_schema(t: TxLogTable, version: int, merge: bool):
     """Arrow snapshot schema from the COMMIT LOG's metaData actions (r8,
     VERDICT item 1): O(checkpoint interval) log reads instead of opening
     every live file's parquet footer on the driver at analysis time —
     at 10^5–10^6 live files the footer path is an O(n_files) storm per
     query analysis (Delta records schema in the log for the same
-    reason). None = legacy log, caller falls back to footers. The
-    pinned evolution contract is preserved: an additively-evolved table
-    read without mergeSchema raises the same error the footer path
-    raised (old files are null-padded executor-side once the option is
-    set)."""
+    reason). Called only for a snapshot with live files, and every
+    add-writing path (writes, convert, clone, restore) records the
+    schema, so an unrecorded one is a corrupt log and raises. The
+    pinned evolution contract: an additively-evolved table read without
+    mergeSchema raises (old files are null-padded executor-side once
+    the option is set)."""
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
     sch, evolved = t.table_schema_info(version)
     if sch is None:
-        return None
+        raise ValueError(
+            f"txlog source: snapshot {version} of {t.path} has live "
+            "files but no recorded schema (no metaData action in the "
+            "log) — the log is corrupt.")
     if evolved and not merge:
         raise ValueError(
             "txlog source: data files carry different schemas (the table "
@@ -216,11 +180,6 @@ def _pin_snapshot(path: str, options) -> dict:
         raise ValueError("txlog source: empty table (no snapshot)")
     schema = _log_schema(t, ending if mode == "changes" else version,
                          merge)
-    if schema is None:       # legacy log (no metaData action): fall back
-        # to footer unification — the pre-r8 O(n_files) path, kept only
-        # for tables written before the schema rode the commit log
-        schema = _unify_file_schemas(
-            [os.path.join(t.path, p) for p in paths], merge)
     stats_safe = (t.stats_col in schema.names
                   and _order_safe(schema.field(t.stats_col).type))
     # r9 column mapping: executors project physical parquet names to the

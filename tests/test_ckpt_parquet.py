@@ -1,8 +1,7 @@
 """Parquet checkpoint parts (r11, VERDICT #2): the add-list payload is
 columnar — typed scalar columns, stats/bloom as their own skippable JSON
-columns — read column-selectively by planning-only walkers (vacuum),
-while legacy JSON parts and legacy inline-``files`` checkpoints stay
-readable. Counted-column proof at a planted large checkpoint."""
+columns — read column-selectively by planning-only walkers (vacuum).
+Counted-column proof at a planted large checkpoint."""
 
 from __future__ import annotations
 
@@ -57,41 +56,6 @@ def test_parquet_parts_roundtrip_and_dv_stats_survive(spark, table_path):
         | {f"k{100 + v:03d}" for v in range(12, 21)}
     # checkpointed resolve == raw log replay, dict-for-dict
     assert t2._resolve(20) == t2._resolve(20, use_checkpoint=False)
-
-
-def test_legacy_json_parts_still_read(spark, table_path):
-    """A checkpoint written by the r10 code (JSON shards, no
-    parts_format) must read identically — rewrite the current parquet
-    checkpoint in the legacy format and compare resolves."""
-    t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
-    for v in range(12):
-        t.append(_frame(spark, v))
-    files = t._resolve(10, use_checkpoint=False)
-    cp = os.path.join(t.log_dir, "00000000000000000010.checkpoint.json")
-    meta = json.load(open(cp))
-    # rewrite shards as r10 JSON, strip the format marker
-    for i in range(int(meta["files_parts"])):
-        pp = t._part_path(10, i)
-        os.remove(pp)
-    with open(t._part_path(10, 0), "w") as fh:
-        json.dump(files, fh)
-    meta.pop("parts_format")
-    meta["files_parts"] = 1
-    with open(cp, "w") as fh:
-        json.dump(meta, fh)
-    t2 = TxLogTable.open(table_path)
-    assert t2._resolve(10) == files
-    assert len(t2._resolve()) == 12
-
-    # legacy INLINE single-JSON checkpoints (pre-r10) too
-    meta["files_parts"] = None
-    meta.pop("n_files", None)
-    meta["files"] = files
-    with open(cp, "w") as fh:
-        json.dump(meta, fh)
-    os.remove(t._part_path(10, 0))
-    t3 = TxLogTable.open(table_path)
-    assert t3._resolve(10) == files
 
 
 def test_column_selective_reads_counted(spark, table_path, monkeypatch):

@@ -586,16 +586,14 @@ def test_protocol_table_features(spark, table_path):
 
 
 def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
-    """r9: a checkpoint written WITHOUT a state key (a downlevel
-    writer's format) must not force the replay into a full walk from 0
-    — after log retention that walk would silently skip expired commits
-    and reconstruct WRONG state (lost constraints, a pre-rename
-    schema). Seeding falls back to an OLDER checkpoint carrying the key
-    (the retention boundary checkpoint always does); with NO carrying
-    checkpoint, a walk that needs expired commits raises the pinned
-    VersionExpiredError instead of dropping their actions. Also pins
-    the constraint-dependency rule: renaming/dropping a column an
-    active CHECK references is refused."""
+    """r9: after log retention expired the commits that carried the
+    mapping, constraint and rename actions, every replay reconstructs
+    them from a retained checkpoint — never by a silent walk from 0.
+    A checkpoint lacking any state key is not in the one format this
+    code writes: it raises, naming the file, instead of falling back to
+    an older checkpoint. Also pins the constraint-dependency rule:
+    renaming/dropping a column an active CHECK references is
+    refused."""
     from service_level_reporting_spark.sources.txlog import (
         VersionExpiredError)
 
@@ -619,19 +617,23 @@ def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
     eb = t.earliest_version()
     assert eb > 5                 # the mapping/constraint commits expired
 
-    # strip the r7-r9 keys from the NEWEST checkpoint (downlevel format)
+    # strip the r7-r9 keys from the NEWEST checkpoint: refused, loudly
     cks = sorted(f for f in os.listdir(t.log_dir)
                  if f.endswith(".checkpoint.json"))
-    with open(os.path.join(t.log_dir, cks[-1])) as fh:
+    newest = os.path.join(t.log_dir, cks[-1])
+    with open(newest) as fh:
         payload = json.load(fh)
     for key in ("schema", "schema_evolved", "constraints", "txns",
                 "protocol", "columnMapping", "config"):
         payload.pop(key, None)
-    with open(os.path.join(t.log_dir, cks[-1]), "w") as fh:
+    with open(newest, "w") as fh:
         json.dump(payload, fh)
+    with pytest.raises(ValueError, match="lacks state keys"):
+        TxLogTable.open(table_path)
 
-    # every replay must seed from the OLDER (boundary) checkpoint —
-    # correct state, not a silent walk-from-0 reconstruction
+    # without it, every replay seeds from the OLDER (boundary)
+    # checkpoint — correct state after retention
+    os.remove(newest)
     t2 = TxLogTable.open(table_path)
     sch, _ = t2.table_schema_info()
     assert "value" in {f.name for f in sch.fields} \
@@ -641,16 +643,10 @@ def test_downlevel_checkpoint_seeding_after_retention(spark, table_path):
     assert t2.table_protocol()["minReaderVersion"] == 3
     assert t2.read(spark).count() == 21
 
-    # strip ALL checkpoints: the walk would need expired commits —
-    # the pinned error, never silently-wrong state
-    for ck in cks:
-        with open(os.path.join(t.log_dir, ck)) as fh:
-            payload = json.load(fh)
-        for key in ("schema", "schema_evolved", "constraints", "txns",
-                    "protocol", "columnMapping", "config"):
-            payload.pop(key, None)
-        with open(os.path.join(t.log_dir, ck), "w") as fh:
-            json.dump(payload, fh)
+    # no checkpoint left: the walk would need expired commits — the
+    # pinned error, never silently-wrong state
+    for ck in cks[:-1]:
+        os.remove(os.path.join(t.log_dir, ck))
     with pytest.raises(VersionExpiredError):
         TxLogTable.open(table_path)   # __init__'s config replay raises
 

@@ -603,9 +603,9 @@ def test_null_count_prune_skips_dv_carrying_files(spark, table_path):
 
 
 def _strip_schema_meta(t):
-    """Rewrite the log as a PRE-r8 'legacy' log: drop metaData actions
-    and checkpoint-carried schemas (checkpoints removed wholesale —
-    resolution falls back to the full-log walk)."""
+    """Corrupt the log: drop its metaData actions and the checkpoints
+    carrying the schema (checkpoints removed wholesale — resolution
+    falls back to the full-log walk)."""
     import json as _json
 
     for f in sorted(os.listdir(t.log_dir)):
@@ -631,8 +631,7 @@ def test_schema_from_log_o1_footer_reads(spark, table_path, monkeypatch):
     ZERO driver-side parquet footer opens (the old path opened every
     live file; at 10^5-10^6 files that is an O(n_files) storm per query
     analysis). Values and columns stay identical to
-    TxLogTable.read(merge_schema=True); a legacy log (metaData stripped)
-    falls back to footer unification and still reads correctly."""
+    TxLogTable.read(merge_schema=True)."""
     import pyarrow.parquet as pq
 
     spark.dataSource.register(TxLogDataSource)
@@ -671,23 +670,14 @@ def test_schema_from_log_o1_footer_reads(spark, table_path, monkeypatch):
     with pytest.raises(Exception, match="mergeSchema"):
         spark.read.format("txlog").load(table_path).collect()
 
-    # legacy log: footer fallback engages (reads > 0) and stays correct
-    _strip_schema_meta(t)
-    calls["n"] = 0
-    pin2 = _pin_snapshot(table_path, {"mergeSchema": "true"})
-    assert calls["n"] > 0                    # one open per live file
-    assert set(pin2["schema"].names) == {"k", "v", "region"}
-    df2 = (spark.read.format("txlog").option("mergeSchema", "true")
-           .load(table_path))
-    assert _multiset(df2) == _multiset(want)
-
 
 def test_non_additive_evolution_pinned_errors(spark, table_path):
     """r8 (VERDICT item 6): the pinned non-additive contract — a TYPE
     change raises the same actionable error through the table API (at
-    write, nothing staged) and the data source (reading a legacy log
-    whose footers conflict); omitted recorded columns stay allowed
-    (NULL-fill, Delta-with-autoMerge parity)."""
+    write, nothing staged); omitted recorded columns stay allowed
+    (NULL-fill, Delta-with-autoMerge parity). A log whose schema record
+    is gone is corrupt: the data source refuses it rather than
+    re-deriving a schema from footers."""
     from service_level_reporting_spark.sources.txlog import (
         SchemaEvolutionError)
 
@@ -712,13 +702,8 @@ def test_non_additive_evolution_pinned_errors(spark, table_path):
            for r in t.read(spark, merge_schema=True).collect()}
     assert got == {"a": None, "c": "eu", "d": None}
 
-    # legacy log with genuinely conflicting file types: the data source
-    # raises the SAME actionable message (footer unify path)
     _strip_schema_meta(t)
-    t.append(spark.createDataFrame([("e", "notanum")],
-                                   "k string, x string").coalesce(1))
-    _strip_schema_meta(t)
-    with pytest.raises(Exception, match="Non-additive"):
+    with pytest.raises(Exception, match="no recorded schema"):
         (spark.read.format("txlog").option("mergeSchema", "true")
          .load(table_path).collect())
 

@@ -15,11 +15,14 @@ import sys
 import tempfile
 
 RUNNER = r"""
-import json, sys
+import json, os, sys
 sys.path.insert(0, sys.argv[1])
 from service_level_reporting_spark import registry
 from service_level_reporting_spark.session import get_spark
-spark = get_spark(app_name='ab-rows', master='local[8]', shuffle_partitions=8)
+cpus = int(os.environ.get('SPARK_GRAFT_CPUS')
+           or len(os.sched_getaffinity(0)))
+spark = get_spark(app_name='ab-rows', master=f'local[{cpus}]',
+                  shuffle_partitions=cpus)
 spark.sparkContext.setLogLevel('ERROR')
 qs = registry.aux_queries()
 out = {}
