@@ -5,12 +5,19 @@ MERGE seam; round 4 makes the TABLE FORMAT itself running code, built from
 what the format fundamentally is: immutable parquet data files plus an
 ordered log of atomic commits. Real here, not mocked:
 
-* **Atomic commits** — version file `_txlog/{v:020d}.json` created with
-  O_EXCL (`open(mode="x")`): POSIX put-if-absent, the same
-  reserve-the-next-version protocol Delta uses (object stores map this to
-  a conditional put / commit service).
-* **Optimistic concurrency** — a losing writer gets ``VersionConflict``,
-  re-reads the log, rebases its file set and retries; both writers land.
+* **Atomic commits** — version file `_txlog/{v:020d}.json` published by
+  ``os.link`` of a fully written temp file: link(2) fails with EEXIST
+  when the version exists, the same POSIX put-if-absent /
+  reserve-the-next-version protocol Delta uses (object stores map this
+  to a conditional put / commit service), and a crash can never leave a
+  torn commit file.
+* **Optimistic concurrency** — every commit derives its actions from
+  the snapshot at a PINNED base version and claims exactly base + 1, all
+  through one loop, ``TxLogTable._commit_retrying``: a losing writer
+  gets ``VersionConflict``, re-plans against the winner's snapshot
+  (reusing its staged rewrite when the winner touched nothing it
+  depends on) and retries with jittered backoff until one wall-clock
+  deadline; both writers land and no update is lost.
 * **Snapshot isolation + time travel** — a reader resolves a version's
   live file set by replaying the log up to that version. Data files are
   immutable and removes are logical, so a snapshot taken before a MERGE
@@ -41,6 +48,7 @@ import random
 import re
 import time
 import uuid
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,14 +75,15 @@ CHECKPOINT_STATE_KEYS = ("txns", "constraints", "generated", "schema",
 # bounded per-handle cache of resolved snapshots (version -> add list)
 SNAP_CACHE_MAX = 8
 CKPT_CACHE_MAX = 4          # r12: parsed checkpoint payloads per handle
-# Rewriting commits (merge/optimize) retry until this wall-clock deadline,
-# not a fixed count: each lost O_EXCL race is cheap to retry (the logical
-# conflict check below usually avoids re-running the Spark rewrite), and a
-# fixed small cap lets fast appenders starve a slow merger (the r5
-# serializability test caught exactly that — VersionConflict escaped after
-# 5 blind rebases under 3 concurrent mergers).
+# Every commit retries until this wall-clock deadline, then raises
+# VersionConflict — not a fixed count: each lost put-if-absent race is
+# cheap to retry (a rewrite's logical conflict check usually avoids
+# re-running the Spark job), and a fixed small cap lets fast appenders
+# starve a slow merger (the r5 serializability test caught exactly that
+# — VersionConflict escaped after 5 blind rebases under 3 concurrent
+# mergers). Read at call time by TxLogTable._commit_retrying.
 COMMIT_DEADLINE_SEC = 120.0
-# base/cap for exponential backoff + full jitter on every commit retry loop
+# base/cap for exponential backoff + full jitter in the commit loop
 BACKOFF_BASE_SEC = 0.002
 BACKOFF_CAP_SEC = 0.25
 # vacuum never deletes unreferenced files younger than this: they may be
@@ -232,6 +241,29 @@ def _backoff(attempt: int) -> None:
     slower one — the standard optimistic-concurrency fairness move."""
     cap = min(BACKOFF_CAP_SEC, BACKOFF_BASE_SEC * (2 ** attempt))
     time.sleep(random.uniform(0.0, cap))
+
+
+class _Done(NamedTuple):
+    """A commit plan's finished result: an idempotent or no-op exit
+    that commits nothing (see TxLogTable._commit_retrying)."""
+    value: object
+
+
+class _Staged(NamedTuple):
+    """A commit plan whose actions are expensive to derive (a Spark
+    rewrite, staged data files): ``stage()`` derives them, ``key``
+    fingerprints everything they depend on at the plan's base."""
+    key: object
+    stage: Callable[[], object]
+
+
+class _Outcome(NamedTuple):
+    """What TxLogTable._commit_retrying returns."""
+    value: object           # the committed version, or the _Done value
+    committed: bool
+    actions: list | None    # the committed actions (None when _Done)
+    retries: int            # lost version races
+    rebases: int            # re-stagings after a changed _Staged key
 
 
 def _session() -> SparkSession:
@@ -507,6 +539,22 @@ def file_ident(add: dict) -> tuple:
     return (add["path"], tuple(add.get("dv", ())))
 
 
+def _removes(files: list[dict]) -> list[dict]:
+    """Remove actions for ``files`` (live add dicts)."""
+    return [{"remove": a["path"]} for a in files]
+
+
+def _count(actions: list[dict], kind: str) -> int:
+    """How many of ``actions`` are ``kind`` ("add" / "remove") actions."""
+    return sum(1 for a in actions if kind in a)
+
+
+def _nonempty(actions: list[dict]) -> list[dict]:
+    """Drop zero-row adds: an all-rows-deleted file would be an add with
+    0 rows and no stats (min None => never prunable)."""
+    return [a for a in actions if "add" not in a or a["add"]["rows"] > 0]
+
+
 def add_rows(add: dict) -> int:
     """Row count of an add-action; an add written by a log version that
     didn't record 'rows' (or recorded null) reads as UNKNOWN = 1, so the
@@ -540,9 +588,9 @@ class TxLogTable:
     keys) can observe the distinction, because each is idempotent by
     key over the final history. Readers are always SNAPSHOT-isolated
     (a version's file set is immutable). If a future caller needs
-    Serializable semantics, the seam is commit(): reject rather than
-    retry when latest_version() moved past the transaction's pinned
-    base."""
+    Serializable semantics, the seam is _commit_retrying(): reject
+    rather than retry when latest_version() moved past the
+    transaction's pinned base."""
 
     def __init__(self, path: str, key_cols: list[str], stats_col: str,
                  cluster_by: list[str] | None = None,
@@ -799,6 +847,53 @@ class TxLogTable:
             self._write_checkpoint(version)
         return version
 
+    def _commit_retrying(self, op: str, plan, **commit_kw) -> _Outcome:
+        """The commit loop every writer goes through (Delta's optimistic
+        protocol). Each attempt pins ``base = latest_version()`` and
+        calls ``plan(base)``, which reads table state ONLY at ``base``
+        and returns one of:
+
+        * ``_Done(value)`` — an idempotent or no-op exit; nothing commits;
+        * a list of actions derived at ``base``;
+        * ``_Staged(key, stage)`` — ``stage()`` derives the actions on
+          the first attempt and whenever ``key`` changed (a rebase); an
+          unchanged key reuses the staged actions, the logical
+          no-conflict fast path that skips re-running a Spark rewrite.
+          ``stage()`` may itself return ``_Done``. On a retry the staged
+          actions pass ``_refresh_schema_action`` at ``base`` first
+          (schema-type and column-mapping races).
+
+        The claim is exactly ``base + 1``, so a commit landing after the
+        plan's reads surfaces as VersionConflict and the next attempt
+        re-plans against the winner's state — never a lost update.
+        Conflicts back off with full jitter until COMMIT_DEADLINE_SEC,
+        then the VersionConflict propagates."""
+        deadline = time.monotonic() + COMMIT_DEADLINE_SEC
+        retries = rebases = 0
+        key = staged = None
+        while True:
+            base = self.latest_version()
+            actions = plan(base)
+            if isinstance(actions, _Staged):
+                if staged is None or actions.key != key:
+                    if staged is not None:
+                        rebases += 1
+                    key, staged = actions.key, actions.stage()
+                if retries and not isinstance(staged, _Done):
+                    staged = self._refresh_schema_action(staged, base)
+                actions = staged
+            if isinstance(actions, _Done):
+                return _Outcome(actions.value, False, None, retries,
+                                rebases)
+            try:
+                v = self.commit(actions, base + 1, op=op, **commit_kw)
+                return _Outcome(v, True, actions, retries, rebases)
+            except VersionConflict:
+                if time.monotonic() >= deadline:
+                    raise
+                _backoff(retries)
+                retries += 1
+
     def row_tracking(self, version: int | None = None):
         """Row-tracking state at ``version`` — ``{"enabled": True,
         "highWaterMark": n}`` once enabled, else None."""
@@ -845,22 +940,19 @@ class TxLogTable:
         high-water mark is recorded, and the protocol upgrades to the
         features form with the ``rowTracking`` writer feature, all in
         one atomic commit. Idempotent."""
-        attempt = 0
-        while True:
-            if self.row_tracking() is not None:
-                return self.latest_version()          # idempotent
-            base = self.latest_version()
-            live = self._resolve(base)
+        def plan(base):
+            if self.row_tracking(base) is not None:
+                return _Done(base)                    # idempotent
             cursor = 0
             readds = []
-            for a in live:
+            for a in self._resolve(base):
                 n = dict(a)
                 n["base_row_id"] = cursor
                 n["default_rcv"] = base + 1
                 cursor += max(int(n.get("rows", 0)), 1)
                 readds.append({"add": n})
-            p = self.table_protocol()
-            actions = readds + [
+            p = self.table_protocol(base)
+            return readds + [
                 {"rowTracking": {"enabled": True,
                                  "highWaterMark": cursor - 1}},
                 {"protocol": {
@@ -874,12 +966,8 @@ class TxLogTable:
                     "writerFeatures": sorted(
                         set(p.get("writerFeatures", ()))
                         | {"rowTracking"})}}]
-            try:
-                return self.commit(actions, base + 1,
-                                   op="enable_row_tracking")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+
+        return self._commit_retrying("enable_row_tracking", plan).value
 
     def type_widening_enabled(self, version: int | None = None) -> bool:
         """Is the ``typeWidening`` table feature active at ``version``?
@@ -897,24 +985,19 @@ class TxLogTable:
         file. Upgrades the protocol to the named-features form with
         ``typeWidening`` in BOTH feature sets (a pre-widening reader
         must fail actionably, not mis-plan narrow footers). Idempotent."""
-        attempt = 0
-        while True:
-            if self.type_widening_enabled():
-                return self.latest_version()          # idempotent
-            p = self.table_protocol()
-            actions = [{"protocol": {
+        def plan(base):
+            if self.type_widening_enabled(base):
+                return _Done(base)                    # idempotent
+            p = self.table_protocol(base)
+            return [{"protocol": {
                 "minReaderVersion": FEATURES_READER_VERSION,
                 "minWriterVersion": FEATURES_WRITER_VERSION,
                 "readerFeatures": sorted(
                     set(p.get("readerFeatures", ())) | {"typeWidening"}),
                 "writerFeatures": sorted(
                     set(p.get("writerFeatures", ())) | {"typeWidening"})}}]
-            try:
-                return self.commit(actions, self.latest_version() + 1,
-                                   op="enable_type_widening")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+
+        return self._commit_retrying("enable_type_widening", plan).value
 
     def widen_column(self, name: str, new_type: str) -> int:
         """ALTER TABLE CHANGE COLUMN type widening: re-record ``name``
@@ -926,14 +1009,14 @@ class TxLogTable:
         from pyspark.sql.types import StructField, StructType
         from pyspark.sql.types import _parse_datatype_string
 
-        if not self.type_widening_enabled():
-            raise ProtocolError(
-                "txlog widen_column: the typeWidening table feature is "
-                "not enabled — call enable_type_widening() first.")
         dt = _norm_dtype(_parse_datatype_string(new_type))
-        attempt = 0
-        while True:
-            sch, _ = self.table_schema_info()
+
+        def plan(base):
+            if not self.type_widening_enabled(base):
+                raise ProtocolError(
+                    "txlog widen_column: the typeWidening table feature "
+                    "is not enabled — call enable_type_widening() first.")
+            sch, _ = self.table_schema_info(base)
             if sch is None:
                 raise ValueError("txlog widen_column: table has no "
                                  "recorded schema yet")
@@ -943,7 +1026,7 @@ class TxLogTable:
             frm = have[name].dataType.simpleString()
             to = dt.simpleString()
             if frm == to:
-                return self.latest_version()          # idempotent
+                return _Done(base)                    # idempotent
             if not _is_widening(frm, to):
                 raise SchemaEvolutionError(
                     f"txlog widen_column: {frm} -> {to} is not a "
@@ -952,15 +1035,11 @@ class TxLogTable:
                     "any other type change.")
             fields = [StructField(name, dt, True) if f.name == name
                       else f for f in sch.fields]
-            action = {"metaData": {
+            return [{"metaData": {
                 "schemaString": StructType(fields).json(),
-                "widen": {name: [frm, to]}}}
-            try:
-                return self.commit([action], self.latest_version() + 1,
-                                   op="widen_column")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+                "widen": {name: [frm, to]}}}]
+
+        return self._commit_retrying("widen_column", plan).value
 
     def _load_checkpoint(self, cv: int) -> dict:
         """Parsed checkpoint META of version ``cv``. The only format is
@@ -1230,32 +1309,20 @@ class TxLogTable:
         — sink wrote, checkpoint didn't advance, engine re-runs the batch);
         otherwise data files + marker commit atomically. Returns True if
         the batch was applied, False if skipped."""
-        if batch_id <= self.last_txn_batch(writer):
-            return False
-        cons0, gens0 = self.constraints(), self.generated_columns()
-        adds = self._write_data_files(df)
-        attempt = 0
-        while True:
-            base = self.latest_version()
-            # re-check under the new snapshot: a competing retry of the
-            # SAME writer may have landed this batch while we wrote files
-            if batch_id <= self.last_txn_batch(writer):
-                return False
-            # a constraint / generation expression landed since staging:
-            # re-validate the staged files (r10 s2, same as append)
-            cons1, gens1 = (self.constraints(base),
-                            self.generated_columns(base))
-            if (cons1, gens1) != (cons0, gens0):
-                self._revalidate_staged(adds, cons1, gens1)
-                cons0, gens0 = cons1, gens1
-            try:
-                self.commit(adds, base + 1, op="streaming_append",
-                            txn={"writer": writer, "batch": batch_id})
-                return True
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
-                adds = self._refresh_schema_action(adds)
+        st: dict = {}
+
+        def plan(base):
+            # checked at every base: a competing retry of the SAME
+            # writer may have landed this batch while we wrote files
+            if batch_id <= int(self._txn_map(base).get(writer, -1)):
+                return _Done(False)
+            adds = self._stage_once(st, self._write_rules(base),
+                                    lambda: self._write_data_files(df))
+            return _Staged(None, lambda: adds)   # staged once
+
+        return self._commit_retrying(
+            "streaming_append", plan,
+            txn={"writer": writer, "batch": batch_id}).committed
 
     def _write_checkpoint(self, version: int) -> None:
         """Checkpoints seed from the PREVIOUS checkpoint (correct by
@@ -1425,9 +1492,9 @@ class TxLogTable:
                 f"txlog upgrade_protocol: unsupported feature(s) "
                 f"{sorted(unknown)} — this implementation cannot "
                 "maintain what it does not understand.")
-        attempt = 0
-        while True:
-            p = self.table_protocol()
+
+        def plan(base):
+            p = self.table_protocol(base)
             rf = sorted(set(p.get("readerFeatures", ()))
                         | set(reader_features))
             wf = sorted(set(p.get("writerFeatures", ()))
@@ -1436,14 +1503,10 @@ class TxLogTable:
                    "minWriterVersion": FEATURES_WRITER_VERSION,
                    "readerFeatures": rf, "writerFeatures": wf}
             if p == new:
-                return self.latest_version()          # idempotent
-            try:
-                return self.commit([{"protocol": new}],
-                                   self.latest_version() + 1,
-                                   op="upgrade_protocol")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+                return _Done(base)                    # idempotent
+            return [{"protocol": new}]
+
+        return self._commit_retrying("upgrade_protocol", plan).value
 
     def column_mapping(self, version: int | None = None):
         """The column-mapping state at ``version`` (r9, VERDICT item 3 —
@@ -1560,12 +1623,12 @@ class TxLogTable:
             [StructField(f.name, _norm_dtype(f.dataType), True)
              for f in df.schema.fields])
 
-    def _schema_action_fields(self, norm):
+    def _schema_action_fields(self, norm, version: int | None = None):
         from pyspark.sql.types import StructField, StructType
 
         norm = [StructField(f.name, _norm_dtype(f.dataType), True)
                 for f in norm]
-        cur, _ = self.table_schema_info()
+        cur, _ = self.table_schema_info(version)
         widen: dict = {}
         if cur is None:
             union = norm
@@ -1576,7 +1639,8 @@ class TxLogTable:
                           and f.dataType
                           != _norm_dtype(have[f.name].dataType)]
             bad: list = []
-            widening_on = bool(mismatched) and self.type_widening_enabled()
+            widening_on = (bool(mismatched)
+                           and self.type_widening_enabled(version))
             for f in mismatched:
                 frm = _norm_dtype(have[f.name].dataType).simpleString()
                 to = f.dataType.simpleString()
@@ -1615,28 +1679,30 @@ class TxLogTable:
             action["metaData"]["widen"] = widen
         return action
 
-    def _refresh_schema_action(self, actions: list[dict]) -> list[dict]:
-        """Revalidate a staged (non-reset) metaData action against the
-        CURRENT log before a conflict-retry re-commit (r9, ADVICE): two
+    def _refresh_schema_action(self, actions: list[dict],
+                               version: int | None = None) -> list[dict]:
+        """Revalidate staged (non-reset) metaData actions against the log
+        at ``version`` (default latest) before a conflict-retry re-commit
+        (r9, ADVICE): two
         concurrent writers adding the same NEW column with different
         types would otherwise both pass the stage-time pre-check and
         both commit, poisoning every later schema replay. The race's
         loser re-derives here — a type conflict surfaces as a write-side
         SchemaEvolutionError with nothing committed; a now-redundant
-        action drops; genuinely-new fields re-union. Mirrors the
-        constraint re-check the same retry loops already perform."""
+        action drops; genuinely-new fields re-union. _commit_retrying
+        runs it on every retry of staged actions."""
         from pyspark.sql.types import StructType
 
         # r9 column mapping: a raced registration of the SAME new
         # logical column under a different physical name means this
         # writer's already-written files carry an unreachable column —
         # surface it instead of committing orphaned data
+        m = self.column_mapping(version)
+        cur = _l2p(m)
+        registered = set()
         for a in actions:
-            d = a.get("columnMappingAdd")
-            if not d:
-                continue
-            cur = _l2p(self.column_mapping())
-            for f in d["fields"]:
+            for f in (a.get("columnMappingAdd") or {}).get("fields", ()):
+                registered.add(f["logical"])
                 ex = cur.get(f["logical"])
                 if ex is not None and ex != f["physical"]:
                     raise SchemaEvolutionError(
@@ -1645,30 +1711,25 @@ class TxLogTable:
                         "physical id; this write's staged files are "
                         "unreachable — retry the write against the "
                         "current table.")
-        idx = next((i for i, a in enumerate(actions)
-                    if "metaData" in a
-                    and not a["metaData"].get("reset")), None)
-        if idx is None:
-            return actions
-        staged = StructType.fromJson(
-            json.loads(actions[idx]["metaData"]["schemaString"]))
-        # r10 (ADVICE): with column mapping on, a concurrent
-        # rename_column/drop_column can remove a STAGED column's logical
-        # name mid-retry. Re-unioning it would re-add it as a "new"
-        # field with NO mapping entry, and _apply_mapping's identity
-        # fallback would resolve it to the renamed column's frozen
-        # physical name — two logical columns aliasing one physical
-        # column. Delta fails the losing transaction on a metadata
-        # change; so do we. (Genuinely-new columns are exempt: they ride
-        # a columnMappingAdd in this same action list.)
-        m = self.column_mapping()
-        if m is not None:
-            registered = {f["logical"] for a in actions
-                          for f in (a.get("columnMappingAdd")
-                                    or {}).get("fields", ())}
-            cur_logical = {f["logical"] for f in m["fields"]}
+        out = []
+        for a in actions:
+            md = a.get("metaData")
+            if md is None or md.get("reset"):
+                out.append(a)
+                continue
+            staged = StructType.fromJson(json.loads(md["schemaString"]))
+            # r10 (ADVICE): with column mapping on, a concurrent
+            # rename_column/drop_column can remove a STAGED column's
+            # logical name mid-retry. Re-unioning it would re-add it as
+            # a "new" field with NO mapping entry, and _apply_mapping's
+            # identity fallback would resolve it to the renamed column's
+            # frozen physical name — two logical columns aliasing one
+            # physical column. Delta fails the losing transaction on a
+            # metadata change; so do we. (Genuinely-new columns are
+            # exempt: they ride a columnMappingAdd in this same action
+            # list.)
             lost = [f.name for f in staged.fields
-                    if f.name not in cur_logical
+                    if m is not None and f.name not in cur
                     and f.name not in registered]
             if lost:
                 raise SchemaEvolutionError(
@@ -1677,9 +1738,10 @@ class TxLogTable:
                     "— re-adding them would alias another column's "
                     "physical data. Retry the write against the "
                     "current table.")
-        fresh = self._schema_action_fields(list(staged.fields))
-        rest = [a for i, a in enumerate(actions) if i != idx]
-        return ([fresh] + rest) if fresh else rest
+            fresh = self._schema_action_fields(list(staged.fields), version)
+            if fresh:
+                out.append(fresh)
+        return out
 
     def _check(self, df: DataFrame, cons: dict) -> None:
         """Raise ConstraintViolation if any row FAILS a check. SQL CHECK
@@ -1761,35 +1823,28 @@ class TxLogTable:
         hold violating rows the declaration never saw. Now the commit
         claims exactly validated-base+1; a conflict re-pins and
         re-checks ONLY the files that became live since (O(delta))."""
-        base = self.latest_version()
-        validated: set = set()
-        if base >= 0:
-            snap = self.read(_session(), version=base, merge_schema=True)
-            self._check(snap, {name: expr})
-            validated = {a["path"] for a in self._resolve(base)}
-        attempt = 0
-        while True:
-            try:
-                return self.commit(
-                    [{"constraint": {"name": name, "expr": expr}}],
-                    base + 1, op="add_constraint")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
-                base = self.latest_version()
+        validated: set | None = None
+
+        def plan(base):
+            nonlocal validated
+            if validated is not None:
                 validated = self._revalidate_since(
                     validated, base, {name: expr}, {})
+            elif base >= 0:
+                snap = self.read(_session(), version=base,
+                                 merge_schema=True)
+                self._check(snap, {name: expr})
+                validated = {a["path"] for a in self._resolve(base)}
+            else:
+                validated = set()
+            return [{"constraint": {"name": name, "expr": expr}}]
+
+        return self._commit_retrying("add_constraint", plan).value
 
     def drop_constraint(self, name: str) -> int:
-        attempt = 0
-        while True:
-            try:
-                return self.commit([{"drop_constraint": name}],
-                                   self.latest_version() + 1,
-                                   op="drop_constraint")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+        return self._commit_retrying(
+            "drop_constraint", lambda base: [{"drop_constraint": name}]
+        ).value
 
     # ---- generated columns (r10 s2, Delta generation expressions) --------
 
@@ -1830,61 +1885,57 @@ class TxLogTable:
         and every existing row (including null-padded rows of files
         written before an additive evolution) VALIDATES against the
         expression first, exactly like add_constraint. Anything else is
-        refused with the remedy (rewrite with the column materialized)."""
-        base = self.latest_version()
-        validated: set = set()
-        sch, _ = self.table_schema_info()
-        if sch is not None:
-            if name not in {f.name for f in sch.fields}:
-                raise ValueError(
-                    f"txlog add_generated_column: column {name!r} is not "
-                    "in the recorded schema and the table already holds "
-                    "data — files written before the declaration would "
-                    "read NULL where the expression promises a value. "
-                    "Rewrite the table with the column materialized "
-                    "(overwrite), then declare it.")
-            snap = self.read(_session(), version=base, merge_schema=True)
-            bad = (snap.filter(~F.col(name).eqNullSafe(
-                       F.expr(expr).cast(dtype)))
-                   .limit(1).count())
-            if bad:
-                raise GeneratedColumnViolation(
-                    f"txlog add_generated_column: existing rows violate "
-                    f"{name} == ({expr}); nothing was committed.")
-            validated = {a["path"] for a in self._resolve(base)}
-        # r11 (ADVICE): pinned-base commit at validated-base+1; a
-        # VersionConflict means rows may have landed that the snapshot
-        # validation never saw (their writer was gated against the OLD
-        # gens set) — re-check exactly those files before re-committing,
-        # preserving the documented 'value == expr holds for every
-        # physical row' invariant.
-        gens = {name: {"dtype": dtype, "expr": expr}}
-        attempt = 0
-        while True:
-            try:
-                return self.commit(
-                    [{"generatedCol": {"name": name, "dtype": dtype,
-                                       "expr": expr}}],
-                    base + 1, op="add_generated_column")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
-                base = self.latest_version()
+        refused with the remedy (rewrite with the column materialized).
+
+        r11 (ADVICE): a retry means rows may have landed that the
+        snapshot validation never saw (their writer was gated against
+        the OLD gens set) — exactly those files are re-checked,
+        preserving the documented 'value == expr holds for every
+        physical row' invariant."""
+        actions = [{"generatedCol": {"name": name, "dtype": dtype,
+                                     "expr": expr}}]
+        validated: set | None = None
+
+        def plan(base):
+            nonlocal validated
+            if validated is not None:
                 validated = self._revalidate_since(
-                    validated, base, {}, gens)
+                    validated, base, {},
+                    {name: {"dtype": dtype, "expr": expr}})
+                return actions
+            validated = set()
+            sch, _ = self.table_schema_info(base)
+            if sch is not None:
+                if name not in {f.name for f in sch.fields}:
+                    raise ValueError(
+                        f"txlog add_generated_column: column {name!r} is "
+                        "not in the recorded schema and the table "
+                        "already holds data — files written before the "
+                        "declaration would read NULL where the "
+                        "expression promises a value. Rewrite the table "
+                        "with the column materialized (overwrite), then "
+                        "declare it.")
+                snap = self.read(_session(), version=base,
+                                 merge_schema=True)
+                bad = (snap.filter(~F.col(name).eqNullSafe(
+                           F.expr(expr).cast(dtype)))
+                       .limit(1).count())
+                if bad:
+                    raise GeneratedColumnViolation(
+                        f"txlog add_generated_column: existing rows "
+                        f"violate {name} == ({expr}); nothing was "
+                        "committed.")
+                validated = {a["path"] for a in self._resolve(base)}
+            return actions
+
+        return self._commit_retrying("add_generated_column", plan).value
 
     def drop_generated_column(self, name: str) -> int:
         """Drop the generation EXPRESSION (the column and its data
         stay — it becomes a plain column, Delta parity)."""
-        attempt = 0
-        while True:
-            try:
-                return self.commit([{"drop_generated": name}],
-                                   self.latest_version() + 1,
-                                   op="drop_generated_column")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+        return self._commit_retrying(
+            "drop_generated_column", lambda base: [{"drop_generated": name}]
+        ).value
 
     # ---- column mapping: rename/drop without rewrite (r9, VERDICT 3) ----
 
@@ -1901,19 +1952,18 @@ class TxLogTable:
         fail actionably rather than serve physical names as columns,
         and it fails on the NAMED feature, not a monolithic version
         bump. Idempotent."""
-        attempt = 0
-        while True:
-            if self.column_mapping() is not None:
-                return self.latest_version()          # idempotent
-            sch, _ = self.table_schema_info()
+        def plan(base):
+            if self.column_mapping(base) is not None:
+                return _Done(base)                    # idempotent
+            sch, _ = self.table_schema_info(base)
             if sch is None:
                 raise ValueError(
                     "txlog enable_column_mapping: the table has no "
                     "recorded schema yet — write data first.")
             fields = [{"id": i + 1, "logical": f.name, "physical": f.name}
                       for i, f in enumerate(sch.fields)]
-            p = self.table_protocol()
-            actions = [
+            p = self.table_protocol(base)
+            return [
                 {"columnMapping": {"mode": "name", "fields": fields,
                                    "maxId": len(fields)}},
                 {"protocol": {
@@ -1925,15 +1975,11 @@ class TxLogTable:
                     "writerFeatures": sorted(
                         set(p.get("writerFeatures", ()))
                         | {"columnMapping"})}}]
-            try:
-                return self.commit(actions, self.latest_version() + 1,
-                                   op="enable_column_mapping")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
 
-    def _require_mapping(self, op: str) -> dict:
-        m = self.column_mapping()
+        return self._commit_retrying("enable_column_mapping", plan).value
+
+    def _require_mapping(self, op: str, version: int) -> dict:
+        m = self.column_mapping(version)
         if m is None:
             raise SchemaEvolutionError(
                 f"txlog {op}: column mapping is not enabled on this "
@@ -1943,7 +1989,8 @@ class TxLogTable:
                 "from then on), or rewrite the table (overwrite).")
         return m
 
-    def _check_constraint_refs(self, op: str, col: str) -> None:
+    def _check_constraint_refs(self, op: str, col: str,
+                               version: int) -> None:
         """A rename/drop of a column an active CHECK constraint
         references would break every later write (the stored SQL names
         the old column) — refuse, Delta's constraint-dependency rule.
@@ -1952,7 +1999,8 @@ class TxLogTable:
 
         pat = re.compile(rf"(?<![A-Za-z0-9_`]){re.escape(col)}"
                          rf"(?![A-Za-z0-9_`])")
-        hits = [n for n, x in self.constraints().items() if pat.search(x)]
+        hits = [n for n, x in self.constraints(version).items()
+                if pat.search(x)]
         if hits:
             raise ValueError(
                 f"txlog {op}: column {col!r} is referenced by CHECK "
@@ -1960,7 +2008,7 @@ class TxLogTable:
                 "(drop_constraint), then re-add against the new name.")
         # r10 s2: same rule for generation expressions — both a
         # generated column itself and any column its expression reads
-        ghits = [n for n, g in self.generated_columns().items()
+        ghits = [n for n, g in self.generated_columns(version).items()
                  if n == col or pat.search(g["expr"])]
         if ghits:
             raise ValueError(
@@ -1981,11 +2029,13 @@ class TxLogTable:
         Requires enable_column_mapping() (pinned error otherwise)."""
         from pyspark.sql.types import StructField, StructType
 
-        attempt = 0
-        while True:
-            m = self._require_mapping("rename_column")
-            self._check_constraint_refs("rename_column", old)
-            sch, sev = self.table_schema_info()
+        ncfg: dict = {}
+
+        def plan(base):
+            nonlocal ncfg
+            m = self._require_mapping("rename_column", base)
+            self._check_constraint_refs("rename_column", old, base)
+            sch, sev = self.table_schema_info(base)
             names = {f.name for f in sch.fields}
             if old not in names:
                 raise ValueError(f"txlog rename_column: no column {old!r}")
@@ -2001,7 +2051,7 @@ class TxLogTable:
                 {"columnMapping": {**m, "fields": fields}},
                 {"metaData": {"schemaString": new_sch.json(),
                               "reset": True, "evolved": sev}}]
-            cfg = self.effective_config()
+            cfg = self.effective_config(base)
             ncfg = {
                 "key_cols": [new if c == old else c
                              for c in cfg["key_cols"]],
@@ -2015,18 +2065,14 @@ class TxLogTable:
                 else cfg.get("bloom_col")}
             if ncfg != cfg:
                 actions.append({"config": ncfg})
-            try:
-                v = self.commit(actions, self.latest_version() + 1,
-                                op="rename_column")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
-                continue            # re-derive from the fresh state
-            self.key_cols = list(ncfg["key_cols"])
-            self.stats_col = ncfg["stats_col"]
-            self.cluster_by = ncfg.get("cluster_by") or None
-            self.bloom_col = ncfg.get("bloom_col")
-            return v
+            return actions
+
+        v = self._commit_retrying("rename_column", plan).value
+        self.key_cols = list(ncfg["key_cols"])
+        self.stats_col = ncfg["stats_col"]
+        self.cluster_by = ncfg.get("cluster_by") or None
+        self.bloom_col = ncfg.get("bloom_col")
+        return v
 
     def drop_column(self, name: str) -> int:
         """ALTER TABLE DROP COLUMN — metadata-only (r9): the field
@@ -2039,14 +2085,13 @@ class TxLogTable:
         it can never alias the dropped data."""
         from pyspark.sql.types import StructField, StructType
 
-        attempt = 0
-        while True:
-            m = self._require_mapping("drop_column")
-            self._check_constraint_refs("drop_column", name)
-            sch, sev = self.table_schema_info()
+        def plan(base):
+            m = self._require_mapping("drop_column", base)
+            self._check_constraint_refs("drop_column", name, base)
+            sch, sev = self.table_schema_info(base)
             if name not in {f.name for f in sch.fields}:
                 raise ValueError(f"txlog drop_column: no column {name!r}")
-            cfg = self.effective_config()
+            cfg = self.effective_config(base)
             if (name in cfg["key_cols"] or cfg["stats_col"] == name
                     or name in (cfg.get("cluster_by") or ())
                     or cfg.get("bloom_col") == name):
@@ -2061,16 +2106,12 @@ class TxLogTable:
                  for f in sch.fields if f.name != name])
             fields = [dict(f) for f in m["fields"]
                       if f["logical"] != name]
-            actions = [
+            return [
                 {"columnMapping": {**m, "fields": fields}},
                 {"metaData": {"schemaString": new_sch.json(),
                               "reset": True, "evolved": sev}}]
-            try:
-                return self.commit(actions, self.latest_version() + 1,
-                                   op="drop_column")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+
+        return self._commit_retrying("drop_column", plan).value
 
     def _resolve(self, version: int | None = None,
                  use_checkpoint: bool = True,
@@ -2558,41 +2599,47 @@ class TxLogTable:
                     "do not satisfy it — re-run the write (nothing was "
                     "committed).")
 
-    def append(self, df: DataFrame) -> int:
-        """Blind append: new files + adds; retries version races (with
-        jittered backoff so a burst of appenders can't starve a concurrent
-        merge — appends never conflict logically, only on the version).
-        A constraint or generation expression committed mid-retry forces
-        re-validation of the staged files (r10 s2).
+    def _reuse_key(self, files: list[dict], version: int) -> tuple:
+        """A rewrite's reuse key for ``_commit_retrying``: the content
+        identities (path + DV chain, ``file_ident``) of the files it
+        rewrites plus the write rules at ``version``. An interleaved MoR
+        delete keeps paths but changes what a file holds; an interleaved
+        add_constraint must force re-validation of the staged rows, not
+        a blind re-commit (r7)."""
+        return {file_ident(a) for a in files}, self._write_rules(version)
 
-        r11 (ADVICE): PINNED-BASE commit, like streaming_append/
-        overwrite. The r10 shape read the metadata fingerprint and then
-        claimed a freshly re-read latest_version()+1, so a metadata
-        commit landing in that window was silently included in the
-        claimed base without revalidating the staged files (TOCTOU).
-        Now the base is pinned BEFORE each fingerprint read and the
-        commit claims exactly base+1 — any metadata commit after the
-        read surfaces as VersionConflict, which re-enters the loop and
-        re-runs the fingerprint check against the new pinned base."""
-        base = self.latest_version()
-        cons0, gens0 = self.constraints(base), self.generated_columns(base)
-        adds = self._write_data_files(df)
-        attempt = 0
-        while True:
-            try:
-                return self.commit(adds, base + 1, op="append")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
-                base = self.latest_version()
-                cons1, gens1 = (self.constraints(base),
-                                self.generated_columns(base))
-                if (cons1, gens1) != (cons0, gens0):
-                    self._revalidate_staged(adds, cons1, gens1)
-                    cons0, gens0 = cons1, gens1
-                # a racing writer may have recorded a conflicting type
-                # for a staged NEW column — revalidate (r9, ADVICE)
-                adds = self._refresh_schema_action(adds)
+    def _write_rules(self, version: int) -> tuple:
+        """What every write is validated against at ``version``: (CHECK
+        constraints, generation expressions)."""
+        return self.constraints(version), self.generated_columns(version)
+
+    def _stage_once(self, st: dict, rules: tuple, write) -> list[dict]:
+        """Data files a write stages ONCE across commit attempts: the
+        first call runs ``write()``; a later attempt whose base carries a
+        different rule set than the one the files were last validated
+        against re-validates them (``_revalidate_staged``). ``st`` holds
+        the files and their rule set between attempts."""
+        if "adds" not in st:
+            st["adds"] = write()
+        elif rules != st["rules"]:
+            self._revalidate_staged(st["adds"], *rules)
+        st["rules"] = rules
+        return st["adds"]
+
+    def append(self, df: DataFrame) -> int:
+        """Blind append: new files + adds, staged once — appends never
+        conflict logically, only on the version. Every attempt re-reads
+        the write rules at its pinned base, so a constraint or
+        generation expression committed before the claim forces
+        re-validation of the staged files (r10 s2)."""
+        st: dict = {}
+
+        def plan(base):
+            adds = self._stage_once(st, self._write_rules(base),
+                                    lambda: self._write_data_files(df))
+            return _Staged(None, lambda: adds)   # staged once
+
+        return self._commit_retrying("append", plan).value
 
     def _check_foreign_refs(self, files: list[dict]) -> None:
         """Existence check over CLONE-FOREIGN references only (absolute
@@ -2850,25 +2897,15 @@ class TxLogTable:
         path to a type change or a true column drop; phantom NULL fields
         from earlier evolution leave the schema, and the `evolved` flag
         recomputes from the post-overwrite log."""
-        cons0, gens0 = self.constraints(), self.generated_columns()
-        adds = self._write_data_files(df, schema_reset=True)
-        attempt = 0
-        while True:
-            base = self.latest_version()
-            live = self._resolve(base)
-            new_cons = self.constraints(base)
-            new_gens = self.generated_columns(base)
-            if (new_cons, new_gens) != (cons0, gens0):
-                # constraint / generation expression landed mid-flight:
-                # re-validate the staged files (r7; r10 s2 adds gens)
-                self._revalidate_staged(adds, new_cons, new_gens)
-                cons0, gens0 = new_cons, new_gens
-            actions = adds + [{"remove": a["path"]} for a in live]
-            try:
-                return self.commit(actions, base + 1, op="overwrite")
-            except VersionConflict:
-                _backoff(attempt)
-                attempt += 1
+        st: dict = {}
+
+        def plan(base):
+            adds = self._stage_once(
+                st, self._write_rules(base),
+                lambda: self._write_data_files(df, schema_reset=True))
+            return adds + _removes(self._resolve(base))
+
+        return self._commit_retrying("overwrite", plan).value
 
     def read(self, spark: SparkSession, version: int | None = None,
              merge_schema: bool = False,
@@ -2990,8 +3027,7 @@ class TxLogTable:
             out.append(a)
         return out
 
-    def merge(self, updates: DataFrame,
-              deadline_sec: float = COMMIT_DEADLINE_SEC) -> dict:
+    def merge(self, updates: DataFrame) -> dict:
         """MERGE keyed on key_cols: rewrite ONLY live files whose stats
         range overlaps the updates (matched keys take the update, unmatched
         rows survive via anti-join), carry every other file by reference,
@@ -3004,9 +3040,7 @@ class TxLogTable:
         (the winners neither removed a touched file nor added one in our
         range), the same actions are serializable at the next version and
         are re-committed WITHOUT re-running the Spark read-rewrite. Only a
-        real overlap pays the rebase. Retries are deadline-bounded with
-        jittered backoff instead of a fixed cap, so fast appenders cannot
-        starve a slow merger. Returns commit stats.
+        real overlap pays the rebase. Returns commit stats.
 
         r7: pruning bounds derive from EVERY key column of the updates
         (plus the stats column), not just stats_col — a file overlapping
@@ -3019,7 +3053,7 @@ class TxLogTable:
         # bloom column chunks are read only when this merge actually
         # derived probes, extra_json never
         rcols = self._REWRITE_COLS + (("bloom",) if probes else ())
-        deadline = time.monotonic() + deadline_sec
+        st: dict = {}
 
         def rewrite(touched: list[dict]) -> list[dict]:
             if touched:
@@ -3036,52 +3070,21 @@ class TxLogTable:
             return self._write_data_files(merged.localCheckpoint(eager=True),
                                            regen_generated=True)
 
-        base = self.latest_version()
-        live = self._resolve(base, columns=rcols)
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        touched = self._prune_files(live, ranges, probes)
-        adds = rewrite(touched)
-        retries = rewrites = 0
-        while True:
-            actions = adds + [{"remove": a["path"]} for a in touched]
-            try:
-                v = self.commit(actions, base + 1, op="merge")
-                return {"version": v, "rewritten_files": len(touched),
-                        "carried_files": len(live) - len(touched),
-                        "added_files": sum(1 for a in adds if "add" in a),
-                        "retries": retries, "rebases": rewrites}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                live = self._resolve(base, columns=rcols)
-                new_touched = self._prune_files(live, ranges, probes)
-                # fast path requires an unchanged touched set by
-                # CONTENT identity (path + dv chain: an interleaved MoR
-                # delete keeps paths but changes what the file holds)
-                # and unchanged constraints (r7): an interleaved
-                # add_constraint must force re-validation of the staged
-                # rows, not a blind re-commit
-                if ({file_ident(a) for a in new_touched}
-                        == {file_ident(a) for a in touched}
-                        and (self.constraints(base),
-                             self.generated_columns(base))
-                            == cons0):
-                    # logical no-conflict: re-commit as-is, after the
-                    # schema-race revalidation (r9, ADVICE)
-                    adds = self._refresh_schema_action(adds)
-                    continue
-                touched = new_touched
-                cons0 = (self.constraints(base),
-                         self.generated_columns(base))
-                adds = rewrite(touched)
-                rewrites += 1
+        def plan(base):
+            st["live"] = self._resolve(base, columns=rcols)
+            touched = st["touched"] = self._prune_files(st["live"], ranges,
+                                                        probes)
+            return _Staged(self._reuse_key(touched, base),
+                           lambda: rewrite(touched) + _removes(touched))
 
-    def merge_into(self, source: DataFrame, clauses: list[tuple],
-                   deadline_sec: float = COMMIT_DEADLINE_SEC) -> dict:
+        out = self._commit_retrying("merge", plan)
+        return {"version": out.value,
+                "rewritten_files": len(st["touched"]),
+                "carried_files": len(st["live"]) - len(st["touched"]),
+                "added_files": _count(out.actions, "add"),
+                "retries": out.retries, "rebases": out.rebases}
+
+    def merge_into(self, source: DataFrame, clauses: list[tuple]) -> dict:
         """Full MERGE INTO semantics (r7): ordered WHEN clauses, the
         SQL/Delta shape the plain upsert ``merge()`` cannot express.
 
@@ -3106,9 +3109,7 @@ class TxLogTable:
         from the source itself (typed min/max over every key column plus
         the stats column — no caller assertion): only overlapping live
         files rewrite, the rest carry by reference, inserts ride the
-        same atomic commit. Retry protocol
-        is merge's: deadline-bounded jittered backoff + the logical
-        no-conflict fast path."""
+        same atomic commit."""
         for kind, _, assigns in clauses:
             if kind not in ("update", "delete", "insert"):
                 raise ValueError(f"merge_into: unknown clause {kind!r}")
@@ -3132,8 +3133,8 @@ class TxLogTable:
         probes = self._bloom_probes(source)
         # r12 (VERDICT #3): column-selective resolve — see merge()
         rcols = self._REWRITE_COLS + (("bloom",) if probes else ())
-        deadline = time.monotonic() + deadline_sec
         counts = {"updated": 0, "deleted": 0, "inserted": 0}
+        st: dict = {}
 
         non_key = [c for c in source.columns if c not in self.key_cols]
         src = source.select(
@@ -3141,15 +3142,15 @@ class TxLogTable:
             *[F.col(c).alias(f"src_{c}") for c in non_key],
             F.lit(True).alias("_m"))
 
-        track = self.row_tracking() is not None
-
-        def rewrite(touched: list[dict]) -> list[dict]:
+        def rewrite(touched: list[dict], base: int) -> list[dict]:
             # r10 row tracking: the target side carries its row ids, so
             # WHEN MATCHED UPDATE preserves identity; NOT MATCHED
             # inserts carry none and get fresh ids from the written
             # file's base allocation at commit
+            track = self.row_tracking(base) is not None
             target = (self._files_df(spark, touched, row_ids=track)
-                      if touched else self.read(spark).limit(0))
+                      if touched
+                      else self.read(spark, version=base).limit(0))
             tcols = target.columns
             joined = target.join(src, self.key_cols, "left")
             matched = F.coalesce(F.col("_m"), F.lit(False))
@@ -3217,55 +3218,30 @@ class TxLogTable:
             return self._write_data_files(out.localCheckpoint(eager=True),
                                            regen_generated=True)
 
-        base = self.latest_version()
-        live = self._resolve(base, columns=rcols)
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        touched = self._prune_files(live, ranges, probes)
-        adds = rewrite(touched)
-        retries = rebases = 0
-        while True:
-            actions = adds + [{"remove": a["path"]} for a in touched]
-            try:
-                v = self.commit(actions, base + 1, op="merge_into")
-                return {"version": v, "rewritten_files": len(touched),
-                        "carried_files": len(live) - len(touched),
-                        "added_files": sum(1 for a in adds if "add" in a),
-                        "retries": retries, "rebases": rebases, **counts}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                live = self._resolve(base, columns=rcols)
-                new_touched = self._prune_files(live, ranges, probes)
-                if ({file_ident(a) for a in new_touched}
-                        == {file_ident(a) for a in touched}
-                        and (self.constraints(base),
-                             self.generated_columns(base))
-                            == cons0):
-                    # logical no-conflict: re-commit as-is, after the
-                    # schema-race revalidation (r9, ADVICE)
-                    adds = self._refresh_schema_action(adds)
-                    continue
-                touched = new_touched
-                cons0 = (self.constraints(base),
-                         self.generated_columns(base))
-                adds = rewrite(touched)
-                rebases += 1
+        def plan(base):
+            st["live"] = self._resolve(base, columns=rcols)
+            touched = st["touched"] = self._prune_files(st["live"], ranges,
+                                                        probes)
+            return _Staged(self._reuse_key(touched, base),
+                           lambda: rewrite(touched, base)
+                           + _removes(touched))
+
+        out = self._commit_retrying("merge_into", plan)
+        return {"version": out.value,
+                "rewritten_files": len(st["touched"]),
+                "carried_files": len(st["live"]) - len(st["touched"]),
+                "added_files": _count(out.actions, "add"),
+                "retries": out.retries, "rebases": out.rebases, **counts}
 
     def optimize(self, target_files: int = 4,
-                 zorder_by: tuple[str, str] | None = None,
-                 deadline_sec: float = COMMIT_DEADLINE_SEC) -> dict:
+                 zorder_by: tuple[str, str] | None = None) -> dict:
         """Compact the live file set into `target_files` larger files in
         ONE commit (add compacted, remove all current) — the S9 small-file
         maintenance pass expressed as a table-format operation. Readers of
-        any existing snapshot are untouched (files are immutable); a
-        concurrent commit rebases and retries like merge (deadline-bounded
-        with jittered backoff; when the interleaved commits left the live
-        file set unchanged — e.g. an empty commit — the same actions are
-        re-committed without re-running the compaction).
+        any existing snapshot are untouched (files are immutable); when
+        the commits a retry lost to left the live file set unchanged —
+        e.g. an empty commit — the same actions are re-committed without
+        re-running the compaction.
 
         ``zorder_by=(colA, colB, ...)`` additionally Z-ORDERs the
         compacted output: each column is range-normalized to
@@ -3279,14 +3255,13 @@ class TxLogTable:
         each, the standard Z-order tradeoff (Delta recommends <= 4).
         Forces a rewrite even when the file count is already compact,
         since the point is the layout, not the count."""
-        deadline = time.monotonic() + deadline_sec
+        st: dict = {}
 
-        track = self.row_tracking() is not None
-
-        def compact(live: list[dict]) -> list[dict]:
+        def compact(live: list[dict], base: int) -> list[dict]:
             spark = _session()
             # r10 row tracking: compaction must not change identities
-            df = self._files_df(spark, live, row_ids=track)
+            df = self._files_df(spark, live,
+                                row_ids=self.row_tracking(base) is not None)
             if zorder_by is not None:
                 from service_level_reporting_spark.sources.sinks import (
                     _zvalue_n)
@@ -3327,47 +3302,27 @@ class TxLogTable:
                                           layout=False,
                                           regen_generated=True)
 
-        base = self.latest_version()
-        live = self._resolve(base)
-        # a DV-carrying file always qualifies: OPTIMIZE is also the DV
-        # PURGE (rewrite folds the mask in and drops the sidecar refs)
-        if not live or (len(live) <= target_files and zorder_by is None
-                        and not any(a.get("dv") for a in live)):
-            return {"version": base, "compacted": 0, "files": len(live)}
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        adds = compact(live)
-        retries = 0
-        while True:
-            actions = adds + [{"remove": a["path"]} for a in live]
-            try:
-                v = self.commit(actions, base + 1, op="optimize")
-                return {"version": v, "compacted": len(live),
-                        "files": sum(1 for a in adds if "add" in a),
-                        "retries": retries}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                new_live = self._resolve(base)
-                if ({file_ident(a) for a in new_live}
-                        == {file_ident(a) for a in live}
-                        and (self.constraints(base),
-                             self.generated_columns(base))
-                            == cons0):
-                    adds = self._refresh_schema_action(adds)
-                    continue        # live set unchanged: re-commit as-is
-                live = new_live
-                cons0 = (self.constraints(base),
-                         self.generated_columns(base))
-                adds = compact(live)
+        def plan(base):
+            live = st["live"] = self._resolve(base)
+            # a DV-carrying file always qualifies: OPTIMIZE is also the
+            # DV PURGE (rewrite folds the mask in and drops the sidecar
+            # refs)
+            if not live or (len(live) <= target_files and zorder_by is None
+                            and not any(a.get("dv") for a in live)):
+                return _Done({"version": base, "compacted": 0,
+                              "files": len(live)})
+            return _Staged(self._reuse_key(live, base),
+                           lambda: compact(live, base) + _removes(live))
+
+        out = self._commit_retrying("optimize", plan)
+        if not out.committed:
+            return out.value
+        return {"version": out.value, "compacted": len(st["live"]),
+                "files": _count(out.actions, "add"),
+                "retries": out.retries}
 
     def optimize_bin_pack(self, small_file_rows: int,
-                          target_rows_per_file: int | None = None,
-                          deadline_sec: float = COMMIT_DEADLINE_SEC
-                          ) -> dict:
+                          target_rows_per_file: int | None = None) -> dict:
         """SELECTIVE compaction (r8): compact only the live files that
         are undersized (live rows < ``small_file_rows``) or carry
         deletion vectors (folding their masks in — a targeted DV purge);
@@ -3381,22 +3336,16 @@ class TxLogTable:
         table. Output files target ``target_rows_per_file`` (default 8×
         the selection threshold); with ``cluster_by`` the shared writer
         re-clusters the compacted rows instead (AQE sizes the range
-        files). Same deadline/backoff retry + logical-conflict fast
-        path as every rewriting commit."""
+        files)."""
         if target_rows_per_file is None:
             target_rows_per_file = 8 * small_file_rows
-        deadline = time.monotonic() + deadline_sec
+        st: dict = {}
 
-        def select(live: list[dict]) -> list[dict]:
-            return [a for a in live
-                    if add_rows(a) < small_file_rows or a.get("dv")]
-
-        track = self.row_tracking() is not None
-
-        def compact(sel: list[dict]) -> list[dict]:
+        def compact(sel: list[dict], base: int) -> list[dict]:
             spark = _session()
-            df = self._files_df(spark, sel,
-                                row_ids=track).localCheckpoint(eager=True)
+            df = self._files_df(
+                spark, sel, row_ids=self.row_tracking(base) is not None
+            ).localCheckpoint(eager=True)
             if self.cluster_by:
                 return self._write_data_files(df, regen_generated=True)
             total = sum(add_rows(a) for a in sel)
@@ -3405,50 +3354,31 @@ class TxLogTable:
                                           regen_generated=True,
                                           layout=False)
 
-        base = self.latest_version()
-        live = self._resolve(base)
-        sel = select(live)
-        # a lone small clean file has nothing to merge WITH; DV carriers
-        # always qualify (the purge is the point)
-        if not sel or (len(sel) == 1 and not sel[0].get("dv")):
-            return {"version": base, "compacted": 0, "purged_dv": 0,
-                    "carried_files": len(live), "files": 0}
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        adds = compact(sel)
-        retries = 0
-        while True:
-            actions = adds + [{"remove": a["path"]} for a in sel]
-            try:
-                v = self.commit(actions, base + 1, op="optimize_bin_pack")
-                return {"version": v, "compacted": len(sel),
-                        "purged_dv": sum(1 for a in sel if a.get("dv")),
-                        "carried_files": len(live) - len(sel),
-                        "files": sum(1 for a in adds if "add" in a),
-                        "retries": retries}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                live = self._resolve(base)
-                new_sel = select(live)
-                if ({file_ident(a) for a in new_sel}
-                        == {file_ident(a) for a in sel}
-                        and (self.constraints(base),
-                             self.generated_columns(base))
-                            == cons0):
-                    adds = self._refresh_schema_action(adds)
-                    continue        # selection unchanged: re-commit as-is
-                sel = new_sel
-                cons0 = (self.constraints(base),
-                         self.generated_columns(base))
-                if not sel or (len(sel) == 1 and not sel[0].get("dv")):
-                    return {"version": base, "compacted": 0,
-                            "purged_dv": 0, "carried_files": len(live),
-                            "files": 0, "retries": retries}
-                adds = compact(sel)
+        def plan(base):
+            live = st["live"] = self._resolve(base)
+            sel = st["sel"] = [a for a in live
+                               if add_rows(a) < small_file_rows
+                               or a.get("dv")]
+            # a lone small clean file has nothing to merge WITH; DV
+            # carriers always qualify (the purge is the point)
+            if not sel or (len(sel) == 1 and not sel[0].get("dv")):
+                return _Done({"version": base, "compacted": 0,
+                              "purged_dv": 0, "carried_files": len(live),
+                              "files": 0})
+            return _Staged(self._reuse_key(sel, base),
+                           lambda: compact(sel, base) + _removes(sel))
+
+        out = self._commit_retrying("optimize_bin_pack", plan)
+        if not out.committed:
+            # a no-op found only after lost races reports them
+            return ({**out.value, "retries": out.retries}
+                    if out.retries else out.value)
+        sel = st["sel"]
+        return {"version": out.value, "compacted": len(sel),
+                "purged_dv": sum(1 for a in sel if a.get("dv")),
+                "carried_files": len(st["live"]) - len(sel),
+                "files": _count(out.actions, "add"),
+                "retries": out.retries}
 
     def vacuum(self, retain_versions: int = 3,
                min_age_sec: float = VACUUM_MIN_AGE_SEC,
@@ -3700,20 +3630,18 @@ class TxLogTable:
     # ---- row-level operations (r6: DELETE / UPDATE / RESTORE / CDF) ------
 
     def _rewrite_where(self, op: str, key_range: tuple[str, str] | None,
-                       make_output, deadline_sec: float,
-                       scope_cond=None, verify_scope: bool = True,
+                       make_output, scope_cond=None,
+                       verify_scope: bool = True,
                        column_ranges: dict | None = None,
-                       extra_adds: list[dict] | None = None) -> dict:
+                       insert_df: DataFrame | None = None) -> dict:
         """Shared copy-on-write machinery for DELETE/UPDATE: resolve the
         live set, stats-prune to the files whose [min,max] range can hold
         affected keys (``key_range`` over the stats column — None scopes
         every file, the conservative bound), rewrite ONLY those through
         ``make_output(src_df) -> (out_df, matched_rows)``, carry the rest
-        by reference, and commit removes+adds as one version. Retry
-        protocol is merge's: deadline-bounded, jittered backoff, and the
-        logical-conflict fast path (if the interleaved winners didn't
-        change which files we touch, the same actions re-commit without
-        re-running the Spark rewrite).
+        by reference, and commit removes+adds as one version.
+        ``insert_df`` (replace_where) stages once and lands in the same
+        commit.
 
         r7 (ADVICE): ``key_range`` is a caller ASSERTION that no row
         matching the predicate lives outside [lo, hi] of the stats column
@@ -3735,10 +3663,9 @@ class TxLogTable:
         ranges = self._phys_ranges(
             {c: (_stat_norm(b[0]), _stat_norm(b[1]))
              for c, b in (column_ranges or {}).items()})
-        deadline = time.monotonic() + deadline_sec
         matched = {"rows": 0}
-        # r10 row tracking: rewrites carry surviving rows' identities
-        track = self.row_tracking() is not None
+        st: dict = {}
+        inserts: dict = {}
 
         def prune(live: list[dict]) -> list[dict]:
             touched = self._overlapping(live, lo, hi)
@@ -3768,84 +3695,53 @@ class TxLogTable:
                     "wrong and would silently skip matches. Widen the "
                     "ranges (or pass None).")
 
-        def rewrite(touched: list[dict]) -> list[dict]:
+        def rewrite(touched: list[dict], base: int) -> list[dict]:
             if not touched:
                 matched["rows"] = 0
                 return []
             spark = _session()
-            out, n = make_output(self._files_df(spark, touched,
-                                                row_ids=track))
+            # r10 row tracking: rewrites carry surviving rows' identities
+            out, n = make_output(self._files_df(
+                spark, touched,
+                row_ids=self.row_tracking(base) is not None))
             matched["rows"] = n
-            adds = self._write_data_files(out.localCheckpoint(eager=True),
-                                          regen_generated=True)
-            # an all-rows-deleted file would be an add with 0 rows and no
-            # stats (min None => never prunable); drop it from the commit
-            return [a for a in adds
-                    if "metaData" in a or a["add"]["rows"] > 0]
+            return _nonempty(self._write_data_files(
+                out.localCheckpoint(eager=True), regen_generated=True))
 
-        extra = [a for a in (extra_adds or [])
-                 if "metaData" in a or a["add"]["rows"] > 0]
-        base = self.latest_version()
-        # r12 (VERDICT #3): CoW rewrites never read bloom/extra_json
-        live = self._resolve(base, columns=self._REWRITE_COLS)
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        touched = prune(live)
-        check_scope(live, touched)
-        adds = rewrite(touched)
-        retries = rebases = 0
-        while True:
-            actions = (adds + extra
-                       + [{"remove": a["path"]} for a in touched])
-            try:
-                v = self.commit(actions, base + 1, op=op)
-                return {"version": v, "rewritten_files": len(touched),
-                        "carried_files": len(live) - len(touched),
-                        "added_files": sum(1 for a in adds + extra
-                                           if "add" in a),
-                        "inserted_rows": sum(a["add"]["rows"]
-                                             for a in extra if "add" in a),
-                        "matched_rows": matched["rows"],
-                        "retries": retries, "rebases": rebases}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                live = self._resolve(base, columns=self._REWRITE_COLS)
-                new_touched = prune(live)
-                if ({file_ident(a) for a in new_touched}
-                        == {file_ident(a) for a in touched}
-                        and (self.constraints(base),
-                             self.generated_columns(base))
-                            == cons0):
-                    # logical no-conflict: re-commit as-is (after the
-                    # schema-race revalidation, r9 ADVICE — the rebase
-                    # path below re-derives through rewrite() instead)
-                    adds = self._refresh_schema_action(adds)
-                    extra = self._refresh_schema_action(extra)
-                    continue
-                touched = new_touched
-                extra = self._refresh_schema_action(extra)
-                new_meta = (self.constraints(base),
-                            self.generated_columns(base))
-                if new_meta != cons0 and extra:
-                    # an interleaved add_constraint / generation
-                    # expression must also gate the pre-staged insert
-                    # files (rewritten files re-validate inside
-                    # rewrite() via _write_data_files)
-                    self._revalidate_staged(extra, *new_meta)
-                cons0 = new_meta
+        def plan(base):
+            # r12 (VERDICT #3): CoW rewrites never read bloom/extra_json
+            live = st["live"] = self._resolve(base,
+                                              columns=self._REWRITE_COLS)
+            touched = st["touched"] = prune(live)
+            key = self._reuse_key(touched, base)
+            rules = key[1]
+            # the insert files are staged once and re-validated when the
+            # write rules change (rewritten files re-validate inside
+            # rewrite() via _write_data_files)
+            extra = st["extra"] = [] if insert_df is None else \
+                self._stage_once(inserts, rules, lambda: _nonempty(
+                    self._write_data_files(insert_df)))
+
+            def stage():
                 check_scope(live, touched)
-                adds = rewrite(touched)
-                rebases += 1
+                return rewrite(touched, base) + extra + _removes(touched)
+            return _Staged(key, stage)
+
+        out = self._commit_retrying(op, plan)
+        return {"version": out.value,
+                "rewritten_files": len(st["touched"]),
+                "carried_files": len(st["live"]) - len(st["touched"]),
+                "added_files": _count(out.actions, "add"),
+                "inserted_rows": sum(a["add"]["rows"]
+                                     for a in st["extra"] if "add" in a),
+                "matched_rows": matched["rows"],
+                "retries": out.retries, "rebases": out.rebases}
 
     def _delete_mor(self, cond, key_range, column_ranges,
-                    deadline_sec: float, verify_scope: bool,
+                    verify_scope: bool,
                     assignments: dict | None = None,
                     keys: DataFrame | None = None,
-                    append_adds: list[dict] | None = None) -> dict:
+                    append_df: DataFrame | None = None) -> dict:
         """DELETE as merge-on-read (r7 s2 deletion vectors): instead of
         rewriting every touched file (copy-on-write), record the deleted
         rows' (file, row_index) pairs in a DELETION VECTOR sidecar and
@@ -3863,8 +3759,8 @@ class TxLogTable:
         from it instead of file-diff reconstruction (the actions of a
         MoR commit are DV bookkeeping, not row churn). Stats/bloom on a
         DV-carrying add stay the ORIGINAL file's — conservative
-        supersets, still prune-safe. Same pruning, scope-verification,
-        and deadline/backoff retry protocol as copy-on-write delete.
+        supersets, still prune-safe. Same pruning and scope-verification
+        as copy-on-write delete.
 
         With ``assignments`` this is MERGE-ON-READ UPDATE: the matched
         rows' PRE-images are DV-masked (and ride the change-data sidecar
@@ -3872,7 +3768,12 @@ class TxLogTable:
         the same atomic commit — an update never rewrites untouched rows.
         The new file funnels through ``_write_data_files`` (CHECK
         constraints, clustered layout), and the retry fast path
-        additionally requires an unchanged constraint set."""
+        additionally requires unchanged write rules.
+
+        ``append_df`` (delete_keys) stages once and lands in the SAME
+        commit as the DV mask (r11, ADVICE — replicate fold atomicity),
+        so a reader never sees an updated row's pre-image masked but its
+        post-image absent."""
         spark = _session()
         lo, hi = key_range if key_range is not None else (None, None)
         ranges = self._phys_ranges(
@@ -3888,7 +3789,6 @@ class TxLogTable:
                 ranges = self._phys_ranges(
                     self._key_ranges(keys, list(keys.columns)))
             verify_scope = False
-        deadline = time.monotonic() + deadline_sec
         phys_key = None
         if keys is not None and len(keys.columns) == 1:
             phys_key = next(iter(self._phys_ranges(
@@ -3959,11 +3859,18 @@ class TxLogTable:
                     f"column_ranges={column_ranges} exclude file(s) with "
                     "predicate-matching rows — widen the ranges.")
 
-        track = self.row_tracking() is not None
+        st: dict = {}
+        appends: dict = {}
+        # the change-data sidecar of the staged mask, passed to every
+        # commit attempt as its ``extra`` record fields
+        cdf: dict = {}
 
-        def stage(touched: list[dict]):
+        def stage(touched: list[dict], base: int) -> list[dict]:
+            cdf.clear()
+            st["matched"] = 0
             if not touched:
-                return [], None, 0
+                return []
+            track = self.row_tracking(base) is not None
             src = self._files_df_meta(spark, touched, row_ids=track)
             if track:
                 # r10 row tracking: resolve each hit's stable id NOW
@@ -3998,9 +3905,9 @@ class TxLogTable:
             per = {r["__file"]: r["n"]
                    for r in hits.groupBy("__file")
                    .agg(F.count(F.lit(1)).alias("n")).collect()}
-            matched = sum(per.values())
+            matched = st["matched"] = sum(per.values())
             if not matched:
-                return [], None, 0
+                return []
             tag = uuid.uuid4().hex[:12]
             dv_rel, cdc_rel = f"dv/{tag}", f"cdc/{tag}"
             (hits.select(F.col("__file").alias("file"),
@@ -4012,7 +3919,7 @@ class TxLogTable:
             # the change-data sidecar is written with PHYSICAL names
             # (r9 column mapping) so CDF scans mix sidecars and data
             # files under ONE name set; readers map back to logical
-            l2p = _l2p(self.column_mapping())
+            l2p = _l2p(self.column_mapping(base))
             side_cols = [F.col(c).alias(l2p.get(c, c))
                          for c in data_cols]
             if track:
@@ -4049,81 +3956,50 @@ class TxLogTable:
                     new["rows"] = left
                     new["dv"] = list(a.get("dv", ())) + [dv_rel]
                     actions.append({"add": new})
-            return actions, {"cdf": cdc_rel}, matched
+            cdf["cdf"] = cdc_rel
+            return actions
 
-        base = self.latest_version()
-        live = self._resolve(base)
-        cons0 = (self.constraints(base),
-                 self.generated_columns(base))
-        touched = prune(live)
-        check_scope(live, touched)
-        actions, extra, matched = stage(touched)
-        op = "delete_mor" if assignments is None else "update_mor"
-        retries = rebases = 0
-        while True:
-            # r11 (ADVICE, replicate fold atomicity): pre-staged
-            # append_adds land in the SAME commit as the DV mask, so a
-            # reader never sees an updated row's pre-image masked but
-            # its post-image absent
-            all_actions = actions + list(append_adds or ())
-            if not all_actions:           # nothing matched: no commit
-                return {"version": base, "matched_rows": 0, "dv_files": 0,
-                        "removed_files": 0, "carried_files": len(live),
-                        "appended_files": 0,
-                        "retries": retries, "rebases": rebases}
-            try:
-                v = self.commit(all_actions, base + 1, op=op,
-                                extra=extra)
-                return {"version": v, "matched_rows": matched,
-                        "dv_files": sum(1 for a in actions if "add" in a
-                                        and a["add"].get("dv")),
-                        "new_files": sum(1 for a in actions if "add" in a
-                                         and not a["add"].get("dv")),
-                        "removed_files": sum(1 for a in actions
-                                             if "remove" in a),
-                        "carried_files": len(live) - len(touched),
-                        "appended_files": sum(1 for a in (append_adds
-                                                          or ())
-                                              if "add" in a),
-                        "retries": retries, "rebases": rebases}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
-                base = self.latest_version()
-                live = self._resolve(base)
-                new_touched = prune(live)
-                new_cons = (self.constraints(base),
-                            self.generated_columns(base))
-                if append_adds:
-                    append_adds = self._refresh_schema_action(
-                        list(append_adds))
-                    if new_cons != cons0:
-                        # staged append files were validated against the
-                        # OLD rule set — re-check before re-committing
-                        self._revalidate_staged(append_adds, *new_cons)
-                # fast path needs identical adds INCLUDING dv chains (an
-                # interleaved MoR delete on the same file must re-stage)
-                # and, when staging new rows, an unchanged constraint set
-                # r11 (ADVICE): compare the full (constraints, gens)
-                # TUPLE — the r10 diff changed cons0's shape but left
-                # this comparison on the bare dict, so it was always
-                # False and MoR UPDATE re-staged on every conflict.
-                if ([file_ident(a) for a in new_touched]
-                        == [file_ident(a) for a in touched]
-                        and (assignments is None or new_cons == cons0)):
-                    cons0 = new_cons
-                    actions = self._refresh_schema_action(actions)
-                    continue
-                touched = new_touched
-                cons0 = new_cons
+        def plan(base):
+            live = st["live"] = self._resolve(base)
+            touched = st["touched"] = prune(live)
+            rules = self._write_rules(base)
+            appended = st["appended"] = [] if append_df is None else \
+                self._stage_once(appends, rules,
+                                 lambda: self._write_data_files(append_df))
+            # fast path needs identical adds INCLUDING dv chains (an
+            # interleaved MoR delete on the same file must re-stage)
+            # and, when staging new rows, unchanged write rules
+            key = [file_ident(a) for a in touched] + (
+                [] if assignments is None else [rules])
+
+            def stage_all():
                 check_scope(live, touched)
-                actions, extra, matched = stage(touched)
-                rebases += 1
+                mask = st["mask"] = stage(touched, base)
+                if not mask + appended:   # nothing matched: no commit
+                    return _Done({"version": base, "matched_rows": 0,
+                                  "dv_files": 0, "removed_files": 0,
+                                  "carried_files": len(live),
+                                  "appended_files": 0})
+                return mask + appended
+            return _Staged(key, stage_all)
+
+        out = self._commit_retrying(
+            "delete_mor" if assignments is None else "update_mor", plan,
+            extra=cdf)
+        counts = {"retries": out.retries, "rebases": out.rebases}
+        if not out.committed:
+            return {**out.value, **counts}
+        mask = st["mask"]
+        return {"version": out.value, "matched_rows": st["matched"],
+                "dv_files": sum(1 for a in mask if "add" in a
+                                and a["add"].get("dv")),
+                "new_files": sum(1 for a in mask if "add" in a
+                                 and not a["add"].get("dv")),
+                "removed_files": _count(mask, "remove"),
+                "carried_files": len(st["live"]) - len(st["touched"]),
+                "appended_files": _count(st["appended"], "add"), **counts}
 
     def delete(self, condition, key_range: tuple[str, str] | None = None,
-               deadline_sec: float = COMMIT_DEADLINE_SEC,
                verify_scope: bool = True,
                column_ranges: dict | None = None,
                mode: str = "cow") -> dict:
@@ -4146,7 +4022,7 @@ class TxLogTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "mor":
             return self._delete_mor(cond, key_range, column_ranges,
-                                    deadline_sec, verify_scope)
+                                    verify_scope)
         if mode != "cow":
             raise ValueError(f"txlog delete: unknown mode {mode!r} "
                              "(use 'cow' or 'mor')")
@@ -4156,12 +4032,11 @@ class TxLogTable:
             return src.filter(~c), src.filter(c).count()
 
         return self._rewrite_where("delete", key_range, make_output,
-                                   deadline_sec, scope_cond=cond,
+                                   scope_cond=cond,
                                    verify_scope=verify_scope,
                                    column_ranges=column_ranges)
 
     def delete_keys(self, keys: DataFrame,
-                    deadline_sec: float = COMMIT_DEADLINE_SEC,
                     append_df: DataFrame | None = None) -> dict:
         """DELETE rows whose columns match a KEY FRAME — semi-join
         membership on the frame's columns (r10 s2). The frame-sourced
@@ -4189,14 +4064,11 @@ class TxLogTable:
         inserts of the commit's new paths."""
         if not keys.columns:
             raise ValueError("txlog delete_keys: empty key frame schema")
-        adds = (self._write_data_files(append_df)
-                if append_df is not None else None)
-        return self._delete_mor(None, None, None, deadline_sec, False,
-                                keys=keys, append_adds=adds)
+        return self._delete_mor(None, None, None, False, keys=keys,
+                                append_df=append_df)
 
     def update(self, condition, assignments: dict,
                key_range: tuple[str, str] | None = None,
-               deadline_sec: float = COMMIT_DEADLINE_SEC,
                verify_scope: bool = True,
                column_ranges: dict | None = None,
                mode: str = "cow") -> dict:
@@ -4209,8 +4081,7 @@ class TxLogTable:
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode == "mor":
             return self._delete_mor(cond, key_range, column_ranges,
-                                    deadline_sec, verify_scope,
-                                    assignments=assignments)
+                                    verify_scope, assignments=assignments)
         if mode != "cow":
             raise ValueError(f"txlog update: unknown mode {mode!r} "
                              "(use 'cow' or 'mor')")
@@ -4238,13 +4109,12 @@ class TxLogTable:
             return out, src.filter(c).count()
 
         return self._rewrite_where("update", key_range, make_output,
-                                   deadline_sec, scope_cond=cond,
+                                   scope_cond=cond,
                                    verify_scope=verify_scope,
                                    column_ranges=column_ranges)
 
     def replace_where(self, df: DataFrame, condition,
                       key_range: tuple[str, str] | None = None,
-                      deadline_sec: float = COMMIT_DEADLINE_SEC,
                       verify_scope: bool = True,
                       column_ranges: dict | None = None) -> dict:
         """INSERT OVERWRITE ... WHERE — Delta's ``replaceWhere``: in ONE
@@ -4256,12 +4126,12 @@ class TxLogTable:
         Delta-parity input validation: every incoming row must itself
         satisfy the predicate (a row outside the replaced region would
         silently widen the overwrite) — violations raise with nothing
-        committed. The new files are staged ONCE before the retry loop
-        (they don't depend on the snapshot); only the delete-side rewrite
-        rebases on conflicts, re-using delete's stats pruning, the
-        ``key_range``/``column_ranges`` assertions + verify-scope probe,
-        and the constraint gate (an interleaved add_constraint re-validates
-        the staged inserts too)."""
+        committed. The new files are staged ONCE (they don't depend on
+        the snapshot); only the delete-side rewrite rebases on conflicts,
+        re-using delete's stats pruning, the ``key_range``/
+        ``column_ranges`` assertions + verify-scope probe, and the
+        constraint gate (an interleaved add_constraint re-validates the
+        staged inserts too)."""
         cond = F.expr(condition) if isinstance(condition, str) else condition
         stray = (df.filter(~F.coalesce(cond, F.lit(False)))
                  .limit(1).count())
@@ -4270,20 +4140,18 @@ class TxLogTable:
                 "txlog replace_where: the incoming frame has row(s) NOT "
                 "matching the predicate — they fall outside the replaced "
                 "region. Fix the frame or widen the predicate.")
-        extra = self._write_data_files(df)
 
         def make_output(src: DataFrame):
             c = F.coalesce(cond, F.lit(False))
             return src.filter(~c), src.filter(c).count()
 
         return self._rewrite_where("replace_where", key_range, make_output,
-                                   deadline_sec, scope_cond=cond,
+                                   scope_cond=cond,
                                    verify_scope=verify_scope,
                                    column_ranges=column_ranges,
-                                   extra_adds=extra)
+                                   insert_df=df)
 
-    def restore(self, version: int,
-                deadline_sec: float = COMMIT_DEADLINE_SEC) -> dict:
+    def restore(self, version: int) -> dict:
         """RESTORE TABLE TO VERSION — a new commit whose live set equals
         the target snapshot's: add back files it had that are no longer
         live, remove files it lacked. Data files are immutable so this is
@@ -4301,10 +4169,11 @@ class TxLogTable:
             raise ValueError(
                 f"txlog restore: {len(gone)} data file(s) of version "
                 f"{version} were vacuumed; cannot restore (first: {gone[0]})")
-        deadline = time.monotonic() + deadline_sec
-        retries = 0
-        while True:
-            base = self.latest_version()
+        cfg_t = self.effective_config(version)
+        cfg_changed = False
+
+        def plan(base):
+            nonlocal cfg_changed
             cur = {a["path"]: a for a in self._resolve(base)}
             actions = (
                 # re-add when missing OR when the live add's CONTENT
@@ -4343,38 +4212,29 @@ class TxLogTable:
                 m_t = {"mode": "name", "fields": fields, "maxId": mid}
             if m_now is not None or m_t is not None:
                 actions.append({"columnMapping": m_t})
-            cfg_t = self.effective_config(version)
             cfg_changed = cfg_t != self.effective_config(base)
             if cfg_changed:
                 actions.append({"config": cfg_t})
-            try:
-                v = self.commit(actions, base + 1, op="restore")
-                if cfg_changed:      # handle follows the restored config
-                    self.key_cols = list(cfg_t["key_cols"])
-                    self.stats_col = cfg_t["stats_col"]
-                    self.cluster_by = cfg_t.get("cluster_by") or None
-                    self.bloom_col = cfg_t.get("bloom_col")
-                return {"version": v, "restored_to": version,
-                        "added_files": sum(1 for a in actions if "add" in a),
-                        "removed_files": sum(1 for a in actions
-                                             if "remove" in a),
-                        "retries": retries}
-            except VersionConflict:
-                if time.monotonic() >= deadline:
-                    raise
-                _backoff(retries)
-                retries += 1
+            return actions
 
-    def restore_to_timestamp(self, ts: float,
-                             deadline_sec: float = COMMIT_DEADLINE_SEC
-                             ) -> dict:
+        out = self._commit_retrying("restore", plan)
+        if cfg_changed:              # handle follows the restored config
+            self.key_cols = list(cfg_t["key_cols"])
+            self.stats_col = cfg_t["stats_col"]
+            self.cluster_by = cfg_t.get("cluster_by") or None
+            self.bloom_col = cfg_t.get("bloom_col")
+        return {"version": out.value, "restored_to": version,
+                "added_files": _count(out.actions, "add"),
+                "removed_files": _count(out.actions, "remove"),
+                "retries": out.retries}
+
+    def restore_to_timestamp(self, ts: float) -> dict:
         """RESTORE TABLE TO TIMESTAMP AS OF (r12, Delta parity): the
         target version resolves through the O(log n) monotonic
         in-commit-timestamp binary search (version_at_timestamp —
         header-only probes), then delegates to restore(). Same vacuum
         caveat: fails cleanly if a target file is gone."""
-        return self.restore(self.version_at_timestamp(float(ts)),
-                            deadline_sec=deadline_sec)
+        return self.restore(self.version_at_timestamp(float(ts)))
 
     def changes_between_timestamps(self, spark: SparkSession,
                                    from_ts: float,

@@ -514,6 +514,22 @@ def test_mapping_post_enable_column_reads_without_merge_schema(
         spark.read.format("txlog").load(table_path).collect()
 
 
+def test_replace_where_new_column_on_mapped_table(spark, table_path):
+    """A replace_where frame that brings a NEW column to a mapped table
+    stages a columnMappingAdd action next to its adds; the zero-row add
+    filter used to index it as an add and fail with KeyError."""
+    t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
+    t.append(_frame(spark, [("a", 1, "x"), ("b", 2, "y")]))
+    t.enable_column_mapping()
+    res = t.replace_where(
+        _frame(spark, [("a", 5, "x", 7.5)],
+               "k string, v long, tag string, score double"),
+        F.col("k") == "a")
+    assert res["inserted_rows"] == 1
+    got = {r["k"]: (r["v"], r["score"]) for r in t.read(spark).collect()}
+    assert got == {"a": (5, 7.5), "b": (2, None)}
+
+
 def test_protocol_table_features(spark, table_path):
     """r10 (VERDICT #8): named table features under (3,7) semantics —
     an UNKNOWN reader feature raises the pinned ProtocolError naming
