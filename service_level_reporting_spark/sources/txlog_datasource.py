@@ -11,16 +11,16 @@ bespoke Python API:
   is PINNED once at analysis time (r7, ADVICE): schema inference and
   partition planning see the SAME version even if a concurrent commit
   lands between them — Delta's analysis-time snapshot rule.
-* **Filter pushdown that reaches the LOG** — ``pushFilters`` intercepts
-  comparisons on the table's stats column and prunes whole files by the
-  commit log's min/max BEFORE any partition is planned: the scan never
-  even opens a file the log proves irrelevant. All filters are returned
-  as unhandled so Spark still applies them exactly (prune-only contract —
-  the same split Delta's data skipping uses). Pruning only fires when the
-  stats column's STRING ordering matches its value ordering (string /
-  timestamp / date); for numeric stats ('9' > '10' lexicographically) it
-  is disabled rather than silently losing rows (r7, ADVICE) — unlike
-  merge pruning, Spark's re-applied filter cannot recover a skipped file.
+* **Filter pushdown that reaches the LOG** — ``pushFilters`` collects
+  per-column bounds and prunes whole files by the commit log's typed
+  per-file stats (``file_may_match``, the same decision every rewrite's
+  pruner makes) BEFORE any partition is planned: the scan never even
+  opens a file the log proves irrelevant. All filters are returned as
+  unhandled so Spark still applies them exactly (prune-only contract —
+  the same split Delta's data skipping uses). Numbers compare
+  numerically and a cross-kind bound never prunes, so no '9' > '10'
+  string trap can skip a file — Spark's re-applied filter cannot
+  recover a skipped file.
 * **Schema from the COMMIT LOG** (r8, VERDICT): the snapshot schema
   derives from the log's checkpoint-carried ``metaData`` actions —
   O(checkpoint interval) log reads at analysis, never an O(n_files)
@@ -79,24 +79,6 @@ class _FilePart(InputPartition):
     rcv: int | None = None       # the add's default_rcv
 
 
-def _stats_value(v) -> str:
-    """Filter value -> the log's string-stats domain. Timestamps arrive as
-    datetime and str() to 'YYYY-MM-DD HH:MM:SS[.ffffff]' — the same form
-    pyarrow footer statistics stringify to, so lexicographic compare is
-    order-correct (the stats column's documented contract)."""
-    return str(v)
-
-
-def _order_safe(arrow_type) -> bool:
-    """True when str() of the type's values orders the same as the values
-    themselves — ISO timestamps/dates and plain strings do; numerics do
-    NOT ('9' > '10'), so log-stats pruning must not fire on them."""
-    import pyarrow.types as pt
-
-    return (pt.is_string(arrow_type) or pt.is_large_string(arrow_type)
-            or pt.is_timestamp(arrow_type) or pt.is_date(arrow_type))
-
-
 def _log_schema(t: TxLogTable, version: int, merge: bool):
     """Arrow snapshot schema from the COMMIT LOG's metaData actions (r8,
     VERDICT item 1): O(checkpoint interval) log reads instead of opening
@@ -131,8 +113,7 @@ def _log_schema(t: TxLogTable, version: int, merge: bool):
 def _pin_snapshot(path: str, options) -> dict:
     """Resolve one read's snapshot: pinned version (latest at analysis
     time unless given), changes-range end, the arrow target schema over
-    exactly that snapshot's files, and whether the stats column's type
-    makes log-stats pruning order-safe."""
+    exactly that snapshot's files, and its column mapping."""
     t = TxLogTable.open(path)
     mode = options.get("mode", "")
     merge = str(options.get("mergeSchema", "false")).lower() == "true"
@@ -180,15 +161,13 @@ def _pin_snapshot(path: str, options) -> dict:
         raise ValueError("txlog source: empty table (no snapshot)")
     schema = _log_schema(t, ending if mode == "changes" else version,
                          merge)
-    stats_safe = (t.stats_col in schema.names
-                  and _order_safe(schema.field(t.stats_col).type))
     # r9 column mapping: executors project physical parquet names to the
     # pinned snapshot's logical schema; pruning translates its bounds
     m = t.column_mapping(ending if mode == "changes" else version)
     l2p = ({f["logical"]: f["physical"] for f in m["fields"]}
            if m is not None else None)
     return {"version": version, "ending": ending,
-            "schema": schema, "stats_safe": stats_safe, "mapping": l2p,
+            "schema": schema, "mapping": l2p,
             "row_ids": row_ids}
 
 
@@ -297,14 +276,10 @@ class TxLogBatchReader(DataSourceReader):
         self.version = pin["version"]
         self.ending = pin["ending"]
         self.target_schema = pin["schema"]        # arrow, padded to on read
-        self.stats_safe = pin["stats_safe"]       # ordering-safe stats col?
         self.mapping = pin.get("mapping")         # logical->physical (r9)
         self.row_ids = pin.get("row_ids", False)  # withRowIds (r10 s2)
         t = TxLogTable.open(path)
-        self.stats_col = t.stats_col
         self._table = t
-        self.lo: str | None = None     # legacy bounds on stats_col (string
-        self.hi: str | None = None     # domain — pre-typed-stats adds)
         self.bounds: dict[str, list] = {}   # typed bounds, ANY column (r7)
         self.not_null: set[str] = set()     # IsNotNull pushdowns
         self.null_only: set[str] = set()    # IsNull pushdowns
@@ -331,18 +306,12 @@ class TxLogBatchReader(DataSourceReader):
     def pushFilters(self, filters):
         """Collect per-column pruning bounds; EVERYTHING is yielded back
         as unhandled (Spark re-applies exactly; we only use the bounds to
-        skip whole files via the log's stats). Two stat domains (r7):
-
-        * **Typed stats** (adds carrying ``stats``): comparisons, ``In``,
-          ``IsNull``/``IsNotNull`` prune on ANY recorded column — numeric
-          values compare numerically, so the '9' > '10' string trap
-          cannot fire, and a cross-kind comparison never prunes
-          (``file_may_match``'s conservative contract).
-        * **Legacy string stats** (pre-r7 adds: only stats_col min/max
-          strings): bounds fire only when the stats column's string
-          ordering is value ordering (string/timestamp/date) — disabled
-          for numerics rather than silently losing rows, since a skipped
-          file is unrecoverable."""
+        skip whole files via the log's typed stats, the one stats
+        domain): comparisons, ``In``, ``IsNull``/``IsNotNull`` prune on
+        ANY recorded column, the stats column included — numeric values
+        compare numerically, so the '9' > '10' string trap cannot fire,
+        and a cross-kind comparison never prunes (``file_may_match``'s
+        conservative contract)."""
         for f in filters:
             attr = getattr(f, "attribute", None)
             col = attr[0] if attr is not None and len(attr) == 1 else None
@@ -361,17 +330,6 @@ class TxLogBatchReader(DataSourceReader):
                     if (col == self._table.bloom_col
                             and isinstance(f, (EqualTo, EqualNullSafe))):
                         self._probe(([_bloom_canon(f.value)]))
-                    if (self.stats_safe and col == self.stats_col
-                            and not isinstance(f, EqualNullSafe)):
-                        s = _stats_value(f.value)
-                        if isinstance(f, (GreaterThan, GreaterThanOrEqual,
-                                          EqualTo)):
-                            self.lo = (s if self.lo is None
-                                       else max(self.lo, s))
-                        if isinstance(f, (LessThan, LessThanOrEqual,
-                                          EqualTo)):
-                            self.hi = (s if self.hi is None
-                                       else min(self.hi, s))
                 elif isinstance(f, In):
                     vs = [_stat_norm(x) for x in f.value]
                     if (vs and all(v is not None for v in vs)
@@ -408,13 +366,6 @@ class TxLogBatchReader(DataSourceReader):
             null_only = {l2p.get(c, c) for c in self.null_only}
 
             def overlaps(a: dict) -> bool:
-                # legacy single-column string bounds (one-sided allowed;
-                # statless files never prune)
-                if a["min"] is not None:
-                    if self.lo is not None and a["max"] < self.lo:
-                        return False
-                    if self.hi is not None and a["min"] > self.hi:
-                        return False
                 bl = a.get("bloom")
                 if (bl and self.bloom_probes is not None
                         and not bloom_may_contain(bl, self.bloom_probes)):

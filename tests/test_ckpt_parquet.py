@@ -74,7 +74,6 @@ def test_column_selective_reads_counted(spark, table_path, monkeypatch):
     # every add carries a realistic typed-stats payload
     n = 100_000
     fake = [{"path": f"data/fake/{i:06d}.parquet", "rows": 1000,
-             "min": f"k{i:06d}", "max": f"k{i + 1:06d}",
              "stats": {"k": [f"k{i:06d}", f"k{i + 1:06d}"],
                        "v": [i, i + 1000]}}
             for i in range(n)]

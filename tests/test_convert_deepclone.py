@@ -43,7 +43,8 @@ def test_convert_registers_in_place_and_ops_work(spark, work_dir):
     live = t._resolve()
     # every original file registered in place, with footer metadata
     assert len(live) == n_files
-    assert all("stats" in a and a["rows"] >= 1 and a["min"] is not None
+    assert all("stats" in a and a["rows"] >= 1
+               and a["stats"]["k"]["lo"] is not None
                for a in live)
     assert {(r["k"], r["v"]) for r in t.read(spark).collect()} \
         == {("a", 1), ("b", 2), ("c", 3)}

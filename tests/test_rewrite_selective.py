@@ -28,8 +28,8 @@ from service_level_reporting_spark.sources.txlog import (
     TxLogTable, bloom_build)
 
 # the physical part columns a probe-less rewrite may request
-REWRITE_PHYS = {"path", "rows", "min", "max", "dv",
-                "base_row_id", "default_rcv", "stats_json"}
+REWRITE_PHYS = {"path", "rows", "dv", "base_row_id", "default_rcv",
+                "stats_json"}
 
 
 @pytest.fixture()
@@ -53,7 +53,6 @@ def _plant(t, spark, n=100_000):
         t.append(_frame(spark, v))
     bloom = bloom_build([f"z{i:06d}" for i in range(64)])
     fake = [{"path": f"data/fake/{i:06d}.parquet", "rows": 1000,
-             "min": f"z{i:06d}", "max": f"z{i + 1:06d}",
              "stats": {"k": {"lo": f"z{i:06d}", "hi": f"z{i + 1:06d}",
                              "nulls": 0},
                        "v": {"lo": i, "hi": i + 1000, "nulls": 0}},
@@ -130,7 +129,7 @@ def test_cow_delete_requests_no_bloom_or_extra(spark, table_path,
     # the 1-row k007 file became an all-deleted rewrite: pure remove
     assert res["added_files"] == 0
     live = TxLogTable.open(table_path)._resolve()
-    assert "k007" not in {a.get("min") for a in live}
+    assert "k007" not in {a["stats"]["k"]["lo"] for a in live}
 
 
 def test_merge_with_probes_requests_bloom(spark, table_path, monkeypatch):

@@ -139,8 +139,10 @@ def test_stats_are_recorded_and_garbage_log_fails(spark, table_path):
     with open(t._commit_path(0)) as fh:
         actions = json.load(fh)["actions"]
     adds = [a["add"] for a in actions if "add" in a]
-    assert adds and all(a["min"] is not None and a["max"] is not None
-                        and a["min"].startswith("2024-01-01") for a in adds)
+    assert adds and all(a["stats"]["minute"]["lo"] is not None
+                        and a["stats"]["minute"]["hi"] is not None
+                        and a["stats"]["minute"]["lo"].startswith(
+                            "2024-01-01") for a in adds)
     # a hole in the log (missing version) must fail resolution loudly
     t.commit([], 1)
     t.commit([], 2)
@@ -1563,9 +1565,10 @@ def test_typed_multicol_stats_and_pruning(spark, table_path):
     with pytest.raises(ValueError, match="column_ranges"):
         t.update("v >= 0", {"v": "v + 1"}, column_ranges={"k": (0, 5)})
 
-    # adds without typed stats (pre-r7 log) are conservatively included
+    # adds without typed stats for a bounded column are conservatively
+    # included
     from service_level_reporting_spark.sources.txlog import file_may_match
-    assert file_may_match({"min": "a", "max": "a"}, {"k": (0, 1)})
+    assert file_may_match({"path": "f.parquet", "rows": 1}, {"k": (0, 1)})
     # cross-kind bounds never prune (numeric filter vs string stats)
     assert file_may_match({"stats": {"k": {"lo": "5", "hi": "9"}}},
                           {"k": (100, 200)})

@@ -87,7 +87,7 @@ def main(n_docs: int = 1_000_000) -> dict:
             .repartitionByRange(4, F.col("doc_id")))
         t.update(f"doc_id < {n_upd}",
                  {"text": "concat(text, ' updated tail words')"},
-                 key_range=("0", str(n_upd)), verify_scope=False,
+                 key_range=(0, n_upd), verify_scope=False,
                  mode="mor")
         t.delete_keys(spark.range(n_upd, n_upd + n_del)
                       .select(F.col("id").alias("doc_id")))
