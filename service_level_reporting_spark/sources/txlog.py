@@ -1807,8 +1807,7 @@ class TxLogTable:
         fresh = [a for a in self._resolve(base)
                  if a["path"] not in validated_paths]
         if fresh:
-            df = self._files_df(_session(), fresh, merge_schema=True,
-                                version=base)
+            df = self._files_df(_session(), fresh, version=base)
             if cons:
                 self._check(df, cons)
             for gname, g in gens.items():
@@ -1843,8 +1842,7 @@ class TxLogTable:
                 validated = self._revalidate_since(
                     validated, base, {name: expr}, {})
             elif base >= 0:
-                snap = self.read(_session(), version=base,
-                                 merge_schema=True)
+                snap = self.read(_session(), version=base)
                 self._check(snap, {name: expr})
                 validated = {a["path"] for a in self._resolve(base)}
             else:
@@ -1927,8 +1925,7 @@ class TxLogTable:
                         "expression promises a value. Rewrite the table "
                         "with the column materialized (overwrite), then "
                         "declare it.")
-                snap = self.read(_session(), version=base,
-                                 merge_schema=True)
+                snap = self.read(_session(), version=base)
                 bad = (snap.filter(~F.col(name).eqNullSafe(
                            F.expr(expr).cast(dtype)))
                        .limit(1).count())
@@ -2199,17 +2196,19 @@ class TxLogTable:
         This is the one place that decides whether ``df`` is
         materialized: callers hand in their lazy frame (files land in a
         fresh subdirectory, so a rewrite may read the files its commit
-        removes). The frame is checkpointed once only when a validating
-        action must run before the write — CHECK constraints or
-        generated-column validation — so validation and write see the
-        same rows, the plan runs once, and a caller's ``observe`` metrics
-        count every row; otherwise the write is the frame's only
-        action."""
+        removes). The frame is checkpointed once only when some other
+        job must run its plan before the write — a validating action
+        (CHECK constraints, generated-column validation) or the
+        ``cluster_by`` range partitioner's sampling job — so every job
+        sees the same rows, the plan runs once, and a caller's
+        ``observe`` metrics count each row once; otherwise the write is
+        the frame's only action."""
         self._check_protocol(write=True)     # r9: fail before staging
         gens = self.generated_columns()
         cons = self.constraints()
-        if cons or (not regen_generated
-                    and any(g in df.columns for g in gens)):
+        clustered = layout and bool(self.cluster_by)
+        if cons or clustered or (not regen_generated
+                                 and any(g in df.columns for g in gens)):
             df = df.localCheckpoint(eager=True)
         # r10 s2 generated columns: compute-if-absent BEFORE anything
         # else sees the frame (constraints may reference the generated
@@ -2259,7 +2258,7 @@ class TxLogTable:
         else:
             meta_action = self._schema_action(data_df)
 
-        if layout and self.cluster_by:
+        if clustered:
             df = df.repartitionByRange(*self.cluster_by)
 
         # r9 column mapping: once enabled, data files are written with
@@ -2414,7 +2413,6 @@ class TxLogTable:
         return n
 
     def _files_df_meta(self, spark: SparkSession, files: list[dict],
-                       merge_schema: bool = False,
                        version: int | None = None,
                        row_ids: bool = False) -> DataFrame:
         """The central file reader, deletion-vector-aware (r7 s2): data
@@ -2445,35 +2443,34 @@ class TxLogTable:
         a read runs no footer-inference job, every recorded column is
         present (NULL in a file that lacks it, whichever file Spark would
         have sampled), and a narrower physical type up-casts per file
-        (r11 typeWidening). ``merge_schema`` matters only for a log with
-        no recorded schema, which falls back to footer inference. DV
+        (r11 typeWidening). Every add-writing path records the schema,
+        so files with none recorded are a corrupt log and raise. DV
         sidecars read with their fixed (file, row_index) schema."""
+        from pyspark.sql.types import LongType, StructField, StructType
+
         prefix = os.path.abspath(self.path) + "/"
         mapping = self.column_mapping(version)
-        read_schema = None
         sch, _ = self.table_schema_info(version)
-        if sch is not None:
-            from pyspark.sql.types import LongType, StructField, StructType
-            l2p = _l2p(mapping) if mapping is not None else {}
-            fields = [StructField(l2p.get(f.name, f.name),
-                                  _norm_dtype(f.dataType), True)
-                      for f in sch.fields]
-            if row_ids:
-                fields += [StructField(ROW_ID_COL, LongType(), True),
-                           StructField(ROW_VER_COL, LongType(), True)]
-            read_schema = StructType(fields)
-        elif row_ids:
-            # mixed files (some carry materialized ids, some don't) must
-            # all surface the system columns, null where absent
-            merge_schema = True
+        if sch is None:
+            raise ValueError(
+                f"txlog: snapshot {version} of {self.path} has live files "
+                "but no recorded schema (no metaData action in the log) "
+                "— the log is corrupt.")
+        l2p = _l2p(mapping) if mapping is not None else {}
+        fields = [StructField(l2p.get(f.name, f.name),
+                              _norm_dtype(f.dataType), True)
+                  for f in sch.fields]
+        if row_ids:
+            # r10 row tracking: materialized id columns are storage, not
+            # schema — only a row-id read asks for them (NULL in a file
+            # that carries none)
+            fields += [StructField(ROW_ID_COL, LongType(), True),
+                       StructField(ROW_VER_COL, LongType(), True)]
+        read_schema = StructType(fields)
 
         def scan(subset: list[dict]) -> DataFrame:
             paths = [os.path.join(self.path, a["path"]) for a in subset]
-            reader = (spark.read.schema(read_schema)
-                      if read_schema is not None
-                      else spark.read.option("mergeSchema",
-                                             str(merge_schema).lower()))
-            df = reader.parquet(*paths)
+            df = spark.read.schema(read_schema).parquet(*paths)
             fp = F.regexp_replace(F.col("_metadata.file_path"),
                                   "^file:(//)?", "")
             # table-relative for own files; FULL path for clone-foreign
@@ -2483,19 +2480,8 @@ class TxLogTable:
                          F.expr(f"substring(regexp_replace("
                                 f"_metadata.file_path, '^file:(//)?', ''), "
                                 f"{len(prefix) + 1})")).otherwise(fp)
-            df = (df.withColumn("__file", rel)
-                    .withColumn("__ri", F.col("_metadata.row_index")))
-            if not row_ids:
-                # r10 row tracking: materialized id columns are storage,
-                # not schema — strip them from every normal read (and
-                # BEFORE the clean/dirty union, whose branches may infer
-                # them inconsistently from different footers)
-                df = df.drop(ROW_ID_COL, ROW_VER_COL)
-            else:
-                for c in (ROW_ID_COL, ROW_VER_COL):
-                    if c not in df.columns:
-                        df = df.withColumn(c, F.lit(None).cast("long"))
-            return df
+            return (df.withColumn("__file", rel)
+                      .withColumn("__ri", F.col("_metadata.row_index")))
 
         clean = [a for a in files if not a.get("dv")]
         dirty = [a for a in files if a.get("dv")]
@@ -2513,8 +2499,7 @@ class TxLogTable:
         masked = scan(dirty).join(dv, ["__file", "__ri"], "left_anti")
         if not clean:
             return self._apply_mapping(masked, mapping, version)
-        out = scan(clean).unionByName(masked,
-                                      allowMissingColumns=merge_schema)
+        out = scan(clean).unionByName(masked)
         return self._apply_mapping(out, mapping, version)
 
     def _apply_mapping(self, df: DataFrame, mapping: dict | None,
@@ -2554,7 +2539,6 @@ class TxLogTable:
         return {l2p.get(c, c): b for c, b in ranges.items()}
 
     def _files_df(self, spark: SparkSession, files: list[dict],
-                  merge_schema: bool = False,
                   version: int | None = None,
                   row_ids: bool = False) -> DataFrame:
         """Data-file frame; ``row_ids=True`` (r10 row tracking) attaches
@@ -2563,8 +2547,8 @@ class TxLogTable:
         base_row_id + parquet row index / the add's default commit
         version. Rewrite paths use it to CARRY identities;
         read(with_row_ids=True) exposes them."""
-        df = self._files_df_meta(spark, files, merge_schema=merge_schema,
-                                 version=version, row_ids=row_ids)
+        df = self._files_df_meta(spark, files, version=version,
+                                 row_ids=row_ids)
         if not row_ids:
             return df.drop("__file", "__ri")
         m = local_frame(
@@ -2924,8 +2908,9 @@ class TxLogTable:
         log records at that version: a column appended in later commits
         reads as NULL for older files, and a recorded column a newer
         file omits reads as NULL for that file (``_files_df_meta``).
-        ``merge_schema=True`` (parquet's mergeSchema) matters only for a
-        log that records no schema. ``as_of_timestamp`` (r7) resolves
+        ``merge_schema`` is accepted and ignored: every read reconciles
+        the files to the recorded schema, the result parquet's
+        mergeSchema gave. ``as_of_timestamp`` (r7) resolves
         the snapshot by commit time instead — TIMESTAMP AS OF time
         travel.
 
@@ -2959,52 +2944,34 @@ class TxLogTable:
                 raise ValueError(
                     "txlog read: row tracking is not enabled on this "
                     "table — call enable_row_tracking() first.")
-            df = self._files_df(spark, files, merge_schema=True,
-                                version=version, row_ids=True)
+            df = self._files_df(spark, files, version=version,
+                                row_ids=True)
             return (df.withColumnRenamed(ROW_ID_COL, "_row_id")
                     .withColumnRenamed(ROW_VER_COL,
                                        "_row_commit_version"))
-        return self._files_df(spark, files, merge_schema=merge_schema,
-                              version=version)
+        return self._files_df(spark, files, version=version)
 
-    def _key_ranges(self, df: DataFrame, cols: list[str],
-                    per_key: bool = False) -> tuple[dict, bool]:
-        """One aggregate over ``df``: ``(ranges, dup)``. ``ranges`` holds
-        the normalized (lo, hi) per column — the typed pruning bounds a
-        merge derives from its own source frame. Columns whose type the
-        stats domain can't order (or an empty/all-null frame) read as
-        (None, None) = unbounded; a ``TimestampType`` bound takes the
-        footer stats' UTC form (``_ts_bound``), whatever the driver's
-        time zone. ``per_key=True`` groups by ``key_cols`` first, so the
-        same pass also reports ``dup``: some key holds more than one row."""
+    def _key_ranges(self, df: DataFrame, cols: list[str]) -> dict:
+        """One agg over ``df``: normalized (lo, hi) per column — the
+        typed pruning bounds a merge/upsert derives from its own source
+        frame. Columns whose type the stats domain can't order (or an
+        empty/all-null frame) read as (None, None) = unbounded; a
+        ``TimestampType`` bound takes the footer stats' UTC form
+        (``_ts_bound``), whatever the driver's time zone."""
         from pyspark.sql.types import TimestampType
 
         names = list(dict.fromkeys(cols))
         tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
-        is_ts = {c: isinstance(df.schema[c].dataType, TimestampType)
-                 for c in names}
-        if per_key:
-            keys = self.key_cols
-            df = df.groupBy(*keys).agg(
-                F.count(F.lit(1)).alias("__n"),
-                *[f for c in names if c not in keys
-                  for f in (F.min(c).alias(c + "__lo"),
-                            F.max(c).alias(c + "__hi"))])
-            aggs = [F.max("__n")]
-            for c in names:
-                lo, hi = (c, c) if c in keys else (c + "__lo", c + "__hi")
-                aggs += [F.min(lo), F.max(hi)]
-        else:
-            aggs = [F.lit(0)] + [f for c in names
-                                 for f in (F.min(c), F.max(c))]
-        row = df.agg(*aggs).first()
+        ts = {f.name for f in df.schema.fields
+              if isinstance(f.dataType, TimestampType)}
+        row = df.agg(*[f for c in names
+                       for f in (F.min(c), F.max(c))]).first()
 
         def norm(c, v):
-            return _ts_bound(v, tz) if is_ts[c] else _stat_norm(v)
+            return _ts_bound(v, tz) if c in ts else _stat_norm(v)
 
-        ranges = {c: (norm(c, row[2 * i + 1]), norm(c, row[2 * i + 2]))
-                  for i, c in enumerate(names)}
-        return ranges, (row[0] or 0) > 1
+        return {c: (norm(c, row[2 * i]), norm(c, row[2 * i + 1]))
+                for i, c in enumerate(names)}
 
     def _bloom_probes(self, df: DataFrame) -> list[str] | None:
         """Canonical probe strings from a source frame's distinct bloom-
@@ -3065,8 +3032,8 @@ class TxLogTable:
         the update's time range but disjoint in another key column is
         carried by reference, and numeric columns compare numerically
         (typed stats) instead of through the string trap."""
-        ranges, _ = self._key_ranges(updates,
-                                     [*self.key_cols, self.stats_col])
+        ranges = self._key_ranges(updates,
+                                  [*self.key_cols, self.stats_col])
         probes = self._bloom_probes(updates)
         # r12 (VERDICT #3): rewrites resolve COLUMN-SELECTIVELY — the
         # bloom column chunks are read only when this merge actually
@@ -3151,9 +3118,17 @@ class TxLogTable:
             return F.coalesce(as_col(cond) if cond is not None
                               else F.lit(True), F.lit(False))
 
-        ranges, dup = self._key_ranges(
-            source, [*self.key_cols, self.stats_col], per_key=True)
-        if dup:
+        # one pass over the source: per-key row counts (a duplicate key
+        # shows as a count above 1) and, per key, the non-key bound
+        # columns — a key's one row is its min — then _key_ranges over
+        # that frame yields both the bounds and the largest count
+        bounded = [*self.key_cols, self.stats_col]
+        per_key = source.groupBy(*self.key_cols).agg(
+            F.count(F.lit(1)).alias("__n"),
+            *[F.min(c).alias(c) for c in dict.fromkeys(bounded)
+              if c not in self.key_cols])
+        ranges = self._key_ranges(per_key, [*bounded, "__n"])
+        if (ranges.pop("__n")[1] or 0) > 1:
             raise ValueError(
                 "merge_into: multiple source rows share a merge key — "
                 "matches would be ambiguous (Delta raises the same).")
@@ -3369,6 +3344,10 @@ class TxLogTable:
                 return self._write_data_files(df, regen_generated=True)
             total = sum(add_rows(a) for a in sel)
             n_out = max(1, -(-total // target_rows_per_file))
+            # the coalesced scan reads in n_out tasks, but the write runs
+            # in n_out tasks whatever sits below it, and parquet encode
+            # outweighs decode: a checkpoint or a repartition in front
+            # only adds a materialization (SCALE.md §9)
             return self._write_data_files(df.coalesce(n_out),
                                           regen_generated=True,
                                           layout=False)
@@ -3828,7 +3807,7 @@ class TxLogTable:
             # so the derived scope needs no verification probe
             keys = keys.localCheckpoint(eager=True)
             if not ranges:
-                ranges, _ = self._key_ranges(keys, list(keys.columns))
+                ranges = self._key_ranges(keys, list(keys.columns))
             verify_scope = False
         phys_key = None
         if keys is not None and len(keys.columns) == 1:

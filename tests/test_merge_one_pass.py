@@ -84,6 +84,26 @@ def test_ordered_clauses_counts_and_carried_file(spark, table_path):
         5: (8, "new")}
 
 
+def test_cluster_by_table_counts_each_row_once(spark, table_path):
+    """A ``cluster_by`` table range-partitions the rewrite before the
+    write, and the range partitioner samples its input in a job of its
+    own. The counts still describe each row once, and the rows are the
+    same as on an unclustered table."""
+    t = TxLogTable(table_path, key_cols=["k"], stats_col="k",
+                   cluster_by=["k"])
+    for rows in ([(1, 5, "a"), (2, -1, "a"), (3, 7, "a")],
+                 [(10, 5, "b"), (11, -2, "b"), (12, 9, "b")]):
+        t.append(spark.createDataFrame(rows, "k long, v long, tag string")
+                 .coalesce(1))
+    r = t.merge_into(_source(spark, [
+        (1, 500, "s"), (2, 500, "s"), (11, 50, "s"), (12, 50, "s"),
+        (5, 8, "new"), (6, 8, "skip")]), CLAUSES)
+    assert (r["updated"], r["deleted"], r["inserted"]) == (2, 1, 1)
+    assert _rows(t, spark) == {
+        1: (500, "upd"), 2: (500, "upd"), 3: (7, "a"),
+        10: (5, "b"), 12: (9, "b"), 5: (8, "new")}
+
+
 def test_row_ids_carry_through_update_and_mint_for_insert(spark,
                                                           table_path):
     t = _table(spark, table_path)
