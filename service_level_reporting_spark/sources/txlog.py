@@ -2412,6 +2412,28 @@ class TxLogTable:
                             os.path.join(root, f)).metadata.num_rows
         return n
 
+    def _dv_rows(self, spark: SparkSession, dv_rels) -> DataFrame:
+        """The rows the DV sidecar dirs ``dv_rels`` mask, read with the
+        sidecars' fixed schema: ``__file`` (keyed like the reader's),
+        ``__ri`` (parquet row index) and ``__dv``, the table-relative
+        ``dv/<tag>`` dir the row came from."""
+        return (spark.read.schema("file string, row_index long")
+                .parquet(*[os.path.join(self.path, d) for d in dv_rels])
+                .select(F.col("file").alias("__file"),
+                        F.col("row_index").alias("__ri"),
+                        F.regexp_extract("_metadata.file_path",
+                                         r"(dv/[^/]+)/[^/]+$", 1)
+                        .alias("__dv")))
+
+    def _dv_sized(self, dv: DataFrame, dv_rels) -> DataFrame:
+        """A DV mask frame hinted for its anti-join: broadcast while the
+        sidecars' footer-counted rows stay under DV_BROADCAST_MAX_ROWS,
+        SHUFFLE_HASH past it (an unconditional broadcast would drive a
+        large mask into the broadcast cap / driver OOM)."""
+        if self._dv_sidecar_rows(dv_rels) <= DV_BROADCAST_MAX_ROWS:
+            return F.broadcast(dv)
+        return dv.hint("shuffle_hash")
+
     def _files_df_meta(self, spark: SparkSession, files: list[dict],
                        version: int | None = None,
                        row_ids: bool = False) -> DataFrame:
@@ -2488,14 +2510,9 @@ class TxLogTable:
         if not dirty:
             return self._apply_mapping(scan(clean), mapping, version)
         dv_rels = sorted({d for a in dirty for d in a.get("dv", ())})
-        dv = (spark.read.schema("file string, row_index long").parquet(
-                  *[os.path.join(self.path, d) for d in dv_rels])
-              .select(F.col("file").alias("__file"),
-                      F.col("row_index").alias("__ri")).distinct())
-        if self._dv_sidecar_rows(dv_rels) <= DV_BROADCAST_MAX_ROWS:
-            dv = F.broadcast(dv)
-        else:
-            dv = dv.hint("shuffle_hash")
+        dv = self._dv_sized(
+            self._dv_rows(spark, dv_rels).select("__file", "__ri")
+            .distinct(), dv_rels)
         masked = scan(dirty).join(dv, ["__file", "__ri"], "left_anti")
         if not clean:
             return self._apply_mapping(masked, mapping, version)
@@ -4275,11 +4292,9 @@ class TxLogTable:
         commits written before op labels existed read as 'unknown'."""
         out = []
         for v in range(self.latest_version() + 1):
-            p = self._commit_path(v)
-            if not os.path.exists(p):
+            rec = self._commit_record(v)
+            if rec is None:
                 continue
-            with open(p) as fh:
-                rec = json.load(fh)
             adds = [a["add"] for a in rec["actions"] if "add" in a]
             out.append({
                 "version": v, "op": rec.get("op", "unknown"),
@@ -4290,6 +4305,98 @@ class TxLogTable:
                 "rows_added": sum(int(a.get("rows", 0)) for a in adds),
                 "txn": rec.get("txn")})
         return out[::-1]
+
+    def _change_files(self, start: int, end: int) -> list[tuple]:
+        """The change feed's plan, shared by ``changes()`` and the data
+        source: per commit in (start, end], ``(version, inserts,
+        deletes)`` where each side is a list of ``(table-relative path,
+        dv_chain, base_row_id, default_rcv)`` entries, verifying the
+        files still exist (vacuum truncates the feed). The id fields are
+        per-path constants (row tracking) fed from the range-start
+        snapshot and every add sighted in the walk — RETROACTIVE within
+        the range, so a file's insert leg carries the base a later
+        backfill assigned to that same path; None when the path was
+        never sighted with one (pre-enable churn, change-data sidecars —
+        those carry materialized id columns instead).
+
+        Merge-on-read commits (r8): the delete side is served from the
+        commit's CHANGE-DATA sidecar files (exactly the deleted rows,
+        known at delete time) and the insert side from adds without a DV
+        chain (a MoR UPDATE's post-images) — DV-carrying re-adds are
+        bookkeeping, not row churn, and fully-dead removes are covered
+        by the sidecar.
+
+        DV-at-removal masking: a NORMAL commit that removes (or re-adds,
+        RESTORE-style) a DV-carrying file contributes only the rows LIVE
+        under the chain the file carried at that version, tracked from
+        the range start's resolved snapshot. A metadata-only re-add (a
+        LIVE file re-published with an unchanged chain: row-tracking
+        backfill, config re-stamp) moves no rows and emits nothing."""
+        def exists_or_raise(q: str, v: int) -> str:
+            if not os.path.exists(os.path.join(self.path, q)):
+                raise ValueError(
+                    f"txlog changes: a file of version {v} was vacuumed; "
+                    f"start the feed later ({q})")
+            return q
+
+        ids: dict = {}               # rel path -> (base_row_id, default_rcv)
+
+        def sight(q: str, add: dict) -> None:
+            if add.get("base_row_id") is not None:
+                ids[q] = (add.get("base_row_id"), add.get("default_rcv"))
+
+        cur = {a["path"]: a for a in self._resolve(start)}
+        for q, a in cur.items():
+            sight(q, a)
+        out = []
+        for v in range(start + 1, end + 1):
+            rec = self._commit_record(v)
+            if rec is None:
+                self._raise_missing(v)   # expired (r9) vs corrupt
+            adds: list[tuple] = []
+            removes: list[tuple] = []
+            if rec.get("cdf"):
+                side = os.path.join(self.path,
+                                    exists_or_raise(rec["cdf"], v))
+                removes += [(os.path.relpath(os.path.join(root, f),
+                                             self.path), ())
+                            for root, _, fs in os.walk(side)
+                            for f in sorted(fs) if f.endswith(".parquet")]
+                adds += [(exists_or_raise(a["add"]["path"], v), ())
+                         for a in rec["actions"]
+                         if "add" in a and add_rows(a["add"]) > 0
+                         and not a["add"].get("dv")]
+            else:
+                dropped = {a["remove"] for a in rec["actions"]
+                           if "remove" in a}
+                for a in rec["actions"]:
+                    if "add" in a and add_rows(a["add"]) > 0:
+                        q = a["add"]["path"]
+                        prev = cur.get(q)
+                        if (prev is not None and q not in dropped
+                                and tuple(prev.get("dv", ()))
+                                == tuple(a["add"].get("dv", ()))):
+                            continue     # metadata-only re-add (r10)
+                        adds.append((exists_or_raise(q, v),
+                                     tuple(a["add"].get("dv", ()))))
+                    elif "remove" in a:
+                        q = exists_or_raise(a["remove"], v)
+                        removes.append(
+                            (q, tuple((cur.get(q) or {}).get("dv", ()))))
+            for a in rec["actions"]:
+                if "add" in a:
+                    cur[a["add"]["path"]] = a["add"]
+                    sight(a["add"]["path"], a["add"])
+                elif "remove" in a:
+                    cur.pop(a["remove"], None)
+            out.append((v, adds, removes))
+        # second pass: stamp per-path ids (retroactive — a backfill later in
+        # the range covers earlier legs of the same path); sidecar paths and
+        # never-sighted files carry None
+        return [(v,
+                 [(q, ch, *ids.get(q, (None, None))) for q, ch in adds],
+                 [(q, ch, *ids.get(q, (None, None))) for q, ch in removes])
+                for v, adds, removes in out]
 
     def changes(self, spark: SparkSession, from_version: int,
                 to_version: int | None = None, net: bool = False,
@@ -4303,6 +4410,16 @@ class TxLogTable:
         touched key range downstream — the incremental-consumer contract
         that makes a 100 TB pipeline re-process deltas, not snapshots.
 
+        The feed has the columns of ``read(to_version)`` (a file that
+        lacks a recorded column yields it as NULL) and the same rows as
+        the data source's ``mode=changes``: both plan through
+        ``_change_files``. The range's distinct files are read in ONE
+        scan with the log's recorded schema (no footer inference), and a
+        broadcast file map fans each file out to the commits and change
+        types that touched it — multiset-exact for a file added and
+        re-added in the range (RESTORE). Rows a file's DV chain masked
+        at that commit drop out per (file, commit, change type).
+
         The replay invariant (pytest-pinned): snapshot(from) ⊎ inserts ∖
         deletes == snapshot(to) as multisets. A rewrite commit re-emits
         rows it merely carried through a touched file as a delete+insert
@@ -4311,16 +4428,6 @@ class TxLogTable:
         multiplicity ``_n``) so consumers see only EFFECTIVE changes.
         Requires the range's files to still exist — vacuum truncates how
         far back a feed can start, exactly Delta's CDF retention rule.
-
-        Plan shape (r7, VERDICT): ONE parquet scan per change type over
-        the range's distinct files, each row tagged with its commit
-        version by a broadcast join on ``input_file_name()`` against the
-        log's (file -> version) map — flat for any range length, instead
-        of the old per-commit read + O(commits)-deep unionByName chain
-        whose driver-side plan cost grew with the range. A file both
-        added and re-added in the range (RESTORE) appears once in the
-        scan and fans out to each of its versions through the join —
-        multiset-exact.
 
         ``with_row_ids=True`` (r10 row tracking) appends ``_row_id`` /
         ``_row_commit_version`` to every change row — the stable
@@ -4347,262 +4454,66 @@ class TxLogTable:
             raise ValueError(
                 "txlog changes: row tracking is not enabled on this "
                 "table — call enable_row_tracking() first.")
-        pairs = {"insert": [], "delete": []}   # (abs_path, version)
-        # r10 row tracking: abs_path -> (base_row_id, default_rcv). A
-        # path's base is assigned EXACTLY ONCE (at its commit-time stamp
-        # or the enable backfill) and every later re-add carries it, so
-        # one per-path entry — fed from every add sighted in the range
-        # AND the range-start snapshot — is enough, and it makes ids
-        # RETROACTIVE: a bootstrap feed from -1 reports a pre-enable
-        # insert with the id the backfill later assigned to that very
-        # file, so the net cancel stays coherent across the enable
-        # boundary. Files gone before enable have no sighting → NULL
-        # ids (identities that never existed). Change-data sidecar
-        # files carry materialized id columns instead and take no entry.
-        idmap: dict = {}
-
-        def sight(rel_or_abs: str, add: dict) -> None:
-            if add.get("base_row_id") is not None:
-                ap = os.path.abspath(os.path.join(self.path, rel_or_abs))
-                idmap[ap] = (add.get("base_row_id"),
-                             add.get("default_rcv"))
-        # DV bookkeeping (r7 s2): cur tracks the live add per path so a
-        # removed DV-carrying file contributes only its rows LIVE at
-        # removal; entries = (rel_path, version, dv_chain) per side
-        cur = {a["path"]: a for a in self._resolve(from_version)}
-        for q, a in cur.items():
-            sight(q, a)
-        entries = {"insert": [], "delete": []}
-
-        def exists_or_raise(q: str, v: int) -> str:
-            full = os.path.join(self.path, q)
-            if not os.path.exists(full):
-                raise ValueError(
-                    f"txlog changes: file(s) of version {v} were "
-                    f"vacuumed; start the feed later (first: {q})")
-            return os.path.abspath(full)
-
-        for v in range(from_version + 1, to_version + 1):
-            p = self._commit_path(v)
-            if not os.path.exists(p):
-                self._raise_missing(v)
-            with open(p) as fh:
-                rec = json.load(fh)
-            if rec.get("cdf"):
-                # MoR delete/update: re-adds and removes of EXISTING
-                # paths are DV bookkeeping (the change-data sidecar holds
-                # exactly the deleted/pre-image rows); adds of NEW paths
-                # (a MoR UPDATE's post-image file) are real inserts
-                side = exists_or_raise(rec["cdf"], v)
-                for root, _, fs in os.walk(side):
-                    for f in sorted(fs):
-                        if f.endswith(".parquet"):
-                            pairs["delete"].append(
-                                (os.path.abspath(os.path.join(root, f)), v))
-                for a in rec["actions"]:
-                    if ("add" in a and add_rows(a["add"]) > 0
-                            and a["add"]["path"] not in cur):
-                        pairs["insert"].append(
-                            (exists_or_raise(a["add"]["path"], v), v))
-            else:
-                dropped = {a["remove"] for a in rec["actions"]
-                           if "remove" in a}
-                for a in rec["actions"]:
-                    if "add" in a and add_rows(a["add"]) > 0:
-                        q = a["add"]["path"]
-                        prev = cur.get(q)
-                        if (prev is not None and q not in dropped
-                                and tuple(prev.get("dv", ()))
-                                == tuple(a["add"].get("dv", ()))):
-                            # METADATA-ONLY re-add (r10): a commit that
-                            # re-publishes a LIVE file with an unchanged
-                            # DV chain — enable_row_tracking's backfill,
-                            # a config re-stamp — moves no rows. Emitting
-                            # inserts here double-counted every backfilled
-                            # row for any feed that had already folded the
-                            # original add (the replay invariant broke
-                            # across the enable commit). RESTORE re-adds
-                            # of live files pair with a remove in the same
-                            # commit, so they still emit both sides.
-                            continue
-                        pairs["insert"].append((exists_or_raise(q, v), v))
-                        if a["add"].get("dv"):   # restore of a DV'd add
-                            entries["insert"].append(
-                                (q, v, tuple(a["add"]["dv"])))
-                    elif "remove" in a:
-                        q = a["remove"]
-                        pairs["delete"].append((exists_or_raise(q, v), v))
-                        ch = (cur.get(q) or {}).get("dv")
-                        if ch:       # only rows live at removal count
-                            entries["delete"].append((q, v, tuple(ch)))
-            for a in rec["actions"]:
-                if "add" in a:
-                    cur[a["add"]["path"]] = a["add"]
-                    sight(a["add"]["path"], a["add"])
-                elif "remove" in a:
-                    cur.pop(a["remove"], None)
-        if not pairs["insert"] and not pairs["delete"]:
-            empty = self.read(spark, to_version).limit(0)
-            if with_row_ids:
-                empty = (empty
-                         .withColumn("_row_id", F.lit(None).cast("long"))
-                         .withColumn("_row_commit_version",
-                                     F.lit(None).cast("long")))
-            return (empty
-                    .withColumn("_change_type", F.lit("insert"))
-                    .withColumn("_commit_version", F.lit(0).cast("long")))
-
-        prefix = os.path.abspath(self.path) + "/"
-
-        def dv_rows(side: str) -> DataFrame | None:
-            """(file, _commit_version, row_index) triples masked from the
-            side's scan: each (path, version) entry anti-joins only the
-            DV dirs of ITS chain (the chain the file carried at that
-            version), so accreting chains across versions stay exact."""
-            ent = entries[side]
-            if not ent:
-                return None
-            rows = [(rel, v, d) for rel, v, ch in ent for d in ch]
-            emap = local_frame(
-                spark, rows,
-                "file string, _commit_version long, __dv_dir string")
-            rels = sorted({d for _, _, d in rows})
-            # __dv_dir must come from the path RELATIVE to the table
-            # prefix: matching the first 'dv/' segment of the ABSOLUTE
-            # path breaks for a table rooted under a directory that
-            # itself contains 'dv/' (e.g. /data/dv/warehouse/t) — the
-            # wrong key silently drops the mask through the emap join
-            # and re-emits already-deleted rows (r8, ADVICE).
-            dvs = (spark.read.parquet(
-                       *[os.path.join(self.path, d) for d in rels])
-                   .withColumn("__dv_dir", F.regexp_extract(
-                       F.expr(f"substring(regexp_replace("
-                              f"input_file_name(), '^file:(//)?', ''), "
-                              f"{len(prefix) + 1})"),
-                       "^(dv/[^/]+)/", 1)))
-            return (dvs.join(F.broadcast(emap), ["file", "__dv_dir"])
-                    .select("file", "_commit_version", "row_index"))
-
-        # r11 typeWidening: a widened range mixes narrow and wide
-        # physical types — mergeSchema fails on the conflict, an
-        # explicit (physical-named) read schema up-casts per file.
-        cdf_schema = None
-        if self.type_widening_enabled(to_version):
-            from pyspark.sql.types import LongType, StructField, StructType
-            sch_w, _ = self.table_schema_info(to_version)
-            if sch_w is not None:
-                m_w = self.column_mapping(to_version)
-                l2p_w = _l2p(m_w) if m_w is not None else {}
-                cdf_schema = StructType(
-                    [StructField(l2p_w.get(f.name, f.name),
-                                 _norm_dtype(f.dataType), True)
-                     for f in sch_w.fields]
-                    + [StructField(ROW_ID_COL, LongType(), True),
-                       StructField(ROW_VER_COL, LongType(), True)])
-
-        def one_scan(ctype: str) -> DataFrame | None:
-            pv = pairs[ctype]
-            if not pv:
-                return None
-            dv = dv_rows(ctype)
-            fmap = local_frame(spark, pv, "_cdf_file string, "
-                                          "_commit_version long")
-            reader = (spark.read.schema(cdf_schema)
-                      if cdf_schema is not None
-                      else spark.read.option("mergeSchema", "true"))
-            scan = (reader
-                    .parquet(*sorted({p for p, _ in pv}))
-                    .withColumn("_cdf_file",
-                                F.regexp_replace(F.input_file_name(),
-                                                 "^file:(//)?", "")))
-            # r10 row tracking: materialized id columns are STORAGE, not
-            # data — files touched by a rewrite carry them, fresh files
-            # don't. They must never surface as data columns (the net
-            # groupBy would stop cancelling a carried row's NULL-id
-            # pre-image against its materialized-id post-image); they
-            # feed the id coalesce only when the caller asked for ids.
+        legs, masks = [], []
+        for v, inserts, deletes in self._change_files(from_version,
+                                                      to_version):
+            for ctype, entries in (("insert", inserts),
+                                   ("delete", deletes)):
+                for q, chain, base, rcv in entries:
+                    legs.append((q, v, ctype, base, rcv))
+                    masks += [(q, v, ctype, d) for d in chain]
+        extra = (["_row_id", "_row_commit_version"]
+                 if with_row_ids else [])
+        if not legs:
+            cdf = self.read(spark, to_version).limit(0)
+            data_cols = cdf.columns
+            for c in extra:
+                cdf = cdf.withColumn(c, F.lit(None).cast("long"))
+            cdf = (cdf.withColumn("_change_type", F.lit("insert"))
+                   .withColumn("_commit_version", F.lit(0).cast("long")))
+        else:
+            scan = self._files_df_meta(
+                spark, [{"path": q} for q in sorted({q for q, *_ in legs})],
+                version=to_version, row_ids=with_row_ids)
             data_cols = [c for c in scan.columns
-                         if c not in ("_cdf_file", ROW_ID_COL,
+                         if c not in ("__file", "__ri", ROW_ID_COL,
                                       ROW_VER_COL)]
+            cdf = scan.join(F.broadcast(local_frame(
+                spark, legs, "__file string, _commit_version long, "
+                             "_change_type string, __base long, "
+                             "__rcv long")), "__file")
+            if masks:
+                # each leg anti-joins only the DV dirs of ITS chain (the
+                # chain the file carried at that commit), so chains that
+                # differ across versions stay exact
+                key = ["__file", "_commit_version", "_change_type"]
+                rels = sorted({d for *_, d in masks})
+                dead = (self._dv_rows(spark, rels)
+                        .join(F.broadcast(local_frame(
+                            spark, masks,
+                            "__file string, _commit_version long, "
+                            "_change_type string, __dv string")),
+                              ["__file", "__dv"])
+                        .select(*key, "__ri"))
+                cdf = cdf.join(self._dv_sized(dead, rels), key + ["__ri"],
+                               "left_anti")
             if with_row_ids:
-                for c in (ROW_ID_COL, ROW_VER_COL):
-                    if c not in scan.columns:
-                        scan = scan.withColumn(c,
-                                               F.lit(None).cast("long"))
-            if dv is not None or with_row_ids:
-                # _metadata must be captured ON the scan (hidden columns
-                # don't survive the fmap join)
-                scan = scan.withColumn("row_index",
-                                       F.col("_metadata.row_index"))
-            out = (scan.join(F.broadcast(fmap), "_cdf_file")
-                   .withColumn("_change_type", F.lit(ctype)))
-            if dv is not None:
-                # table-relative for own files, FULL path for
-                # clone-foreign files — must match the DV sidecars'
-                # `file` keys (remapped to absolute paths at clone time)
-                fkey = F.when(
-                    F.col("_cdf_file").startswith(prefix),
-                    F.expr(f"substring(_cdf_file, {len(prefix) + 1})")
-                ).otherwise(F.col("_cdf_file"))
-                out = (out
-                       .withColumn("file", fkey)
-                       .join(F.broadcast(dv),
-                             ["file", "_commit_version", "row_index"],
-                             "left_anti")
-                       .drop("file"))
-            if with_row_ids:
-                im = [(q, b, rc) for q, (b, rc) in idmap.items()]
-                if im:
-                    imap = local_frame(
-                        spark, im,
-                        "_cdf_file string, __base long, __rcv long")
-                    out = out.join(F.broadcast(imap), "_cdf_file",
-                                   "left")
-                else:
-                    out = (out.withColumn("__base",
-                                          F.lit(None).cast("long"))
-                           .withColumn("__rcv",
-                                       F.lit(None).cast("long")))
-                out = (out
+                cdf = (cdf
                        .withColumn("_row_id", F.coalesce(
                            F.col(ROW_ID_COL),
-                           F.col("__base") + F.col("row_index")))
+                           F.col("__base") + F.col("__ri")))
                        .withColumn("_row_commit_version", F.coalesce(
                            F.col(ROW_VER_COL), F.col("__rcv"))))
-            extra = (["_row_id", "_row_commit_version"]
-                     if with_row_ids else [])
-            return out.select(*data_cols, *extra,
-                              "_change_type", "_commit_version")
-
-        ins, dels = one_scan("insert"), one_scan("delete")
-        cdf = (ins if dels is None else dels if ins is None
-               else ins.unionByName(dels, allowMissingColumns=True))
-        mapping = self.column_mapping(to_version)
-        if mapping is not None:
-            # scans above are PHYSICAL-named (data files and MoR change
-            # sidecars alike); project to the logical schema at the
-            # range end, like every other reader (r9 column mapping)
-            l2p = _l2p(mapping)
-            sch, _ = self.table_schema_info(to_version)
-            proj = []
-            for f in sch.fields:
-                p = l2p.get(f.name, f.name)
-                proj.append(F.col(p).alias(f.name) if p in cdf.columns
-                            else F.lit(None).cast(f.dataType)
-                            .alias(f.name))
-            if with_row_ids:
-                proj += [F.col("_row_id"),
-                         F.col("_row_commit_version")]
-            cdf = cdf.select(*proj, "_change_type", "_commit_version")
+            cdf = cdf.select(*data_cols, *extra,
+                             "_change_type", "_commit_version")
         if not net:
             return cdf
-        data_cols = [c for c in cdf.columns
-                     if c not in ("_change_type", "_commit_version")]
-        return (cdf.groupBy(*data_cols)
+        keys = data_cols + extra
+        return (cdf.groupBy(*keys)
                 .agg(F.sum(F.when(F.col("_change_type") == "insert", 1)
                            .otherwise(-1)).alias("_net"))
                 .where(F.col("_net") != 0)
-                .select(*data_cols,
+                .select(*keys,
                         F.when(F.col("_net") > 0, F.lit("insert"))
                         .otherwise(F.lit("delete")).alias("_change_type"),
                         F.abs("_net").alias("_n")))

@@ -147,8 +147,8 @@ def _pin_snapshot(path: str, options) -> dict:
                 "startingVersion at or after enable_row_tracking() — "
                 "bootstrap from a snapshot read (withRowIds=true), "
                 "then start the feed at its version.")
-        paths = sorted({q for _, adds, removes in _commit_file_sets(
-            t, starting, ending) for q, *_ in adds + removes})
+        paths = sorted({q for _, adds, removes in t._change_files(
+            starting, ending) for q, *_ in adds + removes})
         if not paths:           # empty range (e.g. stream from 'latest'):
             paths = [a["path"] for a in t._resolve(version)]
     else:
@@ -346,15 +346,8 @@ class TxLogBatchReader(DataSourceReader):
     def partitions(self):
         t = self._table
         if self.mode == "changes":
-            parts = [
-                _FilePart(os.path.join(t.path, p), ctype, v, rel=p,
-                          dv=tuple(os.path.join(t.path, d) for d in ch),
-                          row_ids=self.row_ids, base=b, rcv=rc)
-                for v, adds, removes in _commit_file_sets(
-                    t, self.starting, self.ending)
-                for ctype, entries in (("insert", adds),
-                                       ("delete", removes))
-                for p, ch, b, rc in entries]
+            parts = _change_parts(t, self.starting, self.ending,
+                                  self.row_ids)
         else:
             live = t._resolve(self.version)
             # r9 column mapping: pushed-down bounds arrive LOGICAL-keyed,
@@ -506,102 +499,19 @@ def drain_available(spark, table_path: str, checkpoint_dir: str,
             "end_offset": off, "head": head0}
 
 
-def _commit_file_sets(t: TxLogTable, start: int, end: int):
-    """Per commit in (start, end]: ``(version, inserts, deletes)`` where
-    each side is a list of ``(table-relative path, dv_chain,
-    base_row_id, default_rcv)`` entries, verifying the files still
-    exist (vacuum truncates the feed). The id fields are per-path
-    constants (row tracking) fed from the range-start snapshot and
-    every add sighted in the walk — RETROACTIVE within the range, so a
-    file's insert leg carries the base a later backfill assigned to
-    that same path; None when the path was never sighted with one
-    (pre-enable churn, change-data sidecars — those carry materialized
-    id columns instead).
-
-    Merge-on-read commits (r8): the delete side is served from the
-    commit's CHANGE-DATA sidecar files (exactly the deleted rows, known
-    at delete time) and the insert side from adds of NEW files (a MoR
-    UPDATE's post-images) — DV-carrying re-adds are bookkeeping, not
-    row churn, and fully-dead removes are covered by the sidecar.
-
-    DV-at-removal masking: a NORMAL commit that removes (or re-adds,
-    RESTORE-style) a DV-carrying file contributes only the rows LIVE
-    under the chain the file carried at that version — the chain rides
-    the partition and `_read_file_batches` masks executor-side, same as
-    snapshot reads. Chains are tracked from the range start's resolved
-    snapshot, mirroring TxLogTable.changes()."""
-    def exists_or_raise(q: str, v: int) -> str:
-        if not os.path.exists(os.path.join(t.path, q)):
-            raise ValueError(
-                f"txlog source: file of version {v} was vacuumed; "
-                f"start the read later ({q})")
-        return q
-
-    ids: dict = {}               # rel path -> (base_row_id, default_rcv)
-
-    def sight(q: str, add: dict) -> None:
-        if add.get("base_row_id") is not None:
-            ids[q] = (add.get("base_row_id"), add.get("default_rcv"))
-
-    cur = {a["path"]: a for a in t._resolve(max(start, -1))}
-    for q, a in cur.items():
-        sight(q, a)
-    out = []
-    for v in range(start + 1, end + 1):
-        p = t._commit_path(v)
-        if not os.path.exists(p):
-            t._raise_missing(v)      # expired (r9) vs corrupt, actionable
-        with open(p) as fh:
-            rec = json.load(fh)
-        adds: list[tuple] = []
-        removes: list[tuple] = []
-        if rec.get("cdf"):
-            side = os.path.join(t.path, exists_or_raise(rec["cdf"], v))
-            removes += [(os.path.relpath(os.path.join(root, f), t.path),
-                         ())
-                        for root, _, fs in os.walk(side)
-                        for f in sorted(fs) if f.endswith(".parquet")]
-            adds += [(exists_or_raise(a["add"]["path"], v), ())
-                     for a in rec["actions"]
-                     if "add" in a and add_rows(a["add"]) > 0
-                     and not a["add"].get("dv")]
-        else:
-            dropped = {a["remove"] for a in rec["actions"]
-                       if "remove" in a}
-            for a in rec["actions"]:
-                if "add" in a and add_rows(a["add"]) > 0:
-                    q = a["add"]["path"]
-                    prev = cur.get(q)
-                    if (prev is not None and q not in dropped
-                            and tuple(prev.get("dv", ()))
-                            == tuple(a["add"].get("dv", ()))):
-                        # metadata-only re-add (r10): a LIVE file
-                        # re-published with an unchanged DV chain (row-
-                        # tracking backfill, config re-stamp) moves no
-                        # rows — emitting it double-folded every row
-                        # into any downstream stream (matview, sink)
-                        # that had already consumed the original add
-                        continue
-                    adds.append((exists_or_raise(q, v),
-                                 tuple(a["add"].get("dv", ()))))
-                elif "remove" in a:
-                    q = exists_or_raise(a["remove"], v)
-                    removes.append(
-                        (q, tuple((cur.get(q) or {}).get("dv", ()))))
-        for a in rec["actions"]:
-            if "add" in a:
-                cur[a["add"]["path"]] = a["add"]
-                sight(a["add"]["path"], a["add"])
-            elif "remove" in a:
-                cur.pop(a["remove"], None)
-        out.append((v, adds, removes))
-    # second pass: stamp per-path ids (retroactive — a backfill later in
-    # the range covers earlier legs of the same path); sidecar paths and
-    # never-sighted files carry None
-    return [(v,
-             [(q, ch, *ids.get(q, (None, None))) for q, ch in adds],
-             [(q, ch, *ids.get(q, (None, None))) for q, ch in removes])
-            for v, adds, removes in out]
+def _change_parts(t: TxLogTable, start: int, end: int,
+                  row_ids: bool) -> list[_FilePart]:
+    """One partition per change leg of the commits in (start, end], as
+    ``TxLogTable._change_files`` plans them (the planner
+    ``TxLogTable.changes`` uses too): inserts then deletes per commit,
+    each masked executor-side by the DV chain it carried at that
+    commit."""
+    return [_FilePart(os.path.join(t.path, q), ctype, v, rel=q,
+                      dv=tuple(os.path.join(t.path, d) for d in ch),
+                      row_ids=row_ids, base=b, rcv=rc)
+            for v, adds, removes in t._change_files(start, end)
+            for ctype, entries in (("insert", adds), ("delete", removes))
+            for q, ch, b, rc in entries]
 
 
 class TxLogStreamReader(DataSourceStreamReader):
@@ -689,11 +599,9 @@ class TxLogStreamReader(DataSourceStreamReader):
     def _commit_rows(self, v: int) -> int:
         """Rows a commit makes visible, from its add actions — log
         metadata only (never a parquet footer, never a data read)."""
-        p = self._table._commit_path(v)
-        if not os.path.exists(p):
+        rec = self._table._commit_record(v)
+        if rec is None:
             return 0
-        with open(p) as fh:
-            rec = json.load(fh)
         return sum(add_rows(a["add"]) for a in rec["actions"] if "add" in a)
 
     def _admit(self, base: int, head: int) -> int:
@@ -726,50 +634,41 @@ class TxLogStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         self._floor = max(self._floor, start["version"], end["version"])
         t = self._table
+        if self.mode == "changes":
+            # r8: MoR commits are served from their change-data sidecar,
+            # and removed/re-added DV-carrying files mask executor-side —
+            # one planner call for the whole batch, shared with the batch
+            # path and TxLogTable.changes
+            return (_change_parts(t, start["version"], end["version"],
+                                  self.row_ids)
+                    or [_FilePart("", None, None)])
         parts: list[_FilePart] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            p = t._commit_path(v)
-            if not os.path.exists(p):
+            rec = t._commit_record(v)
+            if rec is None:
                 t._raise_missing(v)  # expired (r9) vs corrupt, actionable
-            with open(p) as fh:
-                rec = json.load(fh)
             adds = [a["add"] for a in rec["actions"]
                     if "add" in a and add_rows(a["add"]) > 0]
             removes = [a["remove"] for a in rec["actions"] if "remove" in a]
-            if self.mode == "changes":
-                # r8: MoR commits are served from their change-data
-                # sidecar, and removed/re-added DV-carrying files mask
-                # executor-side — one shared planner with the batch path
-                for cv, cadds, cremoves in _commit_file_sets(t, v - 1, v):
-                    parts += [
-                        _FilePart(os.path.join(t.path, q), ctype, cv,
-                                  rel=q,
-                                  dv=tuple(os.path.join(t.path, d)
-                                           for d in ch),
-                                  row_ids=self.row_ids, base=b, rcv=rc)
-                        for ctype, entries in (("insert", cadds),
-                                               ("delete", cremoves))
-                        for q, ch, b, rc in entries]
-            else:
-                dv_adds = any("add" in a and a["add"].get("dv")
-                              for a in rec["actions"])
-                if removes or rec.get("cdf") or dv_adds:
-                    # a MoR delete changes data without removes in the
-                    # degenerate case, and a RESTORE-style re-add of a
-                    # DV-carrying file is changed data too; treat both
-                    # like any rewrite commit
-                    if self.skip_change:
-                        continue     # skip the rewrite commit wholesale
-                    raise ValueError(
-                        f"txlog stream: version {v} rewrites data "
-                        "(merge/delete/update/optimize). Append-only "
-                        "streams refuse changed data; set "
-                        "skipChangeCommits=true or use mode=changes.")
-                parts += [_FilePart(os.path.join(t.path, a["path"]),
-                                    None, None, row_ids=self.row_ids,
-                                    base=a.get("base_row_id"),
-                                    rcv=a.get("default_rcv"))
-                          for a in adds]
+            dv_adds = any("add" in a and a["add"].get("dv")
+                          for a in rec["actions"])
+            if removes or rec.get("cdf") or dv_adds:
+                # a MoR delete changes data without removes in the
+                # degenerate case, and a RESTORE-style re-add of a
+                # DV-carrying file is changed data too; treat both
+                # like any rewrite commit
+                if self.skip_change:
+                    continue         # skip the rewrite commit wholesale
+                raise ValueError(
+                    f"txlog stream: version {v} rewrites data "
+                    "(merge/delete/update/optimize). Append-only "
+                    "streams refuse changed data; set "
+                    "skipChangeCommits=true or use mode=changes.")
+            parts += [_FilePart(os.path.join(t.path, a["path"]),
+                                None, None, row_ids=self.row_ids,
+                                base=a.get("base_row_id"),
+                                rcv=a.get("default_rcv"))
+                      for a in adds]
         return parts or [_FilePart("", None, None)]
 
     def read(self, partition: _FilePart):

@@ -197,15 +197,12 @@ def test_cdf_metadata_only_readd_moves_no_rows(spark, table_path):
     with no matching delete, so an incremental consumer that had already
     folded the original appends double-counted the whole table the
     moment tracking was enabled mid-stream."""
-    from service_level_reporting_spark.sources.txlog_datasource import (
-        _commit_file_sets)
-
     t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
     t.append(_frame(spark, [(f"k{i}", i) for i in range(3)]))
     seen = t.latest_version()            # consumer already folded this
     ev = t.enable_row_tracking()
     assert t.changes(spark, seen, ev).count() == 0
-    sets = _commit_file_sets(t, seen, ev)
+    sets = t._change_files(seen, ev)
     assert all(not adds and not removes for _, adds, removes in sets)
     # RESTORE across a delete still emits: its re-add pairs with a
     # remove in the same commit (or re-publishes a non-live path)
