@@ -1408,8 +1408,8 @@ def sink_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # suite's serial cost (22 s of 46 s per-leg total at sf0.1) — it must
     # START first, not 8th, or the pool's first wave delays the leg that
     # bounds the suite's wall time. Legs ordered longest-first by their
-    # per-leg cost (tools/sink_leg_probe.py measures it); dict order ==
-    # submission order.
+    # per-leg cost (SCALE.md §9 records it); dict order == submission
+    # order.
     pooled = {
         "txlog_rowops": lambda: _part(
             "txlog_rowops", sink_txlog_rowops(spark, sf_dir)),

@@ -2544,12 +2544,12 @@ class TxLogTable:
         return df.select(*cols)
 
     def _phys_ranges(self, ranges: dict,
-                     mapping: dict | None = None) -> dict:
+                     version: int | None = None) -> dict:
         """Translate LOGICAL-keyed pruning bounds to the PHYSICAL names
-        the add-actions' typed stats are recorded under (identity when
+        the add-actions' typed stats are recorded under, through the
+        column mapping at ``version`` (default latest; identity when
         mapping is off — pre-mapping adds have logical == physical)."""
-        if mapping is None:
-            mapping = self.column_mapping()
+        mapping = self.column_mapping(version)
         if mapping is None:
             return ranges
         l2p = _l2p(mapping)
@@ -2933,8 +2933,9 @@ class TxLogTable:
 
         ``with_row_ids=True`` (r10 row tracking) appends ``_row_id`` and
         ``_row_commit_version``: identities that are STABLE across
-        OPTIMIZE / bin-pack / CoW DELETE / CoW+MoR UPDATE / merge_into
-        UPDATE clauses — the handle keyless consumers join on."""
+        OPTIMIZE / bin-pack / CoW DELETE / CoW+MoR UPDATE / merge /
+        merge_into UPDATE clauses — the handle keyless consumers join
+        on."""
         if as_of_timestamp is not None:
             if version is not None:
                 raise ValueError("txlog read: give version OR "
@@ -3008,16 +3009,19 @@ class TxLogTable:
         return canon
 
     def _prune_files(self, live: list[dict], ranges: dict,
-                     probes: list[str] | None = None) -> list[dict]:
-        """The one file-skipping path of every rewrite (merge,
-        merge_into, CoW and MoR delete/update): keep live files that MAY
-        hold a row satisfying every ``col -> (lo, hi)`` bound, decided by
-        ``file_may_match`` over the adds' typed stats (numeric columns
-        compare numerically; a file without stats for a bounded column is
-        kept). Bounds arrive LOGICAL-keyed and ``_stat_norm``-ed; typed
-        stats are PHYSICAL-keyed (r9 column mapping) — translated here,
-        once per prune. ``probes`` adds the bloom point-key prune."""
-        ranges = self._phys_ranges(ranges)
+                     probes: list[str] | None = None,
+                     version: int | None = None) -> list[dict]:
+        """The one file-skipping path of every rewrite (merge_into, CoW
+        and MoR delete/update) and of the data source's snapshot scan:
+        keep live files that MAY hold a row satisfying every ``col ->
+        (lo, hi)`` bound, decided by ``file_may_match`` over the adds'
+        typed stats (numeric columns compare numerically; a file without
+        stats for a bounded column is kept). Bounds arrive LOGICAL-keyed
+        and ``_stat_norm``-ed; typed stats are PHYSICAL-keyed (r9 column
+        mapping) — translated here, once per prune, through the mapping
+        at ``version`` (the snapshot ``live`` was resolved at; default
+        latest). ``probes`` adds the bloom point-key prune."""
+        ranges = self._phys_ranges(ranges, version)
         out = []
         for a in live:
             if not file_may_match(a, ranges):
@@ -3030,61 +3034,34 @@ class TxLogTable:
         return out
 
     def merge(self, updates: DataFrame) -> dict:
-        """MERGE keyed on key_cols: rewrite ONLY live files whose stats
-        range overlaps the updates (matched keys take the update, unmatched
-        rows survive via anti-join), carry every other file by reference,
-        commit removes+adds as ONE version.
-
-        Concurrency (r6 — closes the r5 liveness bug): a lost O_EXCL race
-        first runs LOGICAL conflict detection, Delta-style — re-resolve the
-        live set at the winner's snapshot, and if the files overlapping the
-        update's key range are EXACTLY the ones this merge already rewrote
-        (the winners neither removed a touched file nor added one in our
-        range), the same actions are serializable at the next version and
-        are re-committed WITHOUT re-running the Spark read-rewrite. Only a
-        real overlap pays the rebase. Returns commit stats.
-
-        r7: pruning bounds derive from EVERY key column of the updates
-        (plus the stats column), not just stats_col — a file overlapping
-        the update's time range but disjoint in another key column is
-        carried by reference, and numeric columns compare numerically
-        (typed stats) instead of through the string trap."""
-        ranges = self._key_ranges(updates,
-                                  [*self.key_cols, self.stats_col])
-        probes = self._bloom_probes(updates)
-        # r12 (VERDICT #3): rewrites resolve COLUMN-SELECTIVELY — the
-        # bloom column chunks are read only when this merge actually
-        # derived probes, extra_json never
-        rcols = self._REWRITE_COLS + (("bloom",) if probes else ())
-        st: dict = {}
-
-        def rewrite(touched: list[dict]) -> list[dict]:
-            if touched:
-                existing = self._files_df(updates.sparkSession, touched)
-                keep = existing.join(updates.select(*self.key_cols),
-                                     self.key_cols, "left_anti")
-                merged = keep.unionByName(updates)
-            else:
-                merged = updates
-            return self._write_data_files(merged, regen_generated=True)
-
-        def plan(base):
-            st["live"] = self._resolve(base, columns=rcols)
-            touched = st["touched"] = self._prune_files(st["live"], ranges,
-                                                        probes)
-            return _Staged(self._reuse_key(touched, base),
-                           lambda: rewrite(touched) + _removes(touched))
-
-        out = self._commit_retrying("merge", plan)
-        return {"version": out.value,
-                "rewritten_files": len(st["touched"]),
-                "carried_files": len(st["live"]) - len(st["touched"]),
-                "added_files": _count(out.actions, "add"),
-                "retries": out.retries, "rebases": out.rebases}
+        """Upsert keyed on key_cols, in one commit: a source row whose key
+        matches a live row replaces that row's values, every other source
+        row is inserted. This is ``merge_into`` with one WHEN MATCHED
+        UPDATE of the source's non-key columns (generated columns are
+        recomputed, not assigned) and one WHEN NOT MATCHED INSERT, so it
+        has that method's contract: row ids are kept, source columns are
+        cast to the table's types, a source with several rows per key
+        raises before anything is written, and the result is its stats
+        dict. The source must carry exactly the table's columns."""
+        sch, _ = self.table_schema_info()
+        if sch is not None:
+            have, want = set(updates.columns), set(sch.fieldNames())
+            if have != want:
+                raise ValueError(
+                    "merge: source columns differ from the table's — "
+                    f"missing {sorted(want - have)}, "
+                    f"unknown {sorted(have - want)}")
+        gens = self.generated_columns()
+        sets = {c: f"src_{c}" for c in updates.columns
+                if c not in self.key_cols and c not in gens}
+        return self.merge_into(
+            updates, ([("update", None, sets)] if sets else [])
+            + [("insert", None, None)])
 
     def merge_into(self, source: DataFrame, clauses: list[tuple]) -> dict:
         """Full MERGE INTO semantics (r7): ordered WHEN clauses, the
-        SQL/Delta shape the plain upsert ``merge()`` cannot express.
+        SQL/Delta shape; the plain upsert ``merge()`` is one clause list
+        over it. A table with no commits yet takes the inserts.
 
         ``clauses`` is an ordered list of:
           ``("update", condition|None, {col: expr, ...})`` — WHEN MATCHED
@@ -3150,7 +3127,9 @@ class TxLogTable:
                 "merge_into: multiple source rows share a merge key — "
                 "matches would be ambiguous (Delta raises the same).")
         probes = self._bloom_probes(source)
-        # r12 (VERDICT #3): column-selective resolve — see merge()
+        # r12 (VERDICT #3): rewrites resolve COLUMN-SELECTIVELY — the
+        # bloom column chunks are read only when this merge actually
+        # derived probes, extra_json never
         rcols = self._REWRITE_COLS + (("bloom",) if probes else ())
         st: dict = {}
 
@@ -3168,9 +3147,15 @@ class TxLogTable:
             # inserts carry none and get fresh ids from the written
             # file's base allocation at commit
             track = self.row_tracking(base) is not None
-            target = (self._files_df(spark, touched, row_ids=track)
-                      if touched
-                      else self.read(spark, version=base).limit(0))
+            if touched:
+                target = self._files_df(spark, touched, row_ids=track)
+            else:
+                # nothing to rewrite: an empty frame typed by the schema
+                # the log records at base (the source's on a table with
+                # none yet) — no scan is planned for the column types
+                sch, _ = self.table_schema_info(base)
+                target = local_frame(spark, [], source.schema
+                                     if sch is None else _norm_dtype(sch))
             tcols = target.columns
             joined = target.join(src, self.key_cols, "left")
             matched = F.coalesce(F.col("_m"), F.lit(False))
@@ -3232,8 +3217,8 @@ class TxLogTable:
 
         def plan(base):
             st["live"] = self._resolve(base, columns=rcols)
-            touched = st["touched"] = self._prune_files(st["live"], ranges,
-                                                        probes)
+            touched = st["touched"] = self._prune_files(
+                st["live"], ranges, probes, version=base)
             return _Staged(self._reuse_key(touched, base),
                            lambda: rewrite(touched, base)
                            + _removes(touched))
@@ -3752,7 +3737,8 @@ class TxLogTable:
             # r12 (VERDICT #3): CoW rewrites never read bloom/extra_json
             live = st["live"] = self._resolve(base,
                                               columns=self._REWRITE_COLS)
-            touched = st["touched"] = self._prune_files(live, ranges)
+            touched = st["touched"] = self._prune_files(live, ranges,
+                                                        version=base)
             if verify_scope and scope_cond is not None:
                 self._check_scope(op, scope_cond, live, touched, probed,
                                   key_range, column_ranges)
@@ -3975,7 +3961,7 @@ class TxLogTable:
         def plan(base):
             live = st["live"] = self._resolve(base)
             touched = st["touched"] = keys_refine(
-                self._prune_files(live, ranges))
+                self._prune_files(live, ranges, version=base))
             if verify_scope:
                 self._check_scope("delete(mor)", cond, live, touched,
                                   probed, key_range, column_ranges)

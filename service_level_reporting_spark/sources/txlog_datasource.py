@@ -13,8 +13,8 @@ bespoke Python API:
   lands between them — Delta's analysis-time snapshot rule.
 * **Filter pushdown that reaches the LOG** — ``pushFilters`` collects
   per-column bounds and prunes whole files by the commit log's typed
-  per-file stats (``file_may_match``, the same decision every rewrite's
-  pruner makes) BEFORE any partition is planned: the scan never even
+  per-file stats (``TxLogTable._prune_files``, the pruner every rewrite
+  uses) BEFORE any partition is planned: the scan never even
   opens a file the log proves irrelevant. All filters are returned as
   unhandled so Spark still applies them exactly (prune-only contract —
   the same split Delta's data skipping uses). Numbers compare
@@ -58,8 +58,7 @@ from pyspark.sql.datasource import (
     IsNull, LessThan, LessThanOrEqual)
 
 from service_level_reporting_spark.sources.txlog import (
-    TxLogTable, _bloom_canon, _comparable, _stat_norm, add_rows,
-    bloom_may_contain, file_may_match)
+    TxLogTable, _bloom_canon, _comparable, _stat_norm, add_rows)
 
 CDF_COLS = (("_change_type", "string"), ("_commit_version", "bigint"))
 # r10 s2: withRowIds=true appends the stable identity columns (row
@@ -79,13 +78,14 @@ class _FilePart(InputPartition):
     rcv: int | None = None       # the add's default_rcv
 
 
-def _log_schema(t: TxLogTable, version: int, merge: bool):
+def _log_schema(t: TxLogTable, version: int, info: tuple, merge: bool):
     """Arrow snapshot schema from the COMMIT LOG's metaData actions (r8,
     VERDICT item 1): O(checkpoint interval) log reads instead of opening
     every live file's parquet footer on the driver at analysis time —
     at 10^5–10^6 live files the footer path is an O(n_files) storm per
     query analysis (Delta records schema in the log for the same
-    reason). Called only for a snapshot with live files, and every
+    reason). ``info`` is ``table_schema_info(version)``. Called only
+    for a table that has live files or has written, and every
     add-writing path (writes, convert, clone, restore) records the
     schema, so an unrecorded one is a corrupt log and raises. The
     pinned evolution contract: an additively-evolved table read without
@@ -94,7 +94,7 @@ def _log_schema(t: TxLogTable, version: int, merge: bool):
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructField, StructType
 
-    sch, evolved = t.table_schema_info(version)
+    sch, evolved = info
     if sch is None:
         raise ValueError(
             f"txlog source: snapshot {version} of {t.path} has live "
@@ -131,7 +131,8 @@ def _pin_snapshot(path: str, options) -> dict:
     # r9: a future log fails HERE, actionably — checked at the PINNED
     # snapshot (Delta's rule: a pre-upgrade version stays readable by a
     # reader that speaks its features; only commits <= the pin gate it)
-    t._check_protocol(ending if mode == "changes" else version)
+    pinned = ending if mode == "changes" else version
+    t._check_protocol(pinned)
     row_ids = str(options.get("withRowIds", "false")).lower() == "true"
     if mode == "changes":
         s = options.get("startingVersion", "-1")
@@ -147,23 +148,20 @@ def _pin_snapshot(path: str, options) -> dict:
                 "startingVersion at or after enable_row_tracking() — "
                 "bootstrap from a snapshot read (withRowIds=true), "
                 "then start the feed at its version.")
-        paths = sorted({q for _, adds, removes in t._change_files(
-            starting, ending) for q, *_ in adds + removes})
-        if not paths:           # empty range (e.g. stream from 'latest'):
-            paths = [a["path"] for a in t._resolve(version)]
-    else:
-        if row_ids and t.row_tracking(version) is None:
-            raise ValueError(
-                "txlog source: withRowIds requires row tracking — call "
-                "enable_row_tracking() first.")
-        paths = [a["path"] for a in t._resolve(version)]
-    if not paths:
+    elif row_ids and t.row_tracking(version) is None:
+        raise ValueError(
+            "txlog source: withRowIds requires row tracking — call "
+            "enable_row_tracking() first.")
+    info = t.table_schema_info(pinned)
+    # a snapshot needs live files; a change feed needs a table that has
+    # written (every add-writing commit records the schema), so an empty
+    # range of a written table is an empty feed, planned by partitions()
+    if (info[0] is None or mode != "changes") and not t._resolve(version):
         raise ValueError("txlog source: empty table (no snapshot)")
-    schema = _log_schema(t, ending if mode == "changes" else version,
-                         merge)
+    schema = _log_schema(t, pinned, info, merge)
     # r9 column mapping: executors project physical parquet names to the
     # pinned snapshot's logical schema; pruning translates its bounds
-    m = t.column_mapping(ending if mode == "changes" else version)
+    m = t.column_mapping(pinned)
     l2p = ({f["logical"]: f["physical"] for f in m["fields"]}
            if m is not None else None)
     return {"version": version, "ending": ending,
@@ -350,26 +348,22 @@ class TxLogBatchReader(DataSourceReader):
                                   self.row_ids)
         else:
             live = t._resolve(self.version)
-            # r9 column mapping: pushed-down bounds arrive LOGICAL-keyed,
-            # the adds' typed stats are PHYSICAL-keyed — translate once
+            # the rewrites' pruner (typed bounds, then the bloom point-key
+            # probe), translating logical bounds through the pinned
+            # version's column mapping
+            keep = t._prune_files(
+                live, {c: tuple(b) for c, b in self.bounds.items()},
+                self.bloom_probes, version=self.version)
+            # then the null-count prunes, on the stats' physical names
             l2p = self.mapping or {}
-            ranges = {l2p.get(c, c): tuple(b)
-                      for c, b in self.bounds.items()}
             not_null = {l2p.get(c, c) for c in self.not_null}
             null_only = {l2p.get(c, c) for c in self.null_only}
 
-            def overlaps(a: dict) -> bool:
-                bl = a.get("bloom")
-                if (bl and self.bloom_probes is not None
-                        and not bloom_may_contain(bl, self.bloom_probes)):
-                    return False      # point-key bloom prune (r7 s2)
+            def nulls_may_match(a: dict) -> bool:
                 st = a.get("stats")
-                if not st:
-                    return True
-                # typed per-column bounds (r7) — conjunctive, type-safe
-                if ranges and not file_may_match(a, ranges):
-                    return False
                 rows = a.get("rows")
+                if not st or not rows:
+                    return True
                 # The nulls==rows ("all-null") prune must compare the
                 # file's ORIGINAL footer null count against the ORIGINAL
                 # row count — but a merge-on-read delete decrements the
@@ -382,16 +376,16 @@ class TxLogBatchReader(DataSourceReader):
                 if not a.get("dv"):
                     for col in not_null:      # all-null file, IS NOT NULL
                         e = st.get(col)
-                        if (e and rows and e.get("nulls") is not None
+                        if (e and e.get("nulls") is not None
                                 and e["nulls"] == rows):
                             return False
                 for col in null_only:         # null-free file, IS NULL
                     e = st.get(col)
-                    if e and rows and e.get("nulls") == 0:
+                    if e and e.get("nulls") == 0:
                         return False
                 return True
 
-            keep = [a for a in live if overlaps(a)]
+            keep = [a for a in keep if nulls_may_match(a)]
             self.pruned_files = len(live) - len(keep)
             parts = [_FilePart(
                          os.path.join(t.path, a["path"]), None, None,

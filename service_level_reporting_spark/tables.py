@@ -27,6 +27,7 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region", "nation", "customer", "supplier", "part",
@@ -159,9 +160,10 @@ def fanout_small_input(df: DataFrame, target: int | None = None,
 
 
 def local_frame(spark: SparkSession, rows: list[tuple],
-                ddl: str) -> DataFrame:
+                ddl: str | StructType) -> DataFrame:
     """A small driver-built frame (lookup maps, merge tables) as a
-    JVM-local relation: ``rows`` are tuples in ``ddl`` column order.
+    JVM-local relation: ``rows`` are tuples in ``ddl`` column order
+    (a DDL string or a ``StructType``).
 
     ``spark.createDataFrame(<list>, ddl)`` parallelizes the pickled list,
     so every scan of the frame starts one Python worker task per slice —
@@ -173,7 +175,7 @@ def local_frame(spark: SparkSession, rows: list[tuple],
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
-    schema = DataType.fromDDL(ddl)
+    schema = DataType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(arrow)
     table = pa.Table.from_arrays(

@@ -5,7 +5,8 @@ the schema the log records at the range end, so at every start version
 the API feed and ``spark.read.format("txlog").option("mode", "changes")``
 give the same columns (those of ``read(to_version)``) and the same rows,
 with and without row ids. A file that omits a recorded column yields it
-as NULL, and building the feed runs no Spark job (no footer inference).
+as NULL, building the feed runs no Spark job (no footer inference), and
+one source read walks the commits once.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import functions as F
 
 from service_level_reporting_spark.sources.txlog import TxLogTable
 from service_level_reporting_spark.sources.txlog_datasource import (
-    TxLogDataSource)
+    TxLogBatchReader, TxLogDataSource, _pin_snapshot)
 
 
 @pytest.fixture()
@@ -146,3 +147,25 @@ def test_building_the_feed_runs_no_spark_job(spark, feed_table):
     finally:
         sc.setJobGroup(None, None)
     assert jobs == [], f"{len(jobs)} jobs"
+
+
+@pytest.mark.parametrize("empty", [False, True])
+def test_a_source_read_walks_the_commits_once(feed_table, monkeypatch,
+                                              empty):
+    """Pinning the snapshot reads log state only; planning the
+    partitions is the one ``_change_files`` walk, for a full range and
+    for an empty one alike."""
+    t, _ = feed_table
+    real, calls = TxLogTable._change_files, []
+
+    def counting(self, s, e):
+        calls.append((s, e))
+        return real(self, s, e)
+
+    monkeypatch.setattr(TxLogTable, "_change_files", counting)
+    start = t.latest_version() if empty else -1
+    opts = {"mode": "changes", "startingVersion": str(start)}
+    parts = TxLogBatchReader(t.path, opts,
+                             _pin_snapshot(t.path, opts)).partitions()
+    assert len(calls) == 1
+    assert bool(parts[0].path) != empty

@@ -5,8 +5,11 @@ is written) and derives the pruning bounds; one write lands the
 rewritten touched files together with the inserts; the clause counts
 ride that write as ``observe`` metrics, fresh per staging. Pinned here:
 ordered clause semantics and their counts, carried files, row ids, the
-duplicate-key refusal, an inserts-only merge, a rebase's counts, and the
-Spark job budget of one call on the benchmark's table shape.
+duplicate-key refusal, an inserts-only merge, a merge into a table with
+no commits, a rebase's counts, and the Spark job budget of one call on
+the benchmark's table shape. ``merge()`` is the upsert clause list over
+``merge_into``; the row-id, duplicate-key and empty-table cases run
+through both.
 """
 
 from __future__ import annotations
@@ -28,6 +31,14 @@ CLAUSES = [
     # not matched: the condition sees the source row's own columns
     ("insert", "tag <> 'skip'", None),
 ]
+UPSERT = [("update", None, {"v": "src_v", "tag": "src_tag"}),
+          ("insert", None, None)]
+
+
+def _upsert(t, source, how):
+    """The same upsert through ``merge`` or the ``merge_into`` clauses."""
+    return t.merge(source) if how == "merge" else t.merge_into(source,
+                                                               UPSERT)
 
 
 @pytest.fixture()
@@ -104,8 +115,9 @@ def test_cluster_by_table_counts_each_row_once(spark, table_path):
         10: (5, "b"), 12: (9, "b"), 5: (8, "new")}
 
 
+@pytest.mark.parametrize("how", ["merge", "merge_into"])
 def test_row_ids_carry_through_update_and_mint_for_insert(spark,
-                                                          table_path):
+                                                          table_path, how):
     t = _table(spark, table_path)
     t.enable_row_tracking()
 
@@ -114,24 +126,42 @@ def test_row_ids_carry_through_update_and_mint_for_insert(spark,
                 for r in t.read(spark, with_row_ids=True).collect()}
 
     before = ids()
-    r = t.merge_into(_source(spark, [(1, 500, "s"), (7, 1, "new")]),
-                     CLAUSES)
-    assert (r["updated"], r["inserted"]) == (1, 1)
+    r = _upsert(t, _source(spark, [(1, 500, "s"), (7, 1, "new")]), how)
     after = ids()
     assert after[1] == before[1]                 # updated: same identity
     assert after[3] == before[3]                 # rewritten, untouched
     assert after[7] is not None and after[7] not in before.values()
     assert len(set(after.values())) == len(after)
+    assert (r["updated"], r["inserted"]) == (1, 1)
 
 
-def test_duplicate_source_key_raises_before_any_write(spark, table_path):
+@pytest.mark.parametrize("how", ["merge", "merge_into"])
+def test_duplicate_source_key_raises_before_any_write(spark, table_path,
+                                                      how):
     t = _table(spark, table_path)
     v, dirs = t.latest_version(), _data_dirs(t)
     with pytest.raises(ValueError, match="multiple source rows share"):
-        t.merge_into(_source(spark, [(1, 500, "s"), (1, 600, "s")]),
-                     CLAUSES)
+        _upsert(t, _source(spark, [(1, 500, "s"), (1, 600, "s")]), how)
     assert t.latest_version() == v
     assert _data_dirs(t) == dirs
+
+
+@pytest.mark.parametrize("how", ["merge", "merge_into"])
+def test_upsert_into_table_with_no_commits(spark, table_path, how):
+    t = TxLogTable(table_path, key_cols=["k"], stats_col="k")
+    r = _upsert(t, _source(spark, [(1, 5, "a"), (2, 6, "b")]), how)
+    assert _rows(t, spark) == {1: (5, "a"), 2: (6, "b")}
+    assert r["version"] == 0 and r["rewritten_files"] == 0
+    assert (r["updated"], r["deleted"], r["inserted"]) == (0, 0, 2)
+
+
+def test_merge_names_a_column_set_difference(spark, table_path):
+    t = _table(spark, table_path)
+    v = t.latest_version()
+    with pytest.raises(ValueError, match=r"missing \['tag'\], "
+                                         r"unknown \['w'\]"):
+        t.merge(spark.createDataFrame([(1, 5, 6)], "k long, v long, w long"))
+    assert t.latest_version() == v
 
 
 def test_inserts_only_touch_no_file(spark, table_path):

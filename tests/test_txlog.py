@@ -280,11 +280,14 @@ def test_merge_logical_conflict_detection(spark, table_path):
     _Inject.rogue_actions, _Inject.injected = dup2_adds, False
     t2 = _Inject(table_path, key_cols=["indicator", "minute"],
                  stats_col="minute")
-    stats2 = t2.merge(_rollup(spark, "2024-01-02", "2024-01-03"))
+    jan2 = _rollup(spark, "2024-01-02", "2024-01-03")
+    stats2 = t2.merge(jan2)
     assert stats2["retries"] == 1 and stats2["rebases"] == 1
-    # the rebase consumed the duplicate file: every key appears once
-    got = t2.read(spark).groupBy("indicator", "minute").count()
-    assert got.where(F.col("count") > 1).count() == 0
+    # the rebase re-planned over the winner's file: both Jan-2 files
+    # rewrite and each key's two rows are updated in place (an upsert
+    # keeps every matched target row), none inserted again
+    assert stats2["rewritten_files"] == 2
+    assert (stats2["updated"], stats2["inserted"]) == (2 * jan2.count(), 0)
 
 
 def test_txn_map_rides_checkpoints(spark, table_path):
@@ -452,8 +455,9 @@ def test_concurrent_writers_serializability(spark, table_path):
       * after a deterministic tail pushes the log past CHECKPOINT_EVERY,
         checkpointed resolution equals full-log replay, and an aged-out
         vacuum leaves every retained snapshot readable.
-    Ops mix blind appends (multiset add), keyed merges (replace all rows
-    of the update's keys), optimize (content-preserving commit), and
+    Ops mix blind appends (multiset add), keyed merges (upserts: every
+    row of a source key takes the source value, an absent key is
+    inserted once), replace_where (replace all rows of the keys), optimize (content-preserving commit), and
     safe-mode vacuum against a Counter model. The r5 revision of this
     test caught the MERGE_MAX_RETRIES liveness bug (VersionConflict
     escaping merge() under 3 mergers); the deadline-bounded backoff +
@@ -583,7 +587,15 @@ def test_concurrent_writers_serializability(spark, table_path):
         model = Counter(seed)
         hist = {0: Counter(model)}
         for ver, _, _, kind, payload in sorted(committed):
-            if kind in ("merge", "replace"):
+            if kind == "merge":
+                new = dict(payload)
+                nm = Counter()
+                for (k, v), c in model.items():
+                    nm[(k, new.get(k, v))] += c
+                nm.update([(k, v) for k, v in payload
+                           if k not in {mk for mk, _ in model}])
+                model = nm
+            elif kind == "replace":
                 keys = {k for k, _ in payload}
                 for (k, v) in list(model):
                     if k in keys:

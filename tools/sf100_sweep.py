@@ -38,7 +38,7 @@ DUCK_CAP_SEC = 300.0
 
 def build_sf100(spark) -> None:
     """All tables the five headliners touch, at 100x sf0.1. The r5
-    events-only build (tools/sf100_probe.py) used a different marker;
+    events-only build (SCALE.md §2, decade 3) used a different marker;
     this build is a superset and re-stages events too."""
     import shutil
 

@@ -53,8 +53,8 @@ def main() -> None:
            "note": ("r11 VERDICT #1 evidence: interleaved pairs, fresh "
                     "plans per run, one process; candidate rewrites "
                     "(long-bucket key, packed counters, bitmap distinct, "
-                    "derived dedup total) measured in tools/agg_profile2 "
-                    "and rejected — see SCALE.md §8")}
+                    "derived dedup total) measured and rejected — see "
+                    "SCALE.md §2, round 11")}
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "BENCH_SF10.json"), "w") as fh:
         json.dump(out, fh, indent=1)
