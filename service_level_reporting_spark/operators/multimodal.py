@@ -3589,31 +3589,21 @@ def multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plus total_pairs, so all three modalities of the near-dup triplet
     # are scored per-round, not only API-level pytest.
     # r14 (guide §2.6): the three legs run EAGER collects at build time
-    # and share nothing — overlap them from a small driver pool (their
-    # jobs/plans are unchanged, only the submission is concurrent, so
-    # every collected value is identical to the serial run).
-    from concurrent.futures import ThreadPoolExecutor
+    # and share nothing — overlap them (their jobs/plans are unchanged,
+    # only the submission is concurrent, so every collected value is
+    # identical to the serial run).
+    from service_level_reporting_spark.legs import run_legs
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_ph = pool.submit(multimodal_phash_dedup, spark, sf_dir)
-        f_vd = pool.submit(multimodal_video_near_dup, spark, sf_dir)
-        f_ad = pool.submit(multimodal_audio_near_dup, spark, sf_dir)
-        phash, vdup, adup = f_ph.result(), f_vd.result(), f_ad.result()
-    phash = phash.select(
-        F.lit("phash_dedup").alias("stage"), F.col("key"),
-        F.col("n"), F.col("n2").alias("total_bytes"),
-        F.col("v").alias("metric"))
-    vdup = vdup.select(
-        F.lit("video_near_dup").alias("stage"), F.col("key"),
-        F.col("n"), F.col("n2").alias("total_bytes"),
-        F.col("v").alias("metric"))
-    adup = adup.select(
-        F.lit("audio_near_dup").alias("stage"), F.col("key"),
-        F.col("n"), F.col("n2").alias("total_bytes"),
-        F.col("v").alias("metric"))
-    out = (feats.unionByName(resized).unionByName(frames)
-           .unionByName(wav).unionByName(phash)
-           .unionByName(vdup).unionByName(adup))
+    near = run_legs({
+        "phash_dedup": lambda: multimodal_phash_dedup(spark, sf_dir),
+        "video_near_dup": lambda: multimodal_video_near_dup(spark, sf_dir),
+        "audio_near_dup": lambda: multimodal_audio_near_dup(spark, sf_dir)})
+    out = feats.unionByName(resized).unionByName(frames).unionByName(wav)
+    for stage, df in near.items():
+        out = out.unionByName(df.select(
+            F.lit(stage).alias("stage"), F.col("key"),
+            F.col("n"), F.col("n2").alias("total_bytes"),
+            F.col("v").alias("metric")))
     # r14 (ADVICE r13): the persisted asset table (raw BMP/WAV/AVI payload
     # bytes) used to outlive the query in a long-lived session. The suite
     # reduces to ~30 labeled rows — materialize them once (localCheckpoint

@@ -1230,21 +1230,15 @@ def _tomb_pointer(path: str) -> str:
 
 def _tomb_current_dir(path: str) -> str | None:
     """The tombstone directory the pointer currently names (relative to
-    the index root), None when the mask is empty. Legacy indexes (pre-r9,
-    no pointer file) fall back to the fixed ``tombstones/`` directory."""
+    the index root), None when the mask is empty."""
     import json
     import os
 
     ptr = _tomb_pointer(path)
-    if os.path.exists(ptr):
-        with open(ptr) as fh:
-            return json.load(fh).get("dir")
-    legacy = os.path.join(path, "tombstones")
-    if os.path.isdir(legacy) and any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(legacy) for f in fs):
-        return "tombstones"
-    return None
+    if not os.path.exists(ptr):
+        return None
+    with open(ptr) as fh:
+        return json.load(fh).get("dir")
 
 
 def _publish_tombstones(path: str, new_dir: str | None) -> None:
@@ -1275,7 +1269,7 @@ def _publish_tombstones(path: str, new_dir: str | None) -> None:
 
 def _read_tombstones(spark: SparkSession, path: str):
     """The index's pending (vec_id, centroid_id) tombstones, or None —
-    resolved through the atomic pointer (legacy fixed-dir fallback)."""
+    resolved through the atomic pointer."""
     import os
 
     d = _tomb_current_dir(path)
@@ -1697,9 +1691,9 @@ def similarity_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (kNN scan for the IVF legs, blocked-GEMM top-10 for LSH), so the
     driver artifact records the semantic quality number; pytest pins the
     floors on this column."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark import StorageLevel
+
+    from service_level_reporting_spark.legs import run_legs
 
     # r13 (guide §2.3): every leg's result is consumed TWICE (the labeled
     # rows + its recall frame) and the exact-kNN twin THREE times (ivf/pq/
@@ -1714,13 +1708,14 @@ def similarity_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # * ONE shared persisted corpus scan (`e_shared`) feeds the LSH legs
     #   and all three exact twins (before: five separate parquet scans+
     #   normalizations into the pandas-UDF scoring pipelines);
-    # * the pinned leg results are FILLED CONCURRENTLY from a driver pool
-    #   (the probes are independent jobs; the single final collect used to
+    # * the pinned leg results are FILLED CONCURRENTLY by run_legs (the
+    #   probes are independent jobs; the single final collect used to
     #   materialize them strictly one after another while 32 cores idled
     #   through each leg's tail). The IVF index build — the suite's
-    #   longest serial chain — starts first and the IVF/PQ probes follow
-    #   it inside the pool. Row values are unchanged: same leg plans, same
-    #   persisted results, only their materialization overlaps.
+    #   longest serial chain — starts first and fills the IVF/PQ probes
+    #   in parallel once it is built. Row values are unchanged: same leg
+    #   plans, same persisted results, only their materialization
+    #   overlaps.
     e_shared = _pin(_emb(spark, sf_dir))
     exact_knn = _pin(similarity_knn_query(spark, sf_dir, e_raw=e_shared)
                      .select("vec_id"))
@@ -1736,16 +1731,23 @@ def similarity_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         df.count()          # materializes every column of the pinned plan
         return df
 
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        f_idx = pool.submit(shared_ivf_index, spark, sf_dir)
-        fills = [pool.submit(_fill, df) for df in
-                 (exact_knn, exact_pairs, lsh_raw, mp_pin, exact_part)]
-        idx = f_idx.result()
-        ivf_raw = _pin(similarity_knn_ivf(spark, sf_dir, index=idx))
-        pq_raw = _pin(similarity_knn_ivf_pq(spark, sf_dir, index=idx))
-        fills += [pool.submit(_fill, ivf_raw), pool.submit(_fill, pq_raw)]
-        for f in fills:
-            f.result()
+    def _ivf_chain() -> dict:
+        idx = shared_ivf_index(spark, sf_dir)
+        return run_legs({
+            "ivf": lambda: _fill(_pin(
+                similarity_knn_ivf(spark, sf_dir, index=idx))),
+            "pq": lambda: _fill(_pin(
+                similarity_knn_ivf_pq(spark, sf_dir, index=idx)))})
+
+    ivf_pq = run_legs({
+        "ivf_index": _ivf_chain,
+        "exact_knn": lambda: _fill(exact_knn),
+        "exact_pairs": lambda: _fill(exact_pairs),
+        "lsh": lambda: _fill(lsh_raw),
+        "mp": lambda: _fill(mp_pin),
+        "exact": lambda: _fill(exact_part),
+    })["ivf_index"]
+    ivf_raw, pq_raw = ivf_pq["ivf"], ivf_pq["pq"]
     # every consumer below reads the (tiny) pinned leg results; the wide
     # shared scan has served its purpose — release it (VERDICT #9)
     e_shared.unpersist()

@@ -819,38 +819,46 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                    divergence across dedup PAIRS and cluster LABELS
                    (must be 0)."""
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
+    import uuid
 
+    from pyspark.sql.datasource import GreaterThanOrEqual
+
+    from service_level_reporting_spark.legs import run_legs
+    from service_level_reporting_spark.operators import dedup_state as _DS
+    from service_level_reporting_spark.operators import replicate as _RP
     from service_level_reporting_spark.sources.txlog import (
-        SchemaEvolutionError, TxLogTable)
+        GeneratedColumnViolation, ProtocolError, SchemaEvolutionError,
+        TxLogTable)
+    from service_level_reporting_spark.sources.txlog_catalog import (
+        refresh_table, register_table)
     from service_level_reporting_spark.sources.txlog_datasource import (
-        TxLogDataSource)
+        TxLogBatchReader, TxLogDataSource, TxLogStreamReader)
 
     root = _staging_dir(spark, sf_dir, "sink_txlog_rowops")
     shutil.rmtree(root, ignore_errors=True)
-    # registered up-front (not mid-chain) so pooled legs that read via
+    # registered up-front (not mid-chain) so legs that read via
     # spark.read.format('txlog') never race the registration
     spark.dataSource.register(TxLogDataSource)
 
-    # r13 (guide §2.6): six legs operate on their OWN side tables and
-    # depend on nothing in the main table's commit history — they run as
-    # futures while the main rowops chain proceeds on this thread. The
-    # main chain itself (appends → delete → update → CDF → restore →
-    # merge → dsrc/sql/colmap/retention/protocol/admission) is ORDER-
-    # DEPENDENT (reported version numbers ride in the rows) and stays
-    # strictly sequential. Each leg's values are unchanged.
+    # r13 (guide §2.6): the main chain (appends → delete → update → CDF →
+    # restore → merge → dsrc/sql/colmap/retention/protocol/admission) is
+    # ORDER-DEPENDENT (reported version numbers ride in the rows) and
+    # stays strictly sequential in one leg. Six more legs operate on their
+    # OWN side tables and depend on nothing in the main table's commit
+    # history, so all seven overlap. Each leg returns its output rows.
 
-    def _leg_widen() -> dict:
-        shutil.rmtree(root + "_widen", ignore_errors=True)
-        # per-leg finally (ADVICE r13): a failing leg must not leave its
-        # temp dir behind
+    def _scratch(suffix: str, leg) -> list:
+        """Run ``leg(dir)`` on a fresh ``root + suffix`` dir, removed
+        afterwards: a failing leg must not leave it behind (ADVICE r13)."""
+        d = root + suffix
+        shutil.rmtree(d, ignore_errors=True)
         try:
-            return _leg_widen_body()
+            return leg(d)
         finally:
-            shutil.rmtree(root + "_widen", ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
 
-    def _leg_widen_body() -> dict:
-        tw = TxLogTable(root + "_widen", key_cols=["k"], stats_col="k")
+    def _leg_widen(wd_root: str) -> list:
+        tw = TxLogTable(wd_root, key_cols=["k"], stats_col="k")
         tw.append(spark.createDataFrame([("a", 1), ("b", 2)],
                                         "k string, v int").coalesce(1))
         tw.enable_type_widening()
@@ -860,7 +868,7 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         want_w = spark.createDataFrame(
             [("a", 1), ("b", 2), ("c", 2 ** 40)], "k string, v long")
         got_w = tw.read(spark)
-        via_w = spark.read.format("txlog").load(root + "_widen")
+        via_w = spark.read.format("txlog").load(wd_root)
         widen_div = (got_w.exceptAll(want_w)
                      .unionAll(want_w.exceptAll(got_w)).count()
                      + via_w.exceptAll(want_w)
@@ -873,20 +881,12 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
             widen_refused = 0
         except SchemaEvolutionError:
             widen_refused = 1
-        return {"rows": got_w.count(), "ver": tw.latest_version(),
-                "div": widen_div, "refused": widen_refused}
+        return [("_widen", got_w.count(), tw.latest_version(),
+                 float(widen_div + (1 - widen_refused)))]
 
-    def _leg_rowtrack() -> dict:
+    def _leg_rowtrack(rt_root: str) -> list:
         # r10 row tracking: identity survives rewrites, allocation never
         # collides, update bumps the row's commit version
-        rt_root = root + "_rt"
-        shutil.rmtree(rt_root, ignore_errors=True)
-        try:
-            return _leg_rowtrack_body(rt_root)
-        finally:
-            shutil.rmtree(rt_root, ignore_errors=True)
-
-    def _leg_rowtrack_body(rt_root: str) -> dict:
         rt = TxLogTable(rt_root, key_cols=["k"], stats_col="k")
         rt.append(spark.createDataFrame(
             [(f"k{i:02d}", i) for i in range(40)],
@@ -901,30 +901,16 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         rt.update(F.col("k") == "k05", {"v": "v + 1000"})
         rt.optimize(target_files=1)
         rt1 = rt_ids()
-        return {
-            "changed": sum(1 for k in rt1 if rt1[k][0] != rt0[k][0]),
-            "dups": len(rt1) - len({i for i, _ in rt1.values()}),
-            "ver_ok": (rt1["k05"][1] > rt0["k05"][1]
-                       and all(rt1[k][1] == rt0[k][1]
-                               for k in rt1 if k != "k05"))}
+        ver_ok = (rt1["k05"][1] > rt0["k05"][1]
+                  and all(rt1[k][1] == rt0[k][1] for k in rt1 if k != "k05"))
+        return [("_rowtrack",
+                 sum(1 for k in rt1 if rt1[k][0] != rt0[k][0]),
+                 len(rt1) - len({i for i, _ in rt1.values()}),
+                 float(0 if ver_ok else 1))]
 
-    def _leg_generated() -> dict:
+    def _leg_generated(gc_root: str) -> list:
         # r10 s2 generated columns: compute on write, recompute through
         # rewrites, refuse wrong supplies
-        from service_level_reporting_spark.sources.txlog import (
-            GeneratedColumnViolation)
-
-        gc_root = root + "_gen"
-        shutil.rmtree(gc_root, ignore_errors=True)
-        try:
-            return _leg_generated_body(gc_root)
-        finally:
-            shutil.rmtree(gc_root, ignore_errors=True)
-
-    def _leg_generated_body(gc_root: str) -> dict:
-        from service_level_reporting_spark.sources.txlog import (
-            GeneratedColumnViolation)
-
         gt = TxLogTable(gc_root, key_cols=["k"], stats_col="k")
         gt.add_generated_column("day", "string",
                                 "date_format(minute, 'yyyy-MM-dd')")
@@ -946,108 +932,60 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
             gc_refused = 0
         except GeneratedColumnViolation:
             gc_refused = 1
-        return {"bad": gc_bad, "n": len(gt.generated_columns()),
-                "refused": gc_refused}
+        return [("_generated", gc_bad, len(gt.generated_columns()),
+                 float(1 - gc_refused))]
 
-    def _leg_replicate() -> dict:
+    def _leg_replicate(rp_root: str) -> list:
         # r10 keyless CDF replication: row ids as the merge key, on a
         # table whose rows include exact duplicates (unaddressable by
         # any natural-key merge)
-        from service_level_reporting_spark.operators import (
-            replicate as _RP)
-
-        rp_root = root + "_repl"
-        shutil.rmtree(rp_root, ignore_errors=True)
-        try:
-            return _leg_replicate_body(rp_root)
-        finally:
-            shutil.rmtree(rp_root, ignore_errors=True)
-
-    def _leg_replicate_body(rp_root: str) -> dict:
-        from service_level_reporting_spark.operators import (
-            replicate as _RP)
-
-        rs = TxLogTable(os.path.join(rp_root, "src"),
-                        key_cols=["k"], stats_col="k")
+        src, rep = os.path.join(rp_root, "src"), os.path.join(rp_root, "rep")
+        rs = TxLogTable(src, key_cols=["k"], stats_col="k")
         rs.append(spark.createDataFrame(
             [("dup", 0)] * 3 + [(f"k{i:02d}", i) for i in range(30)],
             "k string, v long").coalesce(2))
         rs.enable_row_tracking()
-        _RP.replicate_bootstrap(spark, os.path.join(rp_root, "src"),
-                                os.path.join(rp_root, "rep"))
+        _RP.replicate_bootstrap(spark, src, rep)
         rs.append(spark.createDataFrame([("k80", 80), ("dup", 0)],
                                         "k string, v long").coalesce(1))
         rs.update(F.col("k") == "k04", {"v": "v + 100"})
         rs.delete(F.col("k") == "k06", mode="mor")
-        fold = _RP.replicate_sync(spark, os.path.join(rp_root, "src"),
-                                  os.path.join(rp_root, "rep"))
+        fold = _RP.replicate_sync(spark, src, rep)
         rs.optimize(target_files=1)      # pure carry: zero feed rows
-        fold2 = _RP.replicate_sync(spark, os.path.join(rp_root, "src"),
-                                   os.path.join(rp_root, "rep"))
-        rp_div = (_RP.replica_divergence(
-            spark, os.path.join(rp_root, "src"),
-            os.path.join(rp_root, "rep"))
-            + fold2["upserted"] + fold2["deleted"])
-        return {"upserted": fold["upserted"], "deleted": fold["deleted"],
-                "div": rp_div}
+        fold2 = _RP.replicate_sync(spark, src, rep)
+        rp_div = (_RP.replica_divergence(spark, src, rep)
+                  + fold2["upserted"] + fold2["deleted"])
+        return [("_replicate", fold["upserted"], fold["deleted"],
+                 float(rp_div))]
 
-    def _leg_dedup_state() -> dict:
+    def _leg_dedup_state(ds_root: str) -> list:
         # r10 (VERDICT #3): incremental TEXT-dedup state — fold the
         # corpus change feed, compare decisions against a full rebuild
-        from service_level_reporting_spark.operators import (
-            dedup_state as _DS)
-
         docs = (load_tables(spark, sf_dir)["documents"]
                 .select("doc_id", "text").where(F.col("doc_id") < 120))
-        ds_root = root + "_dstate"
-        shutil.rmtree(ds_root, ignore_errors=True)
-        try:
-            return _leg_dedup_state_body(docs, ds_root)
-        finally:
-            shutil.rmtree(ds_root, ignore_errors=True)
-
-    def _leg_dedup_state_body(docs: DataFrame, ds_root: str) -> dict:
-        from service_level_reporting_spark.operators import (
-            dedup_state as _DS)
-
-        dc = TxLogTable(os.path.join(ds_root, "corpus"),
-                        key_cols=["doc_id"], stats_col="text")
+        corpus, folded, fresh = (os.path.join(ds_root, d)
+                                 for d in ("corpus", "folded", "fresh"))
+        dc = TxLogTable(corpus, key_cols=["doc_id"], stats_col="text")
         dc.append(docs.where(F.col("doc_id") % 3 != 0).coalesce(2))
-        _DS.build_dedup_state(spark, os.path.join(ds_root, "corpus"),
-                              os.path.join(ds_root, "folded"))
+        _DS.build_dedup_state(spark, corpus, folded)
         dc.append(docs.where(F.col("doc_id") % 3 == 0).coalesce(2))
         dc.delete(F.col("doc_id") % 10 == 1)
         delta_ins = docs.where((F.col("doc_id") % 3 == 0)
                                & (F.col("doc_id") % 10 != 1)).count()
-        ds_sync = _DS.dedup_state_sync(
-            spark, os.path.join(ds_root, "corpus"),
-            os.path.join(ds_root, "folded"))
-        _DS.build_dedup_state(spark, os.path.join(ds_root, "corpus"),
-                              os.path.join(ds_root, "fresh"))
-        pf = _DS.dedup_pairs_from_state(
-            spark, os.path.join(ds_root, "folded"))
-        pr = _DS.dedup_pairs_from_state(
-            spark, os.path.join(ds_root, "fresh"))
-        lf = _DS.dedup_labels_from_state(
-            spark, os.path.join(ds_root, "folded"))
-        lr = _DS.dedup_labels_from_state(
-            spark, os.path.join(ds_root, "fresh"))
+        ds_sync = _DS.dedup_state_sync(spark, corpus, folded)
+        _DS.build_dedup_state(spark, corpus, fresh)
+        pf = _DS.dedup_pairs_from_state(spark, folded)
+        pr = _DS.dedup_pairs_from_state(spark, fresh)
+        lf = _DS.dedup_labels_from_state(spark, folded)
+        lr = _DS.dedup_labels_from_state(spark, fresh)
         ds_div = (pf.exceptAll(pr).unionAll(pr.exceptAll(pf)).count()
                   + lf.exceptAll(lr).unionAll(lr.exceptAll(lf)).count())
-        return {"signed": ds_sync["signed"], "delta_ins": delta_ins,
-                "div": ds_div}
+        return [("_dedup_state", ds_sync["signed"], delta_ins,
+                 float(ds_div))]
 
-    def _leg_convert() -> dict:
+    def _leg_convert(cv_dir: str) -> list:
         # r12 (S37/S38): CONVERT TO TXLOG + DEEP CLONE, in-frame
-        cv_root = root + "_convert"
-        shutil.rmtree(cv_root, ignore_errors=True)
-        try:
-            return _leg_convert_body(cv_root)
-        finally:
-            shutil.rmtree(cv_root + "_deep", ignore_errors=True)
-            shutil.rmtree(cv_root, ignore_errors=True)
-
-    def _leg_convert_body(cv_root: str) -> dict:
+        cv_root = os.path.join(cv_dir, "plain")
         (spark.createDataFrame([(f"c{i:02d}", i) for i in range(20)],
                                "k string, v long")
          .coalesce(2).write.parquet(cv_root))
@@ -1061,25 +999,15 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                    | {("c05", 500)})
         # deep clone of the converted table: zero foreign references,
         # read parity with the source snapshot
-        dcl = ct.clone(cv_root + "_deep", deep=True)
+        dcl = ct.clone(os.path.join(cv_dir, "deep"), deep=True)
         dcl_refs = dcl.verify_references()
         dcl_set = {(r["k"], r["v"]) for r in dcl.read(spark).collect()}
-        return {"n": len(cv_before), "deep_files": dcl_refs["checked"],
-                "div": (len(cv_after ^ cv_want) + len(dcl_set ^ cv_after)
-                        + dcl_refs["foreign"]
-                        + len(dcl_refs["missing_data"]))}
+        return [("_convert", len(cv_before), dcl_refs["checked"],
+                 float(len(cv_after ^ cv_want) + len(dcl_set ^ cv_after)
+                       + dcl_refs["foreign"]
+                       + len(dcl_refs["missing_data"])))]
 
-    # r14: 6 workers — the six side legs are tiny-job/commit-protocol
-    # bound, not CPU bound; with 4 workers two legs idled behind the pool
-    pool = ThreadPoolExecutor(max_workers=6)
-    side = {name: pool.submit(fn) for name, fn in (
-        ("widen", _leg_widen), ("rowtrack", _leg_rowtrack),
-        ("generated", _leg_generated), ("replicate", _leg_replicate),
-        ("dedup_state", _leg_dedup_state), ("convert", _leg_convert))}
-    # if any step of the main chain raises, the finally below still joins
-    # the side-leg threads instead of leaking non-daemon workers
-    try:
-
+    def _leg_main() -> list:
         t = TxLogTable(root, key_cols=["indicator", "minute"],
                        stats_col="minute")
         ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -1157,15 +1085,12 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                        .unionAll(mi_want.exceptAll(mi_got)).count())
 
         # the table as a first-class Spark source: snapshot equality via the
-        # registered format (registered up-front), log-level pushdown pruning,
-        # CDF through the source
-        from service_level_reporting_spark.sources.txlog_datasource import (
-            TxLogBatchReader)
+        # registered format (registered up-front), log-level pushdown
+        # pruning, CDF through the source
         via_src = spark.read.format("txlog").load(root)
         direct = t.read(spark)
         src_diverged = (via_src.exceptAll(direct)
                         .unionAll(direct.exceptAll(via_src)).count())
-        from pyspark.sql.datasource import GreaterThanOrEqual
         probe = TxLogBatchReader(root, {"path": root})
         list(probe.pushFilters([GreaterThanOrEqual(
             ("minute",), datetime.datetime(2024, 1, 3))]))
@@ -1174,22 +1099,19 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .option("startingVersion", str(v_from))
                         .option("endingVersion", str(v_to)).load(root)
                         .count())
-        cdf_rows_direct = n_ins + n_del
 
         # ---- r11 SQL/catalog surface (VERDICT #3): plain spark.sql over
         # registered txlog views — two lakehouse tables joined in SQL must
         # match the Python-API join row-for-row, and a VERSION-AS-OF view
-        # must match read(version=...) ---------------------------------------
-        from service_level_reporting_spark.sources.txlog_catalog import (
-            register_table)
+        # must match read(version=...) -------------------------------------
         shutil.rmtree(root + "_sqlclone", ignore_errors=True)
         t.clone(root + "_sqlclone")
         # view names salted per invocation (ADVICE r13): temp views are
-        # session-global, and this leg runs inside the sink_suite pool — a
-        # fixed name would silently race any future leg using the same one
-        # (_run_to_table already salts its memory-sink names the same way)
-        import uuid as _uuid
-        _salt = _uuid.uuid4().hex[:8]
+        # session-global, and this leg runs beside sink_suite's other legs
+        # — a fixed name would silently race any future leg using the same
+        # one (_run_to_table already salts its memory-sink names the same
+        # way)
+        _salt = uuid.uuid4().hex[:8]
         v_a, v_b, v_asof = (f"txsql_a_{_salt}", f"txsql_b_{_salt}",
                             f"txsql_asof_{_salt}")
         register_table(spark, v_a, root)
@@ -1214,8 +1136,6 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12 (VERDICT #4): a long-lived SQL consumer must NOT see a
         # concurrent writer's commit through its pinned view, and MUST see
         # it after refresh_table — verified on the self-contained clone.
-        from service_level_reporting_spark.sources.txlog_catalog import (
-            refresh_table)
         tb = TxLogTable.open(root + "_sqlclone")
         n_pin = spark.sql(f"SELECT count(*) c FROM {v_b}").collect()[0]["c"]
         tb.append(tb.read(spark).limit(1).localCheckpoint(eager=True))
@@ -1231,11 +1151,7 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root + "_sqlclone", ignore_errors=True)
 
         # ---- r9 legs: column mapping / log retention / protocol gate /
-        # streaming admission control, each verified in-frame ----------------
-        from service_level_reporting_spark.sources.txlog import ProtocolError
-        from service_level_reporting_spark.sources.txlog_datasource import (
-            TxLogStreamReader)
-
+        # streaming admission control, each verified in-frame -------------
         pre_map = t.read(spark).localCheckpoint(eager=True)
         files_before = {a["path"] for a in t._resolve()}
         t.enable_column_mapping()
@@ -1278,45 +1194,40 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
             steps += 1
         want_steps = -(-(head + 1) // 2)
 
-        wd = side["widen"].result()
-        rt = side["rowtrack"].result()
-        gc = side["generated"].result()
-        rp = side["replicate"].result()
-        ds = side["dedup_state"].result()
-        cv = side["convert"].result()
-    finally:
-        pool.shutdown(wait=True)
+        return [
+            ("_sql", sql_n, py_n, float(sql_div + asof_div + refresh_div)),
+            ("_colmap", map_div + rewrote, t.latest_version(),
+             float(map_src_div)),
+            ("_retention", vac["removed_log_files"], t.earliest_version(),
+             float(vac_div)),
+            ("_protocol", proto["minReaderVersion"],
+             proto["minWriterVersion"], float(1 - proto_refused)),
+            ("_admission", steps, want_steps, float(steps - want_steps)),
+            ("_dsrc", src_diverged, probe.pruned_files,
+             float(src_cdf_rows - (n_ins + n_del))),
+            ("_delete", d["rewritten_files"], d["carried_files"],
+             float(d["matched_rows"])),
+            ("_update", u["rewritten_files"], u["carried_files"],
+             float(u["matched_rows"])),
+            ("_cdf", n_ins, n_del, float(mismatches)),
+            ("_restore", diverged, t.latest_version(), None),
+            ("_merge_into", mi["updated"], mi["inserted"],
+             float(mi_diverged)),
+            ("_history", len(hist), len({h["op"] for h in hist}),
+             float(sum(h["rows_added"] for h in hist
+                       if h["op"] == "append")))]
 
+    legs = run_legs({
+        "main": _leg_main,
+        "widen": lambda: _scratch("_widen", _leg_widen),
+        "rowtrack": lambda: _scratch("_rt", _leg_rowtrack),
+        "generated": lambda: _scratch("_gen", _leg_generated),
+        "replicate": lambda: _scratch("_repl", _leg_replicate),
+        "dedup_state": lambda: _scratch("_dstate", _leg_dedup_state),
+        "convert": lambda: _scratch("_convert", _leg_convert),
+    })
     return spark.createDataFrame(
-        [("_convert", cv["n"], cv["deep_files"], float(cv["div"])),
-         ("_sql", sql_n, py_n, float(sql_div + asof_div + refresh_div)),
-         ("_widen", wd["rows"], wd["ver"],
-          float(wd["div"] + (1 - wd["refused"]))),
-         ("_colmap", map_div + rewrote, t.latest_version(),
-          float(map_src_div)),
-         ("_retention", vac["removed_log_files"], t.earliest_version(),
-          float(vac_div)),
-         ("_protocol", proto["minReaderVersion"],
-          proto["minWriterVersion"], float(1 - proto_refused)),
-         ("_admission", steps, want_steps, float(steps - want_steps)),
-         ("_rowtrack", rt["changed"], rt["dups"],
-          float(0 if rt["ver_ok"] else 1)),
-         ("_generated", gc["bad"], gc["n"], float(1 - gc["refused"])),
-         ("_replicate", rp["upserted"], rp["deleted"], float(rp["div"])),
-         ("_dedup_state", ds["signed"], ds["delta_ins"],
-          float(ds["div"])),
-         ("_dsrc", src_diverged, probe.pruned_files,
-          float(src_cdf_rows - cdf_rows_direct)),
-         ("_delete", d["rewritten_files"], d["carried_files"],
-          float(d["matched_rows"])),
-         ("_update", u["rewritten_files"], u["carried_files"],
-          float(u["matched_rows"])),
-         ("_cdf", n_ins, n_del, float(mismatches)),
-         ("_restore", diverged, t.latest_version(), None),
-         ("_merge_into", mi["updated"], mi["inserted"],
-          float(mi_diverged)),
-         ("_history", len(hist), len({h["op"] for h in hist}),
-          float(sum(h["rows_added"] for h in hist if h["op"] == "append")))],
+        [row for rows in legs.values() for row in rows],
         "key string, n long, n2 long, v double")
 
 
@@ -1377,9 +1288,9 @@ def sink_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cannot leak into a concurrently-writing leg. Their few result rows
     # are collected off the isolated session and rebuilt on the caller's
     # session (frames from different sessions must not be unioned).
-    # Invariant at each leg's definition site: pooled legs must not set
-    # MAIN-session conf — conf-mutating legs get an isolated session here.
-    from concurrent.futures import ThreadPoolExecutor
+    # Invariant at each leg's definition site: overlapped legs must not
+    # set MAIN-session conf — conf-mutating legs get an isolated session.
+    from service_level_reporting_spark.legs import run_legs
 
     def _part(tag: str, df: DataFrame, cols=None) -> DataFrame:
         return df.select(F.lit(tag).alias("part"),
@@ -1443,9 +1354,7 @@ def sink_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster": _isolated("cluster", clustered_layout_stats),
         "compact": _isolated("compact", compact_small_files),
     }
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        futs = {name: pool.submit(fn) for name, fn in pooled.items()}
-        results = {name: f.result() for name, f in futs.items()}
+    results = run_legs(pooled)
 
     order = ("upsert_merge", "bucketed_groupby", "incremental",
              "hll_incremental", "compact", "cluster", "formats", "codecs",

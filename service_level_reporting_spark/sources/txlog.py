@@ -271,8 +271,8 @@ class _Outcome(NamedTuple):
 def _session() -> SparkSession:
     """The active session, falling back to the process-wide default:
     getActiveSession() is THREAD-LOCAL and returns None inside worker
-    threads (the r7 concurrency property caught delete() failing under
-    ThreadPoolExecutor); builder.getOrCreate() resolves the existing
+    threads (the r7 concurrency property caught delete() failing on a
+    pool thread); builder.getOrCreate() resolves the existing
     default session without creating a new one."""
     return SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
 

@@ -112,8 +112,8 @@ def _log_schema(t: TxLogTable, version: int, info: tuple, merge: bool):
 
 def _pin_snapshot(path: str, options) -> dict:
     """Resolve one read's snapshot: pinned version (latest at analysis
-    time unless given), changes-range end, the arrow target schema over
-    exactly that snapshot's files, and its column mapping."""
+    time unless given), changes-range start and end, the arrow target
+    schema over exactly that snapshot's files, and its column mapping."""
     t = TxLogTable.open(path)
     mode = options.get("mode", "")
     merge = str(options.get("mergeSchema", "false")).lower() == "true"
@@ -134,6 +134,7 @@ def _pin_snapshot(path: str, options) -> dict:
     pinned = ending if mode == "changes" else version
     t._check_protocol(pinned)
     row_ids = str(options.get("withRowIds", "false")).lower() == "true"
+    starting = -1
     if mode == "changes":
         s = options.get("startingVersion", "-1")
         starting = t.latest_version() if s == "latest" else int(s)
@@ -164,7 +165,7 @@ def _pin_snapshot(path: str, options) -> dict:
     m = t.column_mapping(pinned)
     l2p = ({f["logical"]: f["physical"] for f in m["fields"]}
            if m is not None else None)
-    return {"version": version, "ending": ending,
+    return {"version": version, "starting": starting, "ending": ending,
             "schema": schema, "mapping": l2p,
             "row_ids": row_ids}
 
@@ -266,12 +267,13 @@ class TxLogBatchReader(DataSourceReader):
     def __init__(self, path: str, options, pin: dict | None = None):
         self.table_path = path
         self.mode = options.get("mode", "snapshot")
-        self.starting = int(options.get("startingVersion", -1))
         if pin is None:                 # direct construction (tests)
             pin = _pin_snapshot(path, options)
-        # analysis-time pin (r7): version/ending resolved ONCE in the
-        # DataSource so schema inference and partition planning agree
+        # analysis-time pin (r7): the version and the change range are
+        # resolved ONCE in the DataSource so schema inference and
+        # partition planning agree
         self.version = pin["version"]
+        self.starting = pin["starting"]
         self.ending = pin["ending"]
         self.target_schema = pin["schema"]        # arrow, padded to on read
         self.mapping = pin.get("mapping")         # logical->physical (r9)

@@ -478,8 +478,7 @@ def stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     atomic transactional batch markers, replayed batch skipped).
     Batch-equivalence per leg is pytest-pinned in
     tests/test_streaming_batch_equiv.py."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    from service_level_reporting_spark.legs import run_legs
     from service_level_reporting_spark.streaming.ann_index import (
         stream_lsh_index_summary)
     from service_level_reporting_spark.streaming.txlog_sink import (
@@ -488,14 +487,15 @@ def stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.6): the ten legs are INDEPENDENT availableNow queries
     # that used to run strictly back-to-back — each one blocks on
     # awaitTermination while most cores idle through its micro-batch tail.
-    # A driver pool overlaps them. Two shared-state hazards handled:
+    # run_legs overlaps them. Two shared-state hazards handled:
     # * the normalized file-source staging dir is written ONCE serially
-    #   before the pool (its mtime-marker check is not rename-atomic);
+    #   before the legs (its mtime-marker check is not rename-atomic);
     # * _run_to_table pins spark.sql.shuffle.partitions per leg with a
-    #   set/restore — racy in a pool — so the suite pins the SAME value
-    #   for the whole pooled phase; every leg's inner set/restore then
-    #   writes that identical value (idempotent), and the caller's conf
-    #   is restored once at the end. Leg outputs are unchanged.
+    #   set/restore — racy across threads — so the suite pins the SAME
+    #   value for the whole overlapped phase; every leg's inner
+    #   set/restore then writes that identical value (idempotent), and
+    #   the caller's conf is restored once at the end. Leg outputs are
+    #   unchanged.
     _staged_dir(spark, sf_dir)
     _staged_chunks_dir(spark, sf_dir)   # shared by three legs — stage once
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -550,13 +550,7 @@ def stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("key"), F.lit(None), F.col("n"),
                 F.col("n2").cast("double")),
         }
-        # r14: 6 workers — each availableNow leg spends most of its wall in
-        # micro-batch scheduling/await, not compute; with 4 workers the ten
-        # legs ran in ~3 waves (measured, plans/r14): the extra overlap
-        # shaves a wave without fighting for cores
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            futs = {k: pool.submit(fn) for k, fn in legs.items()}
-            res = {k: f.result() for k, f in futs.items()}
+        res = run_legs(legs)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     comp = res["stateful_compliance"]

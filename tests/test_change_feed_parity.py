@@ -5,8 +5,9 @@ the schema the log records at the range end, so at every start version
 the API feed and ``spark.read.format("txlog").option("mode", "changes")``
 give the same columns (those of ``read(to_version)``) and the same rows,
 with and without row ids. A file that omits a recorded column yields it
-as NULL, building the feed runs no Spark job (no footer inference), and
-one source read walks the commits once.
+as NULL, building the feed runs no Spark job (no footer inference),
+one source read walks the commits once, and a batch read from
+``startingVersion=latest`` is an empty feed.
 """
 
 from __future__ import annotations
@@ -169,3 +170,13 @@ def test_a_source_read_walks_the_commits_once(feed_table, monkeypatch,
                              _pin_snapshot(t.path, opts)).partitions()
     assert len(calls) == 1
     assert bool(parts[0].path) != empty
+
+
+def test_batch_feed_from_latest_is_empty(spark, feed_table):
+    """``startingVersion=latest`` on a batch read is the empty range
+    after the head, with the change-feed columns."""
+    t, _ = feed_table
+    feed = _source(spark, t.path, "latest")
+    assert feed.columns == t.read(spark).columns + [
+        "_change_type", "_commit_version"]
+    assert feed.count() == 0
