@@ -19,9 +19,10 @@ the ones the crash interrupted — nothing double-folds, nothing is lost
   state+stamp atomically. A replayed fold sees ``maxv <= applied`` and
   skips — the same exactly-once shape as the streaming matview.
 - The DEDUP stage is dedup_state.dedup_state_sync (VERDICT #3): its
-  own `_sync.json` watermark; the state MERGE is idempotent (re-upsert
-  of identical signatures, re-delete of absent keys), so a crash
-  between merge and watermark replays safely.
+  own watermark through `txlog.read_sync`/`write_sync`; the state fold
+  is idempotent (re-mask and re-append of identical signatures,
+  converging by doc_id), so a crash between fold and watermark replays
+  safely.
 - VERDICTS and PACKED SEQUENCES are deterministic VIEWS of the folded
   states — no third state to keep consistent. A doc is kept iff it is
   its duplicate-cluster's canonical representative (min doc_id label
@@ -48,7 +49,8 @@ from service_level_reporting_spark.operators import dedup_state as DS
 from service_level_reporting_spark.operators.quality import (
     quality_apply_changes, quality_partials, quality_report_from_state)
 from service_level_reporting_spark.registry import register
-from service_level_reporting_spark.sources.txlog import TxLogTable
+from service_level_reporting_spark.sources.txlog import (
+    TxLogTable, read_sync)
 
 MIN_TOKENS = 3          # verdict: shorter docs are dropped as too_short
 PACK_BUDGET = 64        # tokens per packed training sequence
@@ -91,11 +93,8 @@ def quality_sync(spark: SparkSession, corpus_path: str, work: str) -> dict:
     else:
         new = quality_partials(_q_frame(t.read(spark)))
         mode = "init"
-    stamped = new.withColumn("__applied_ver", F.lit(cur).cast("long"))
-    if st.latest_version() >= 0:
-        st.overwrite(stamped.localCheckpoint(eager=True))
-    else:
-        st.append(stamped.coalesce(1))
+    st.overwrite(new.withColumn("__applied_ver", F.lit(cur).cast("long"))
+                 .coalesce(1))
     return {"mode": mode, "version": cur}
 
 
@@ -106,10 +105,12 @@ def pipeline_sync(spark: SparkSession, corpus_path: str,
     point between (or inside) stages."""
     q = quality_sync(spark, corpus_path, work)
     dstate = os.path.join(work, "dedup_state")
-    if os.path.exists(DS._sync_path(dstate)):
-        d = DS.dedup_state_sync(spark, corpus_path, dstate)
-    else:
+    try:
+        read_sync(dstate)
+    except FileNotFoundError:
         d = DS.build_dedup_state(spark, corpus_path, dstate)
+    else:
+        d = DS.dedup_state_sync(spark, corpus_path, dstate)
     return {"quality": q, "dedup": d}
 
 
@@ -175,13 +176,10 @@ def batch_recompute(spark: SparkSession, corpus_path: str,
     t = TxLogTable.open(corpus_path)
     DS.build_dedup_state(spark, corpus_path,
                          os.path.join(work_fresh, "dedup_state"))
-    st = _q_state_table(work_fresh)
-    stamped = quality_partials(_q_frame(t.read(spark))).withColumn(
-        "__applied_ver", F.lit(t.latest_version()).cast("long"))
-    if st.latest_version() >= 0:
-        st.overwrite(stamped.localCheckpoint(eager=True))
-    else:
-        st.append(stamped.coalesce(1))
+    _q_state_table(work_fresh).overwrite(
+        quality_partials(_q_frame(t.read(spark))).withColumn(
+            "__applied_ver", F.lit(t.latest_version()).cast("long"))
+        .coalesce(1))
     return {"version": t.latest_version()}
 
 

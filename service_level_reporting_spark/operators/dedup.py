@@ -469,6 +469,35 @@ def dedup_near_dup_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 CC_MAX_ROUNDS = 20
 
 
+def propagate_min_labels(labels: DataFrame, edges: DataFrame) -> DataFrame:
+    """The min-label fixpoint: ``labels`` (doc_id, label) seeded with each
+    doc's own id, ``edges`` (a, b) listing both directions of every edge
+    (checkpointed by the caller — it is reused every round). Returns
+    (doc_id, label) with each doc labeled by the minimum id reachable,
+    after at most CC_MAX_ROUNDS rounds."""
+    for _ in range(CC_MAX_ROUNDS):
+        neighbor = (
+            edges.join(labels, edges["b"] == labels["doc_id"])
+            .select(F.col("a").alias("doc_id"), "label")
+        )
+        new_labels = (
+            labels.unionByName(neighbor)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)  # cut lineage per round
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "doc_id")
+            .where(F.col("n.label") != F.col("o.label"))
+            .limit(1).count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels
+
+
 # The labels fixpoint as reusable CTEs (dedup_clusters here and
 # curation.dedup_canonical build different reports over the same labels).
 LABELS_CTES_SQL = f"""
@@ -551,27 +580,8 @@ def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)  # edge list reused every round
     )
-    labels = d.select("doc_id", F.col("doc_id").alias("label"))
-    for _ in range(CC_MAX_ROUNDS):
-        neighbor = (
-            edges.join(labels, edges["b"] == labels["doc_id"])
-            .select(F.col("a").alias("doc_id"), "label")
-        )
-        new_labels = (
-            labels.unionByName(neighbor)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)  # cut lineage per round
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
+    labels = propagate_min_labels(
+        d.select("doc_id", F.col("doc_id").alias("label")), edges)
     if os.path.isdir(sf_dir):
         _LABELS_MEMO[memo_key] = labels
     return labels

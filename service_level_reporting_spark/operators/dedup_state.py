@@ -16,20 +16,19 @@ eats its own lakehouse) keyed by doc_id:
                          exact dedup only)
 
 - ``build_dedup_state`` scans the corpus snapshot once and records the
-  folded-through corpus version in ``<state>/_sync.json`` (the same
-  watermark shape the ANN index uses).
+  folded-through corpus version with ``txlog.write_sync`` (the same
+  watermark the ANN index and the row-id replica use).
 - ``dedup_state_sync`` reads the corpus CHANGE FEED since the watermark
-  (net=True), computes signatures for the DELTA ONLY, and applies one
-  atomic MERGE INTO (upserts for inserts/updates, deletes for removed
-  docs). Cost is O(delta): no corpus rescan, no state rescan beyond the
-  merge's key-range pruning.
+  (net=True), computes signatures for the DELTA ONLY, and applies them
+  in one atomic merge-on-read commit (a DV mask of every changed doc
+  plus the delta's signatures). Cost is O(delta): no corpus rescan, no
+  state rescan beyond the mask's key-range pruning.
 - ``dedup_pairs_from_state`` / ``dedup_labels_from_state`` are pure
   functions of the state: exact pairs join on ``h``; near-dup candidates
   come from the band-bucket equi-join (never all-pairs) verified by the
   signature-estimated Jaccard (matching minhash fraction >= the shared
-  JACCARD_THRESHOLD); labels are iterative min-label propagation over
-  the union of both edge sets (the same distributed-CC shape as
-  dedup.cluster_labels, lineage cut per round).
+  JACCARD_THRESHOLD); labels are dedup.propagate_min_labels over the
+  union of both edge sets (the fixpoint dedup.cluster_labels runs).
 
 fold == rebuild holds EXACTLY: signatures are deterministic functions
 of text, so an incrementally-folded state equals the from-scratch state
@@ -49,20 +48,16 @@ dedup_ngram_jaccard uses.
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from service_level_reporting_spark.operators.dedup import (
-    JACCARD_THRESHOLD, _shingle_index)
-from service_level_reporting_spark.sources.txlog import TxLogTable
+    JACCARD_THRESHOLD, _shingle_index, propagate_min_labels)
+from service_level_reporting_spark.sources.txlog import (
+    TxLogTable, read_sync, write_sync)
 
 MH_K = 32          # minhash functions
 MH_BANDS = 8       # LSH bands (width MH_K / MH_BANDS = 4)
-CC_MAX_ROUNDS = 20
 
 
 def _sig_schema_frame(spark: SparkSession) -> DataFrame:
@@ -93,22 +88,6 @@ def signatures(docs: DataFrame) -> DataFrame:
                     F.when(has, bands).alias("bands")))
 
 
-def _sync_path(state_path: str) -> str:
-    return os.path.join(state_path, "_sync.json")
-
-
-def _read_sync(state_path: str) -> dict:
-    with open(_sync_path(state_path)) as fh:
-        return json.load(fh)
-
-
-def _write_sync(state_path: str, meta: dict) -> None:
-    tmp = _sync_path(state_path) + f".tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _sync_path(state_path))   # atomic pointer flip
-
-
 def _open_state(state_path: str) -> TxLogTable:
     return TxLogTable(state_path, key_cols=["doc_id"], stats_col="h")
 
@@ -126,36 +105,29 @@ def build_dedup_state(spark: SparkSession, corpus_path: str,
     # per-file key pruning (delete_keys' r11 keys_refine). Clustered,
     # a delta that touches head+tail masks 2 files, not 32.
     sigs = signatures(snap).repartitionByRange(F.col("doc_id"))
-    st = _open_state(state_path)
     n = sigs.count()
-    if st.latest_version() >= 0:
-        st.overwrite(sigs)
-    else:
-        st.append(sigs)
-    _write_sync(state_path, {"version": cur})
+    _open_state(state_path).overwrite(sigs)
+    write_sync(state_path, {"version": cur})
     return {"mode": "rebuild", "version": cur, "signed": n}
 
 
 def dedup_state_sync(spark: SparkSession, corpus_path: str,
-                     state_path: str, mor: bool = True) -> dict:
+                     state_path: str) -> dict:
     """Fold the corpus change feed since the watermark into the state —
     O(delta): signatures for changed docs only, applied in ONE atomic
     state commit. Idempotent: a second call at the same corpus version
     is a no-op; a replayed fold after a crash re-masks and re-appends
     the same signatures (converging by doc_id).
 
-    ``mor=True`` (default, r11 — the BENCH_DEDUP_SYNC finding): the
-    fold is ``delete_keys(changed_ids, append_df=new_sigs)`` — a DV
-    mask of every changed doc plus the delta's signature file in one
-    commit, write volume O(delta) regardless of where the changed ids
-    sit. The previous MERGE INTO fold is copy-on-write: a delta
-    touching head+tail of the id space prunes nothing and rewrites the
-    WHOLE state (measured at 50k docs / 2.5% delta: merge fold wrote
-    the same bytes as a full rebuild and took 2.4x longer).
-    ``mor=False`` keeps the single-commit MERGE INTO for deltas that
-    are tightly id-clustered AND rewrite-tolerant."""
+    The fold is ``delete_keys(changed_ids, append_df=new_sigs)`` (r11 —
+    the BENCH_DEDUP_SYNC finding): a DV mask of every changed doc plus
+    the delta's signature file in one commit, write volume O(delta)
+    regardless of where the changed ids sit. A copy-on-write MERGE INTO
+    fold of a delta touching head+tail of the id space prunes nothing
+    and rewrites the WHOLE state (measured at 50k docs / 2.5% delta: it
+    wrote the same bytes as a full rebuild and took 2.4x longer)."""
     t = TxLogTable.open(corpus_path)
-    meta = _read_sync(state_path)
+    meta = read_sync(state_path)
     last, cur = int(meta["version"]), t.latest_version()
     if cur <= last:
         return {"mode": "noop", "version": last, "signed": 0,
@@ -173,28 +145,11 @@ def dedup_state_sync(spark: SparkSession, corpus_path: str,
     pure_dels = (dels.join(sigs.select("doc_id"), "doc_id", "left_anti")
                  .localCheckpoint(eager=True))
     n_del = pure_dels.count()
-    st = _open_state(state_path)
-    if mor:
-        changed = (sigs.select("doc_id")
-                   .unionByName(pure_dels).distinct())
-        if n_ins or n_del:
-            st.delete_keys(changed, append_df=sigs if n_ins else None)
-        _write_sync(state_path, {"version": cur})
-        return {"mode": "fold", "version": cur, "signed": n_ins,
-                "deleted": n_del}
-    src = sigs.withColumn("op", F.lit("upsert")).unionByName(
-        pure_dels.select(
-            "doc_id", F.lit(None).cast("string").alias("h"),
-            F.lit(None).cast("array<bigint>").alias("mh"),
-            F.lit(None).cast("array<bigint>").alias("bands"),
-            F.lit("delete").alias("op")))
-    if src.limit(1).count():
-        st.merge_into(src, [
-            ("delete", "src_op = 'delete'", None),
-            ("update", "src_op = 'upsert'",
-             {"h": "src_h", "mh": "src_mh", "bands": "src_bands"}),
-            ("insert", "op = 'upsert'", None)])
-    _write_sync(state_path, {"version": cur})
+    if n_ins or n_del:
+        changed = sigs.select("doc_id").unionByName(pure_dels).distinct()
+        _open_state(state_path).delete_keys(
+            changed, append_df=sigs if n_ins else None)
+    write_sync(state_path, {"version": cur})
     return {"mode": "fold", "version": cur, "signed": n_ins,
             "deleted": n_del}
 
@@ -251,10 +206,9 @@ def dedup_pairs_from_state(spark: SparkSession,
 
 def dedup_labels_from_state(spark: SparkSession,
                             state_path: str) -> DataFrame:
-    """(doc_id, label) — connected components over exact ∪ near edges:
-    iterative min-label propagation, one equi-join + combiner-friendly
-    min-groupBy per round, lineage cut per round (the dedup.py CC shape;
-    near-dup components are shallow, rounds stay single digits)."""
+    """(doc_id, label) — connected components over exact ∪ near edges,
+    by dedup.propagate_min_labels (near-dup components are shallow,
+    rounds stay single digits)."""
     s = _open_state(state_path).read(spark)
     pairs = dedup_pairs_from_state(spark, state_path)
     edges = (pairs.select(F.col("doc_a").alias("a"),
@@ -262,24 +216,5 @@ def dedup_labels_from_state(spark: SparkSession,
              .unionByName(pairs.select(F.col("doc_b").alias("a"),
                                        F.col("doc_a").alias("b")))
              .distinct().localCheckpoint(eager=True))
-    labels = s.select("doc_id", F.col("doc_id").alias("label")) \
-        .localCheckpoint(eager=True)
-    for _ in range(CC_MAX_ROUNDS):
-        nbr = (edges.join(labels.withColumnRenamed("doc_id", "b")
-                          .withColumnRenamed("label", "nl"), "b")
-               .groupBy("a").agg(F.min("nl").alias("nl"))
-               .withColumnRenamed("a", "doc_id"))
-        new = (labels.join(nbr, "doc_id", "left")
-               .select("doc_id",
-                       F.least("label", F.coalesce("nl", "label"))
-                       .alias("label"))
-               .localCheckpoint(eager=True))
-        changed = (new.alias("n")
-                   .join(labels.withColumnRenamed("label", "old"),
-                         "doc_id")
-                   .where(F.col("label") != F.col("old"))
-                   .limit(1).count())
-        if changed == 0:
-            return new
-        labels = new
-    return labels
+    return propagate_min_labels(
+        s.select("doc_id", F.col("doc_id").alias("label")), edges)

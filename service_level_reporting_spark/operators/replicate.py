@@ -13,13 +13,11 @@ primary-key contract with the producer, no full-table diff:
 - ``replicate_sync`` folds ``changes(net=True, with_row_ids=True)``
   since the watermark: an id seen on the insert side upserts (an
   UPDATE arrives as delete+insert of the same id — the insert wins),
-  an id seen only on the delete side deletes. The default fold is
-  MERGE-ON-READ (``delete_keys`` DV-mask + post-image append — write
-  volume O(delta) regardless of id scatter); ``mor=False`` keeps a
-  single-commit atomic MERGE INTO for range-clustered deltas. Cost is
-  O(delta) plus key-stats pruning on the replica — never a source or
-  replica rescan (the scattered case pays one replica semi-join pass,
-  no writes beyond the delta).
+  an id seen only on the delete side deletes. The fold is MERGE-ON-READ
+  (``delete_keys`` DV-mask + post-image append — write volume O(delta)
+  regardless of id scatter). Cost is O(delta) plus key-stats pruning on
+  the replica — never a source or replica rescan (the scattered case
+  pays one replica semi-join pass, no writes beyond the delta).
 - ``replica_divergence`` is the verification contract: multiset diff
   between the id-bearing source snapshot and the replica, 0 after any
   op mix (appends, CoW/MoR delete/update, merge_into, OPTIMIZE,
@@ -31,7 +29,7 @@ carried pairs, but applying it without a key can only ever be
 append/delete of whole rows — an update of one cell on a keyless table
 is unaddressable. The row id is the address.
 
-Watermark shape: ``<replica>/_sync.json`` (atomic os.replace pointer),
+Watermark: ``txlog.read_sync``/``write_sync`` over the replica dir,
 the same contract dedup_state and the ANN index sync use. Idempotent:
 a second sync at the same source version is a no-op; a replayed sync
 after a crash re-merges the same rows onto the same keys (upserts and
@@ -49,33 +47,14 @@ rather than guessing — bootstrap after enabling tracking.
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from service_level_reporting_spark.sources.txlog import TxLogTable
+from service_level_reporting_spark.sources.txlog import (
+    TxLogTable, read_sync, write_sync)
 
 ID_COL = "_src_row_id"
 RCV_COL = "_src_rcv"
-
-
-def _sync_path(replica_path: str) -> str:
-    return os.path.join(replica_path, "_sync.json")
-
-
-def _read_sync(replica_path: str) -> dict:
-    with open(_sync_path(replica_path)) as fh:
-        return json.load(fh)
-
-
-def _write_sync(replica_path: str, meta: dict) -> None:
-    tmp = _sync_path(replica_path) + f".tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _sync_path(replica_path))   # atomic pointer flip
 
 
 def _open_replica(replica_path: str) -> TxLogTable:
@@ -94,23 +73,19 @@ def replicate_bootstrap(spark: SparkSession, source_path: str,
     t = TxLogTable.open(source_path)
     cur = t.latest_version()
     snap = _as_replica_rows(t.read(spark, with_row_ids=True))
-    r = _open_replica(replica_path)
     n = snap.count()
-    if r.latest_version() >= 0:
-        r.overwrite(snap)
-    else:
-        r.append(snap)
-    _write_sync(replica_path, {"version": cur})
+    _open_replica(replica_path).overwrite(snap)
+    write_sync(replica_path, {"version": cur})
     return {"mode": "bootstrap", "version": cur, "rows": n}
 
 
 def replicate_sync(spark: SparkSession, source_path: str,
-                   replica_path: str, mor: bool = True) -> dict:
+                   replica_path: str) -> dict:
     """Fold the source's net change feed since the watermark into the
     replica — O(delta).
 
-    ``mor=True`` (default) applies the fold MERGE-ON-READ in ONE atomic
-    commit: ``delete_keys(ids, append_df=post_images)`` DV-masks every
+    The fold is MERGE-ON-READ in ONE atomic commit:
+    ``delete_keys(ids, append_df=post_images)`` DV-masks every
     changed id (the keys FRAME semi-joins executor-side — no driver
     collect, no isin literal; a small sidecar write, matched rows never
     move) and lands the post-images in the SAME commit — readers see
@@ -124,11 +99,9 @@ def replicate_sync(spark: SparkSession, source_path: str,
     fold's write volume is O(delta) regardless of scatter; DVs accrete
     between syncs and ``optimize_bin_pack`` purges them like any MoR
     table. A replayed sync after a crash re-masks and re-appends the
-    same images — converging by id, never double-folding. ``mor=False``
-    keeps the single-commit atomic MERGE INTO for range-clustered
-    deltas."""
+    same images — converging by id, never double-folding."""
     t = TxLogTable.open(source_path)
-    meta = _read_sync(replica_path)
+    meta = read_sync(replica_path)
     last, cur = int(meta["version"]), t.latest_version()
     if cur <= last:
         return {"mode": "noop", "version": last, "upserted": 0,
@@ -151,33 +124,15 @@ def replicate_sync(spark: SparkSession, source_path: str,
     # an UPDATE is delete+insert of the SAME id in the net feed — the
     # insert side wins (upsert); ids with no insert are true removals
     pure_dels = dels.join(ins.select(ID_COL), ID_COL, "left_anti")
-    r = _open_replica(replica_path)
-    if mor:
-        images = (ins.select(ID_COL, RCV_COL, *data_cols)
-                  .localCheckpoint(eager=True))
-        n_up = images.count()
-        n_del = pure_dels.count()
-        d = r.delete_keys(ch.select(ID_COL).distinct(),
-                          append_df=images if n_up else None)
-        _write_sync(replica_path, {"version": cur})
-        return {"mode": "fold", "version": cur, "upserted": n_up,
-                "deleted": n_del, "masked": d.get("matched_rows", 0)}
-    src = (ins.select(ID_COL, RCV_COL, *data_cols)
-           .withColumn("op", F.lit("upsert"))
-           .unionByName(pure_dels.withColumn("op", F.lit("delete")),
-                        allowMissingColumns=True)
-           .localCheckpoint(eager=True))
-    n_up = src.where(F.col("op") == "upsert").count()
-    n_del = src.where(F.col("op") == "delete").count()
-    if n_up or n_del:
-        assigns = {c: f"src_{c}" for c in data_cols + [RCV_COL]}
-        r.merge_into(src, [
-            ("delete", "src_op = 'delete'", None),
-            ("update", "src_op = 'upsert'", assigns),
-            ("insert", "op = 'upsert'", None)])
-    _write_sync(replica_path, {"version": cur})
+    images = (ins.select(ID_COL, RCV_COL, *data_cols)
+              .localCheckpoint(eager=True))
+    n_up = images.count()
+    n_del = pure_dels.count()
+    d = _open_replica(replica_path).delete_keys(
+        ch.select(ID_COL).distinct(), append_df=images if n_up else None)
+    write_sync(replica_path, {"version": cur})
     return {"mode": "fold", "version": cur, "upserted": n_up,
-            "deleted": n_del}
+            "deleted": n_del, "masked": d.get("matched_rows", 0)}
 
 
 def replica_divergence(spark: SparkSession, source_path: str,

@@ -1244,23 +1244,20 @@ def _tomb_current_dir(path: str) -> str | None:
 def _publish_tombstones(path: str, new_dir: str | None) -> None:
     """Atomically flip the index's tombstone pointer (r9, ADVICE): the
     sidecar is written under a fresh versioned directory and readers
-    resolve it through ``_tombstones.json``, published with a single
-    ``os.replace`` — a concurrent ``load_ivf_index`` sees either the old
+    resolve it through ``_tombstones.json``, published by one atomic
+    ``txlog._publish_json`` — a concurrent ``load_ivf_index`` sees either the old
     complete mask or the new one, never a half-swapped directory, and a
     crash mid-publish leaves the old pointer (and its mask) intact
     instead of orphaning the pending deletes. Superseded directories are
     reclaimed best-effort AFTER the flip (a reader that resolved the old
     pointer just before the flip may race the cleanup — that read fails
     loudly and retries; it can never silently serve deleted rows)."""
-    import json
     import os
     import shutil
-    import uuid
 
-    tmp = _tomb_pointer(path) + f".tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"dir": new_dir}, fh)
-    os.replace(tmp, _tomb_pointer(path))
+    from service_level_reporting_spark.sources.txlog import _publish_json
+
+    _publish_json(_tomb_pointer(path), {"dir": new_dir})
     for name in os.listdir(path):
         if (name.startswith("tombstones") and name != new_dir
                 and os.path.isdir(os.path.join(path, name))):
@@ -1276,30 +1273,6 @@ def _read_tombstones(spark: SparkSession, path: str):
     if d is None:
         return None
     return spark.read.parquet(os.path.join(path, d))
-
-
-def _ivf_sync_path(path: str) -> str:
-    import os
-
-    return os.path.join(path, "_sync.json")
-
-
-def _read_sync(path: str) -> dict:
-    import json
-
-    with open(_ivf_sync_path(path)) as fh:
-        return json.load(fh)
-
-
-def _write_sync(path: str, meta: dict) -> None:
-    import json
-    import os
-    import uuid
-
-    tmp = _ivf_sync_path(path) + f".tmp.{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, _ivf_sync_path(path))
 
 
 def _psi(p_counts: dict, q_counts: dict) -> float:
@@ -1327,11 +1300,13 @@ def build_ivf_index(spark: SparkSession, emb_raw: DataFrame, path: str,
     any (vec_id, label, embedding) frame — e.g. a txlog snapshot instead
     of a static sf_dir). Additionally records <path>/stats (the trained
     per-centroid occupancy, the PSI gate's reference distribution) and
-    <path>/_sync.json (the folded-through table version plus the RUNNING
-    occupancy counts, updated by each fold without rescanning the
-    index)."""
+    its txlog.write_sync watermark (the folded-through table version
+    plus the RUNNING occupancy counts, updated by each fold without
+    rescanning the index)."""
     import os
     import shutil
+
+    from service_level_reporting_spark.sources.txlog import write_sync
 
     if os.path.isdir(path):     # a rebuild voids any pending delete mask
         _publish_tombstones(path, None)
@@ -1370,9 +1345,9 @@ def build_ivf_index(spark: SparkSession, emb_raw: DataFrame, path: str,
         sorted((int(c), n_) for c, n_ in counts.items()),
         "centroid_id int, n long",
     ).coalesce(1).write.mode("overwrite").parquet(path + "/stats")
-    _write_sync(path, {"version": int(version), "counts": counts,
-                       "k": int(coarse.shape[0]),
-                       "pq_k": int(books.shape[1]), "n": int(n)})
+    write_sync(path, {"version": int(version), "counts": counts,
+                      "k": int(coarse.shape[0]),
+                      "pq_k": int(books.shape[1]), "n": int(n)})
     return {"k": int(coarse.shape[0]), "pq_k": int(books.shape[1]),
             "n": int(n)}
 
@@ -1540,10 +1515,11 @@ def ivf_index_sync(spark: SparkSession, table_path: str, index_path: str,
     snapshot (the rare, gated event — the same trigger discipline
     quality.py's PSI drift monitor uses). Idempotent: a second call at
     the same table version is a no-op."""
-    from service_level_reporting_spark.sources.txlog import TxLogTable
+    from service_level_reporting_spark.sources.txlog import (
+        TxLogTable, read_sync, write_sync)
 
     t = TxLogTable.open(table_path)
-    meta = _read_sync(index_path)
+    meta = read_sync(index_path)
     last, cur = int(meta["version"]), t.latest_version()
     if cur <= last:
         return {"mode": "noop", "version": last, "psi": 0.0}
@@ -1559,7 +1535,7 @@ def ivf_index_sync(spark: SparkSession, table_path: str, index_path: str,
                 "inserted": res["inserted"], "deleted": res["deleted"],
                 **built}
     meta.update({"version": cur, "counts": res["counts"]})
-    _write_sync(index_path, meta)
+    write_sync(index_path, meta)
     return {"mode": "fold", "version": cur, "psi": psi,
             "inserted": res["inserted"], "deleted": res["deleted"],
             "tombstones": res["tombstones"],

@@ -835,7 +835,6 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
         TxLogBatchReader, TxLogDataSource, TxLogStreamReader)
 
     root = _staging_dir(spark, sf_dir, "sink_txlog_rowops")
-    shutil.rmtree(root, ignore_errors=True)
     # registered up-front (not mid-chain) so legs that read via
     # spark.read.format('txlog') never race the registration
     spark.dataSource.register(TxLogDataSource)
@@ -847,9 +846,10 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # OWN side tables and depend on nothing in the main table's commit
     # history, so all seven overlap. Each leg returns its output rows.
 
-    def _scratch(suffix: str, leg) -> list:
+    def _scratch(suffix: str, leg):
         """Run ``leg(dir)`` on a fresh ``root + suffix`` dir, removed
-        afterwards: a failing leg must not leave it behind (ADVICE r13)."""
+        afterwards: a failing leg must not leave it behind (ADVICE r13).
+        The main chain runs on ``root`` itself (suffix "")."""
         d = root + suffix
         shutil.rmtree(d, ignore_errors=True)
         try:
@@ -1173,16 +1173,19 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .unionAll(pre_vac.exceptAll(post_vac)).count())
 
         proto = t.table_protocol()
-        shutil.rmtree(root + "_proto", ignore_errors=True)
-        c_pr = t.clone(root + "_proto")
-        c_pr.commit([{"protocol": {"minReaderVersion": 99,
-                                   "minWriterVersion": 99}}],
-                    c_pr.latest_version() + 1, op="upgrade_protocol")
-        try:
-            c_pr.read(spark)
-            proto_refused = 0
-        except ProtocolError:
-            proto_refused = 1
+
+        def _refused(pr_root: str) -> int:
+            c_pr = t.clone(pr_root)
+            c_pr.commit([{"protocol": {"minReaderVersion": 99,
+                                       "minWriterVersion": 99}}],
+                        c_pr.latest_version() + 1, op="upgrade_protocol")
+            try:
+                c_pr.read(spark)
+                return 0
+            except ProtocolError:
+                return 1
+
+        proto_refused = _scratch("_proto", _refused)
 
         rdr = TxLogStreamReader(root, {"startingVersion": "-1",
                                        "maxCommitsPerTrigger": "2"})
@@ -1218,7 +1221,7 @@ def sink_txlog_rowops(spark: SparkSession, sf_dir: str) -> DataFrame:
                        if h["op"] == "append")))]
 
     legs = run_legs({
-        "main": _leg_main,
+        "main": lambda: _scratch("", lambda _root: _leg_main()),
         "widen": lambda: _scratch("_widen", _leg_widen),
         "rowtrack": lambda: _scratch("_rt", _leg_rowtrack),
         "generated": lambda: _scratch("_gen", _leg_generated),

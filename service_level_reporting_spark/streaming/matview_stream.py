@@ -57,16 +57,15 @@ def stream_matview(spark: SparkSession, table_path: str, spec: dict,
     source's admission control — a maintenance pass bootstrapping
     against a deep base backlog folds bounded pieces with checkpoint
     progress after each, instead of one monolithic batch that must
-    succeed or replay wholesale. Spark's availableNow wrapper targets
-    the FIRST capped offset per pass (see the stream reader's measured
-    caveat), so the capped form loops passes until the state watermark
-    catches the head seen at entry — same checkpoint, so each pass
-    resumes where the previous stopped, and a crash between passes loses
-    nothing."""
+    succeed or replay wholesale. The pass drains through
+    ``txlog_datasource.drain_available``, which loops capped
+    availableNow passes on the same checkpoint until its committed
+    offset reaches the head seen at entry (progress is the committed
+    offset, so a window of metadata-only commits that folds no rows
+    does not stall it), and a crash between passes loses nothing."""
     from service_level_reporting_spark.sources.txlog_datasource import (
-        TxLogDataSource)
+        drain_available)
 
-    spark.dataSource.register(TxLogDataSource)
     base = TxLogTable.open(table_path)
     keys = list(spec["keys"])
     st = TxLogTable(state_path, key_cols=keys, stats_col=keys[0])
@@ -90,40 +89,12 @@ def stream_matview(spark: SparkSession, table_path: str, spec: dict,
                                  F.lit(maxv).cast("long")))
         st.overwrite(new_state.localCheckpoint(eager=True))
 
-    def one_pass():
-        reader = (spark.readStream.format("txlog")
-                  .option("mode", "changes").option("startingVersion", "-1"))
-        if max_commits_per_trigger:
-            reader = reader.option("maxCommitsPerTrigger",
-                                   str(max_commits_per_trigger))
-        q = (reader.load(table_path)
-             .writeStream.foreachBatch(fold)
-             .option("checkpointLocation", checkpoint_dir)
-             .trigger(availableNow=True).start())
-        try:
-            q.awaitTermination(timeout_sec)
-        finally:
-            q.stop()
-
-    # r10 (ADVICE): progress is the CHECKPOINT's committed offset — it
-    # advances even when a capped window contains only metadata-only
-    # commits and the batch folds zero rows (the state watermark
-    # __applied_ver does not), so data commits beyond such a window
-    # still drain. committed_offset/drain semantics are shared with the
-    # public txlog_datasource.drain_available helper (VERDICT #5).
-    from service_level_reporting_spark.sources.txlog_datasource import (
-        committed_offset)
-
-    head0 = base.latest_version()
-    prev_off = committed_offset(checkpoint_dir)
-    while True:
-        one_pass()
-        if not max_commits_per_trigger:
-            return st
-        off = committed_offset(checkpoint_dir)
-        if off >= head0 or off <= prev_off:
-            return st
-        prev_off = off
+    drain_available(spark, table_path, checkpoint_dir,
+                    lambda df: df.writeStream.foreachBatch(fold),
+                    mode="changes",
+                    max_commits_per_trigger=max_commits_per_trigger,
+                    timeout_sec=timeout_sec)
+    return st
 
 
 def read_view(spark: SparkSession, st: TxLogTable, spec: dict):

@@ -238,7 +238,7 @@ def test_replicate_mor_fold_is_single_commit(spark, table_path):
         s.update(F.col("k") == "b", {"v": "20"})
         s.append(_df(spark, [("d", 4)]))
         s.delete(F.col("k") == "a")
-        out = replicate_sync(spark, src_path, rep_path, mor=True)
+        out = replicate_sync(spark, src_path, rep_path)
         assert out["mode"] == "fold"
         # the whole fold (mask + post-images) is ONE replica commit
         assert r.latest_version() == v_before + 1

@@ -19,9 +19,9 @@ pytestmark = __import__('pytest').mark.slow
 from pyspark.sql import functions as F
 
 from service_level_reporting_spark.operators.replicate import (
-    replica_divergence, replicate_bootstrap, replicate_sync, _read_sync,
-    _write_sync)
-from service_level_reporting_spark.sources.txlog import TxLogTable
+    replica_divergence, replicate_bootstrap, replicate_sync)
+from service_level_reporting_spark.sources.txlog import (
+    TxLogTable, read_sync, write_sync)
 
 
 @pytest.fixture()
@@ -101,10 +101,10 @@ def test_replay_after_crash_is_exactly_once(spark, paths):
     replicate_bootstrap(spark, src_path, rep_path)
     t.update(F.col("k") == "k1", {"v": "v + 10"})
     t.delete(F.col("k") == "k2")
-    before = _read_sync(rep_path)
+    before = read_sync(rep_path)
     replicate_sync(spark, src_path, rep_path)
     # crash: watermark regresses, the merge's effect stays
-    _write_sync(rep_path, before)
+    write_sync(rep_path, before)
     out = replicate_sync(spark, src_path, rep_path)
     assert out["mode"] == "fold"          # it DID re-fold the window
     assert replica_divergence(spark, src_path, rep_path) == 0
@@ -125,7 +125,7 @@ def test_unaddressable_rows_refused(spark, paths):
     # backfilled file but not its insert, so a NULL-id row survives
     # netting (a full-history feed would cancel it away)
     replicate_bootstrap(spark, src_path, rep_path)
-    _write_sync(rep_path, {"version": v0})
+    write_sync(rep_path, {"version": v0})
     with pytest.raises(ValueError, match="unaddressable"):
         replicate_sync(spark, src_path, rep_path)
     # re-seed: back in business
